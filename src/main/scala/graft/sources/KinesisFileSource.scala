@@ -42,9 +42,25 @@ import org.apache.spark.unsafe.types.UTF8String
   *    so a backlog drains as a sequence of bounded micro-batches.
   *
   * Scale honesty: a PRODUCTION connector maps one shard to one remote
-  * byte-stream; this fixture reader scans every file and filters to
-  * its shard (read amplification O(shards × bytes)) and sorts one
-  * shard's backlog in memory — acceptable for fixtures, stated here so
+  * byte-stream; this fixture source reads files. A published envelope
+  * file MUST be immutable, the contract Spark's `FileStreamSource` also
+  * assumes: a producer writes it under a name the source does not list
+  * (one not ending in `.txt`) and renames it into place, as
+  * [[KinesisFixture.writeEnvelopeFixture]] does. The stream keeps an
+  * [[KinesisFileSource.EnvelopeIndex]] (per file: shard → sorted
+  * sequence numbers), keyed by path, size and mtime, so a file
+  * rewritten in place is still re-read when its size or mtime changes.
+  * `latestOffset`, `reportLatestOffset` and `planInputPartitions` each
+  * cost one directory listing plus the parse of files that are new or
+  * changed since the previous call: an idle poll parses nothing, and a
+  * trigger's admission work is O(new records), not O(history). The
+  * index costs driver memory of 8 B per indexed record; `commit` drops
+  * the sequence numbers at or below the committed offsets (keeping each
+  * file's last one per shard), so it holds the uncommitted backlog plus
+  * O(files × shards), not the whole history. Each shard slice carries
+  * only the files that hold records of its range, and its reader parses
+  * those whole files (read amplification O(file size / slice size)) and
+  * sorts the slice in memory — acceptable for fixtures, stated here so
   * nobody mistakes the file-IO path for the scale design. The DSv2
   * surface above it (offsets, per-shard partitions, restart, rate
   * limit) IS the scale design.
@@ -95,30 +111,113 @@ object KinesisFileSource {
         .filter(_.nonEmpty).map(parseLine)
     }
 
+  /** Index of the first element of sorted `a` greater than `v`. */
+  private def firstAbove(a: Array[Long], v: Long): Int = {
+    var lo = 0; var hi = a.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (a(mid) > v) hi = mid else lo = mid + 1
+    }
+    lo
+  }
+
+  /** One envelope file's sequence numbers per shard, ascending, as of
+    * the file's `size` and `mtime` when it was parsed. */
+  final case class FileIndex(path: String, size: Long, mtime: Long,
+      seqs: Map[String, Array[Long]]) {
+    /** Whether the file holds a record of `shard` with from < seq <= to. */
+    def holds(shard: String, from: Long, to: Long): Boolean =
+      seqs.get(shard).exists { a =>
+        val i = firstAbove(a, from); i < a.length && a(i) <= to }
+  }
+
+  private def indexFile(f: java.io.File): FileIndex = {
+    // size and mtime first: a file replaced during the parse then
+    // mismatches at the next refresh and is parsed again
+    val (size, mtime) = (f.length, f.lastModified)
+    val by = scala.collection.mutable.Map.empty[String,
+      scala.collection.mutable.ArrayBuilder.ofLong]
+    readAll(Seq(f.getPath)).foreach(r => by.getOrElseUpdate(r.shard,
+      new scala.collection.mutable.ArrayBuilder.ofLong) += r.seq)
+    FileIndex(f.getPath, size, mtime, by.map { case (shard, b) =>
+      val a = b.result(); java.util.Arrays.sort(a); shard -> a }.toMap)
+  }
+
+  /** The [[FileIndex]]es of a stream directory, cached by path, size and
+    * mtime. [[refresh]] lists the directory, parses only files that are
+    * new or whose size or mtime changed, and drops files that are gone,
+    * so a poll with no new data parses nothing. Sound because published
+    * envelope files are immutable (see the provider's scaladoc); a
+    * rewrite in place is still caught when it changes size or mtime. */
+  final class EnvelopeIndex(dir: String) {
+    private var byPath = Map.empty[String, FileIndex]
+    private val parsed = new java.util.concurrent.atomic.AtomicLong()
+
+    /** Files parsed since this index was created. */
+    def filesParsed: Long = parsed.get
+
+    def refresh(): Seq[FileIndex] = synchronized {
+      val now = listFiles(dir).map { p =>
+        val f = new java.io.File(p)
+        byPath.get(p).filter(e => e.size == f.length && e.mtime == f.lastModified)
+          .getOrElse { parsed.incrementAndGet(); indexFile(f) }
+      }
+      byPath = now.map(e => e.path -> e).toMap
+      now
+    }
+
+    /** Drops, per file and shard, the sequence numbers at or below
+      * `committed`, except the file's last one for the shard (the tip
+      * [[availableOffsets]] reports). Admission and slices only ask
+      * for records above the committed offsets, so nothing dropped is
+      * asked for again. Entries are replaced, never mutated, so an
+      * index a caller already holds stays intact. */
+    def trim(committed: Map[String, Long]): Unit = synchronized {
+      byPath = byPath.map { case (p, e) =>
+        p -> e.copy(seqs = e.seqs.map { case (shard, a) =>
+          val i = committed.get(shard).fold(0)(c => math.min(firstAbove(a, c), a.length - 1))
+          shard -> (if (i == 0) a else java.util.Arrays.copyOfRange(a, i, a.length))
+        })
+      }
+    }
+  }
+
   /** Highest sequence number present per shard — the "tip" of each
     * shard, i.e. what `latestOffset` reports before rate capping. */
-  def availableOffsets(dir: String): Map[String, Long] =
-    readAll(listFiles(dir)).foldLeft(Map.empty[String, Long]) { (m, r) =>
-      m.updated(r.shard, math.max(m.getOrElse(r.shard, Long.MinValue), r.seq))
-    }
+  def availableOffsets(index: Seq[FileIndex]): Map[String, Long] =
+    index.flatMap(_.seqs.map { case (shard, a) => shard -> a.last })
+      .groupMapReduce(_._1)(_._2)(math.max)
 
   /** Per-shard end offsets advancing at most `maxPerShard` RECORDS past
     * `base` — admission control by record count (the `get_records`
     * Limit semantic), not sequence arithmetic: shard-local sequence
     * numbers are sparse (e.g. a global id sharded by partition key),
     * so `base + N` would be wrong in both directions. A shard with
-    * nothing new keeps its base offset. */
-  def cappedOffsets(dir: String, base: Map[String, Long],
+    * nothing new keeps its base offset. Cost O(new records): each file
+    * contributes only the tail of its sorted sequence numbers. */
+  def cappedOffsets(index: Seq[FileIndex], base: Map[String, Long],
       maxPerShard: Long): Map[String, Long] =
-    readAll(listFiles(dir)).toSeq.groupBy(_.shard).map { case (shard, rs) =>
+    index.flatMap(_.seqs.keys).distinct.map { shard =>
       val from = base.getOrElse(shard, Long.MinValue)
-      val newSeqs = rs.iterator.map(_.seq).filter(_ > from).toArray.sorted
+      val newSeqs = index.flatMap(_.seqs.get(shard))
+        .flatMap(a => a.view.drop(firstAbove(a, from))).toArray.sorted
       val end =
         if (newSeqs.isEmpty) from
         else if (maxPerShard >= newSeqs.length) newSeqs.last
         else newSeqs(maxPerShard.toInt - 1)
       shard -> end
-    }.filter(_._2 != Long.MinValue)
+    }.toMap.filter(_._2 != Long.MinValue)
+
+  /** One slice per shard with records in `(start, end]`, each carrying
+    * only the files that hold records of its range. */
+  def slices(index: Seq[FileIndex], start: Map[String, Long],
+      end: Map[String, Long]): Array[InputPartition] =
+    end.toSeq.sortBy(_._1).flatMap { case (shard, to) =>
+      val from = start.getOrElse(shard, Long.MinValue)
+      if (to > from) Some(ShardSlicePartition(shard,
+        index.filter(_.holds(shard, from, to)).map(_.path), from, to))
+      else None
+    }.toArray
 }
 
 /** Offset = per-shard highest consumed sequence number. Case class so
@@ -160,21 +259,28 @@ class KinesisFileScan(dir: String, maxPerShard: Long) extends Scan {
 }
 
 /** One micro-batch slice of one shard: records with
-  * fromSeq < sequence_number <= toSeq, in sequence order. */
+  * fromSeq < sequence_number <= toSeq, in sequence order, read from
+  * `files`, the envelope files that hold records of that range. */
 final case class ShardSlicePartition(shard: String, files: Seq[String],
     fromSeq: Long, toSeq: Long) extends InputPartition
 
-/** Stateless by design: admission control receives the start offset
-  * from the engine (`SupportsAdmissionControl.latestOffset(start,
-  * limit)`), so the stream keeps NO consumption state of its own —
-  * the checkpoint is the single source of truth, which is what makes
-  * restart and resharding correct for free. (A plain
-  * `MicroBatchStream.latestOffset()` MUST report everything available:
-  * rate-capping it starves `processAllAvailable`, which compares
-  * committed offsets against the capped report and concludes the
-  * stream is caught up after one batch.) */
+/** No consumption state of its own: admission control receives the
+  * start offset from the engine (`SupportsAdmissionControl.latestOffset(start,
+  * limit)`), so the checkpoint is the single source of truth, which is
+  * what makes restart and resharding correct for free. The one thing the
+  * stream keeps is its [[KinesisFileSource.EnvelopeIndex]], a cache of
+  * immutable file contents, so an idle poll costs a directory listing.
+  * (A plain `MicroBatchStream.latestOffset()` MUST report everything
+  * available: rate-capping it starves `processAllAvailable`, which
+  * compares committed offsets against the capped report and concludes
+  * the stream is caught up after one batch.) */
 class KinesisFileMicroBatchStream(dir: String, maxPerShard: Long)
     extends MicroBatchStream with SupportsAdmissionControl {
+
+  private val index = new KinesisFileSource.EnvelopeIndex(dir)
+
+  /** Envelope files this stream has parsed so far. */
+  def filesParsed: Long = index.filesParsed
 
   override def initialOffset(): Offset = ShardOffsets(Map.empty)
 
@@ -194,43 +300,38 @@ class KinesisFileMicroBatchStream(dir: String, maxPerShard: Long)
       case m: ReadMaxRows => m.maxRows()
       case _ => maxPerShard
     }
-    ShardOffsets(KinesisFileSource.cappedOffsets(dir, base, cap))
+    ShardOffsets(KinesisFileSource.cappedOffsets(index.refresh(), base, cap))
   }
 
   /** True tip of every shard, uncapped — what tells the engine (and
     * processAllAvailable) how far behind the admitted offset is. */
   override def reportLatestOffset(): Offset =
-    ShardOffsets(KinesisFileSource.availableOffsets(dir))
+    ShardOffsets(KinesisFileSource.availableOffsets(index.refresh()))
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(
       "SupportsAdmissionControl.latestOffset(start, limit) is used")
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[ShardOffsets].seqs
-    val e = end.asInstanceOf[ShardOffsets].seqs
-    val files = KinesisFileSource.listFiles(dir)
-    e.toSeq.sortBy(_._1).flatMap { case (shard, to) =>
-      val from = s.getOrElse(shard, Long.MinValue)
-      if (to > from) Some(ShardSlicePartition(shard, files, from, to)) else None
-    }.toArray
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    KinesisFileSource.slices(index.refresh(),
+      start.asInstanceOf[ShardOffsets].seqs, end.asInstanceOf[ShardOffsets].seqs)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new KinesisFileReaderFactory
 
-  override def commit(end: Offset): Unit = () // files never truncate
+  /** Files never truncate; only the index forgets what is committed. */
+  override def commit(end: Offset): Unit =
+    index.trim(end.asInstanceOf[ShardOffsets].seqs)
   override def stop(): Unit = ()
 }
 
-/** Batch read = every record, one partition per shard (full range). */
+/** Batch read = every record, one partition per shard (full range),
+  * planned from one index built for this plan. */
 class KinesisFileBatch(dir: String) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = KinesisFileSource.listFiles(dir)
-    KinesisFileSource.availableOffsets(dir).toSeq.sortBy(_._1).map {
-      case (shard, tip) =>
-        ShardSlicePartition(shard, files, Long.MinValue, tip): InputPartition
-    }.toArray
+    val index = new KinesisFileSource.EnvelopeIndex(dir).refresh()
+    KinesisFileSource.slices(index, Map.empty,
+      KinesisFileSource.availableOffsets(index))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new KinesisFileReaderFactory

@@ -46,8 +46,18 @@ object KinesisFixture {
         .cast("binary")), "[\\r\\n]", "").as("data"))
     env.repartition(nShards, col("shard")).sortWithinPartitions("shard", "seq")
       .foreachPartition { (it: Iterator[Row]) =>
+        // Each shard file is written under a name the source does not
+        // list and renamed into place once complete: a published
+        // envelope file is immutable (see KinesisFileProvider).
+        def tmpOf(shard: String) = new java.io.File(outDir, s"$shard.txt.tmp")
         var w: java.io.PrintWriter = null
         var cur: String = null
+        def publish(): Unit = if (w != null) {
+          w.close(); w = null
+          java.nio.file.Files.move(tmpOf(cur).toPath,
+            new java.io.File(outDir, s"$cur.txt").toPath,
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        }
         try {
           it.foreach { r =>
             val shard = r.getString(0)
@@ -56,13 +66,13 @@ object KinesisFixture {
             require(!r.getString(3).exists(c => c == '\t' || c == '\n' || c == '\r'),
               s"envelope data must be line-safe base64 (seq $seq)")
             if (shard != cur) {
-              if (w != null) w.close()
+              publish()
               cur = shard
-              w = new java.io.PrintWriter(
-                new java.io.File(outDir, s"$shard.txt"), "UTF-8")
+              w = new java.io.PrintWriter(tmpOf(shard), "UTF-8")
             }
             w.println(s"$shard\t$seq\t${r.getString(2)}\t${r.getString(3)}")
           }
+          publish()
         } finally if (w != null) w.close()
       }
   }
