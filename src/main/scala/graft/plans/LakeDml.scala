@@ -379,8 +379,10 @@ case class LakeUpdateCommand(dir: String,
 
 /** `MERGE INTO <lake> USING <source> ON t.k = s.k WHEN MATCHED THEN
   * UPDATE SET * WHEN NOT MATCHED THEN INSERT *` →
-  * [[LakeSink.mergeInto]]. The source plan (table, view, or subquery)
-  * is analyzed lazily at run time. */
+  * [[LakeSink.mergeInto]], the star clause pair of
+  * [[LakeSink.mergeClauses]]; the receipt keeps its four columns (a
+  * star merge deletes nothing). The source plan (table, view, or
+  * subquery) is analyzed lazily at run time. */
 case class LakeMergeCommand(dir: String, source: LogicalPlan,
     keys: Seq[String], cdc: Boolean = false,
     dvMaxFraction: Double = 0.0) extends LeafRunnableCommand {

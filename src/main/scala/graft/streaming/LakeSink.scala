@@ -1191,19 +1191,14 @@ object LakeSink {
 
   /** DELETION-VECTOR-RECONCILING segment read — the merge-on-read seam
     * every table read goes through: segments without a DV scan as one
-    * plain parquet read; DV'd segments scan WITH the parquet reader's
-    * positional metadata (`_metadata.file_name` + `row_index` — free,
-    * no data-column cost) and drop deleted positions via a BROADCAST
-    * anti-join against the manifest-referenced DV files. The DV side
-    * is O(deleted rows) — for the point-DML workload DVs exist for,
-    * a few rows against a 100 TB scan, so the anti-join is a broadcast
-    * hash probe inside the scan stage, never a shuffle. File NAMES
-    * (not paths) key the join: part-file names carry a per-job UUID,
-    * so they are unique across segments and stable under any
-    * mount/URI-prefix difference between writer and reader. */
+    * plain parquet read; DV'd segments scan WITH their positions
+    * ([[withPos]]) and drop deleted positions via [[dropHidden]]'s
+    * BROADCAST anti-join against the manifest-referenced DV files. The
+    * DV side is O(deleted rows) — for the point-DML workload DVs exist
+    * for, a few rows against a 100 TB scan, so the anti-join is a
+    * broadcast hash probe inside the scan stage, never a shuffle. */
   private def readSegments(spark: SparkSession, outDir: String,
       m: Manifest, segs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     if (segs.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         tableSchema(spark, outDir, m))
@@ -1212,16 +1207,10 @@ object LakeSink {
     if (clean.nonEmpty)
       parts += reader(spark, outDir, m).parquet(clean.map(s => s"$outDir/$s"): _*)
     if (dvSegs.nonEmpty) {
-      val df = reader(spark, outDir, m)
-        .parquet(dvSegs.map(s => s"$outDir/$s"): _*)
-        .withColumn("__dv_f", col("_metadata.file_name"))
-        .withColumn("__dv_i", col("_metadata.row_index"))
-      val dv = readDv(spark,
-        dvSegs.map(s => s"$outDir/_dv/${m.dv(s).file}"))
-      parts += df.join(broadcast(dv),
-          df("__dv_f") === dv("file_name") &&
-            df("__dv_i") === dv("row_index"), "left_anti")
-        .drop("__dv_f", "__dv_i")
+      val raw = withPos(reader(spark, outDir, m)
+        .parquet(dvSegs.map(s => s"$outDir/$s"): _*), outDir)
+      parts += dropHidden(spark, outDir, m, raw, dvSegs)
+        .drop("__dv_f", "__dv_i", "__dv_s")
     }
     // Under an active column mapping the scan produced PHYSICAL names
     // (the applied schema selects stable ids out of the files) — every
@@ -1234,71 +1223,64 @@ object LakeSink {
     else dephysicalize(joined, m, tableSchema(spark, outDir, m))
   }
 
-  /** The positional ride-along columns [[readSegmentWithPos]] attaches
-    * (as a Set so it doubles as a filter predicate over column names). */
-  private val posCols = Set("__dv_f", "__dv_i")
-
-  /** Read one segment's LIVE rows with their (file_name, row_index)
-    * positions attached as `__dv_f`/`__dv_i` — the planning read DML
-    * verbs use: counts and predicates see only live rows, and the
-    * matched positions are exactly what a merge-on-read DV write
-    * records. */
-  private def readSegmentWithPos(spark: SparkSession, outDir: String,
-      m: Manifest, seg: String): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val raw = reader(spark, outDir, m).parquet(s"$outDir/$seg")
-      .withColumn("__dv_f", col("_metadata.file_name"))
-      .withColumn("__dv_i", col("_metadata.row_index"))
-    val live = m.dv.get(seg) match {
-      case None => raw
-      case Some(r) =>
-        val dv = readDv(spark, Seq(s"$outDir/_dv/${r.file}"))
-        raw.join(broadcast(dv),
-          raw("__dv_f") === dv("file_name") &&
-            raw("__dv_i") === dv("row_index"), "left_anti")
-    }
-    // logical names for the DML verbs' predicates; positions ride along
-    if (m.colmap.isEmpty) live
-    else dephysicalize(live, m, tableSchema(spark, outDir, m),
-      Seq("__dv_f", "__dv_i"))
-  }
-
   /** Read MANY segments' LIVE rows in ONE scan with their positions
-    * (`__dv_f`/`__dv_i`) AND their owning segment (`__dv_s`, parsed
-    * from `_metadata.file_path` — the path component under the table
-    * root) attached. This is the batched-DML planning read (r15): a
+    * (`__dv_f`/`__dv_i`) AND their owning segment (`__dv_s`) attached
+    * ([[withPos]]). This is the batched-DML planning read (r15): a
     * verb that touches S segments plans them all with ONE
     * grouped-by-`__dv_s` aggregate over this frame instead of S
     * sequential per-segment jobs — the driver-side O(S) job-submission
     * ceiling the r14 verdict named is gone, while stats/partition/
     * bloom pruning still trims `segs` BEFORE the scan (metadata-only,
     * zero jobs, unchanged). DV reconciliation is one broadcast
-    * anti-join against the union of the segments' DV files (file
-    * names are globally unique, so one join serves all segments). */
+    * anti-join against the union of the segments' DV files, keyed by
+    * segment ([[dropHidden]]). */
   private def readSegmentsWithPos(spark: SparkSession, outDir: String,
       m: Manifest, segs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, regexp_extract}
     require(segs.nonEmpty, "positional read of no segments")
-    val segRe = java.util.regex.Pattern.quote(
-      new java.io.File(outDir).getAbsolutePath) + "/([^/]+)/"
-    val raw = reader(spark, outDir, m).parquet(segs.map(s => s"$outDir/$s"): _*)
-      .withColumn("__dv_f", col("_metadata.file_name"))
-      .withColumn("__dv_i", col("_metadata.row_index"))
-      .withColumn("__dv_s",
-        regexp_extract(col("_metadata.file_path"), segRe, 1))
+    val raw = withPos(reader(spark, outDir, m)
+      .parquet(segs.map(s => s"$outDir/$s"): _*), outDir)
     val dvSegs = segs.filter(m.dv.contains)
     val live =
-      if (dvSegs.isEmpty) raw
-      else {
-        val dv = readDv(spark,
-          dvSegs.map(s => s"$outDir/_dv/${m.dv(s).file}"))
-        raw.join(broadcast(dv),
-          raw("__dv_f") === dv("file_name") &&
-            raw("__dv_i") === dv("row_index"), "left_anti")
-      }
+      if (dvSegs.isEmpty) raw else dropHidden(spark, outDir, m, raw, dvSegs)
     if (m.colmap.isEmpty) live
     else dephysicalize(live, m, tableSchema(spark, outDir, m),
       Seq("__dv_f", "__dv_i", "__dv_s"))
+  }
+
+  /** Attach each row's position — `__dv_f`/`__dv_i`, the parquet
+    * reader's `_metadata.file_name` + `row_index` (free, no data-column
+    * cost) — and its owning segment `__dv_s`, parsed from
+    * `_metadata.file_path` (the path component under the table root),
+    * to a scan over segment directories of `outDir`. */
+  private def withPos(scan: DataFrame, outDir: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, regexp_extract}
+    val segRe = java.util.regex.Pattern.quote(
+      new java.io.File(outDir).getAbsolutePath) + "/([^/]+)/"
+    scan.withColumn("__dv_f", col("_metadata.file_name"))
+      .withColumn("__dv_i", col("_metadata.row_index"))
+      .withColumn("__dv_s",
+        regexp_extract(col("_metadata.file_path"), segRe, 1))
+  }
+
+  /** `raw` ([[withPos]]-tagged rows of `dvSegs`) minus the positions
+    * the segments' DVs hide: one broadcast anti-join on (segment, file
+    * name, row index). The SEGMENT is part of the key because sibling
+    * segments of one staged write ([[writeStagedBySegment]]) share
+    * part-file names — a name alone would let one segment's DV hide
+    * another's rows. DV files record no segment; each belongs to
+    * exactly one through `m.dv`, so one read of all of them tags every
+    * position with its owner by its DV directory name. */
+  private def dropHidden(spark: SparkSession, outDir: String,
+      m: Manifest, raw: DataFrame, dvSegs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col, element_at, regexp_extract, typedLit}
+    val owner = typedLit(dvSegs.map(s => m.dv(s).file -> s).toMap)
+    val dv = readDv(spark, dvSegs.map(s => s"$outDir/_dv/${m.dv(s).file}"))
+      .withColumn("__dv_owner", element_at(owner,
+        regexp_extract(col("_metadata.file_path"), "/([^/]+)/[^/]+$", 1)))
+    raw.join(broadcast(dv),
+      raw("__dv_s") === dv("__dv_owner") &&
+        raw("__dv_f") === dv("file_name") &&
+        raw("__dv_i") === dv("row_index"), "left_anti")
   }
 
   /** ONE staged partitioned write fanning a `__dv_s`-carrying frame
@@ -4186,7 +4168,7 @@ object LakeSink {
       def matchedPostOf(p: DataFrame) = p.filter(rowCond).select(
         col("__dv_s") +: cols.map(c =>
           assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-      // CDC IMAGE UNION (r19 session 2 — the mergeInto §1 shape,
+      // CDC IMAGE UNION (r19 session 2 — the MERGE §1 shape,
       // finally extended to UPDATE): pre- and post-images were two
       // separate write actions into the same cdc segment; one unioned
       // write carries both. It also runs CONCURRENTLY with the
@@ -5351,498 +5333,35 @@ object LakeSink {
     m.version + 1
   }
 
-  /** MERGE INTO (upsert), copy-on-write — the third DML verb, same
-    * protocol as [[deleteWhere]]/[[updateWhere]]. Semantics are the
-    * standard `WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN
-    * INSERT *` merge every lake format ships: a target row whose
-    * `keys` match a source row is REPLACED by that source row; source
-    * rows matching no target row are APPENDED as one new segment.
-    *
-    * Plan shape per segment: a broadcast-able semi-join counts the
-    * matches (segments with none survive BY REFERENCE — a merge
-    * touching one day of a year-partitioned lake rewrites one day);
-    * a matching segment is rewritten via LEFT OUTER join to the
-    * source, matched rows taking every source column (marker column,
-    * not coalesce — a legitimately-NULL source value must still win).
-    * Inserts are the source ANTI-joined against the WHOLE live table.
-    * At 100 TB the source is the small side throughout, so every join
-    * here broadcasts and the only large IO is rewriting touched
-    * segments. Nothing is visible until the single manifest CAS; the
-    * crash window and time-travel/vacuum semantics are exactly
-    * deleteWhere's.
-    *
-    * The source must be key-unique (checked — one extra small-side
-    * job): SQL MERGE raises on multiple source matches per target
-    * row, and silently picking one would be nondeterministic. Source
-    * columns must cover the target schema.
-    *
-    * `dvMaxFraction > 0` enables MERGE-ON-READ matched clauses (r14,
-    * the [[updateWhere]] rule applied to the upsert): a segment whose
-    * match fraction is within the threshold (and strictly partial)
-    * keeps its files — the matched positions join its deletion vector
-    * (superseding union) and the winning SOURCE rows append as one
-    * new segment — so a sparse-match upsert feed writes O(matched
-    * rows) per batch instead of rewriting every touched segment.
-    * Inserts are unchanged (they were always an O(inserted rows)
-    * append). CDC images are identical to the copy-on-write path's.
+  /** MERGE INTO (upsert) — the standard `WHEN MATCHED THEN UPDATE SET
+    * * / WHEN NOT MATCHED THEN INSERT *` merge every lake format
+    * ships, as the star clause pair of [[mergeClauses]] (one MERGE
+    * engine: its census, key-range pruning, merge-on-read split, CDC
+    * images and retry loop serve this verb too). A target row whose
+    * `keys` match a source row is REPLACED by that source row, cast to
+    * the table's column types; unmatched source rows append as one new
+    * segment (a table with no segments takes them all). The source
+    * must be key-unique and cover the target schema.
     *
     * Returns (committed version, segments rewritten, rows updated,
-    * rows inserted); a no-op merge (no matches, empty insert set)
-    * commits nothing. */
+    * rows inserted); a no-op merge commits nothing. */
   def mergeInto(spark: SparkSession, outDir: String, source: DataFrame,
       keys: Seq[String],
       txn: Option[(String, Long)] = None,
       cdc: Boolean = false,
       dvMaxFraction: Double = 0.0): (Long, Int, Long, Long) = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit, when}
-    require(keys.nonEmpty, "MERGE with no key columns")
-    require(dvMaxFraction >= 0.0 && dvMaxFraction <= 1.0,
-      s"dvMaxFraction must be in [0,1], got $dvMaxFraction")
-    var attempt = 0
-    while (attempt < dmlMaxAttempts) {
-      attempt += 1
-      val m = readManifest(outDir)
-      require(m.segs.nonEmpty, s"lake at $outDir has no committed segments")
-      // Transactional idempotence (see [[appendSegment]]): a replayed
-      // (appId, batchId) merge is a no-op — the guard rides the same
-      // manifest CAS as the data, making foreachBatch read-modify-MERGE
-      // folds EXACTLY-once under crash replay. Re-checked on every
-      // re-plan: if our txn landed between attempts, stop as a replay.
-      txn.foreach { case (app, id) =>
-        if (m.txns.getOrElse(app, Long.MinValue) >= id)
-          return (m.version, 0, 0L, 0L)
-      }
-      val tSchema = tableSchema(spark, outDir, m)
-      val targetCols = tSchema.fieldNames
-      val missing = targetCols.toSet -- source.columns
-      require(missing.isEmpty,
-        s"MERGE source lacks target column(s): ${missing.toSeq.sorted.mkString(", ")}")
-      val src = source.select(targetCols.map(col).toSeq: _*).cache()
-      // the touched-segment write passes, run concurrently with the
-      // insert pass (see below); every shared var/builder is mutated
-      // EITHER inside this future OR after its Await. Declared outside
-      // the try so the finally can settle it on ANY exit — an
-      // exception between future creation and the normal-path Await
-      // (insert-plan construction, a fatal error Try does not catch)
-      // must never leave the future's writes running detached.
-      var touchedWork: Option[scala.concurrent.Future[Unit]] = None
-      try {
-        // FUSED SOURCE GATE (r18): the key-uniqueness check, the
-        // star-merge expectation gate, and the key-range bound for
-        // stats pruning were three separate aggregate actions over the
-        // cached source — three Catalyst plan floors per MERGE call in
-        // a foreachBatch loop. One two-level aggregate (per-key
-        // partials, then a one-row rollup) answers all three:
-        // max(per-key count) > 1 is the duplicate verdict (groupBy
-        // treats NULL keys as equal, exactly as before), per-check
-        // violation counts sum the per-key partials, and min/max over
-        // the group keys ARE the row-level key bounds.
-        val checks = m.expects.toSeq.sortBy(_._1)
-        val keyPhys = m.physicalOf(keys.head)
-        val wantRange = keys.size == 1 &&
-          m.stats.values.exists(_.contains(keyPhys)) &&
-          src.schema.fields.exists(f => f.name == keys.head &&
-            f.dataType == org.apache.spark.sql.types.LongType)
-        def gateDf(withRange: Boolean) = {
-          val gateAggs: Seq[org.apache.spark.sql.Column] =
-            org.apache.spark.sql.functions.max(col("__n")).as("__dup") +:
-            (checks.zipWithIndex.map { case ((_, sql), i) =>
-              org.apache.spark.sql.functions.coalesce(
-                org.apache.spark.sql.functions.sum(col(s"__ck$i")),
-                lit(0L)).as(s"__ck$i") } ++
-             (if (withRange)
-                Seq(org.apache.spark.sql.functions.min(col(keys.head))
-                  .as("__klo"),
-                  org.apache.spark.sql.functions.max(col(keys.head))
-                    .as("__khi"))
-              else Nil))
-          val perKeyAggs: Seq[org.apache.spark.sql.Column] =
-            count(lit(1)).as("__n") +:
-            checks.zipWithIndex.map { case ((_, sql), i) =>
-              import org.apache.spark.sql.functions.expr
-              count(when(!expr(sql) || expr(sql).isNull, lit(1)))
-                .as(s"__ck$i") }
-          src.groupBy(keys.map(col): _*)
-            .agg(perKeyAggs.head, perKeyAggs.tail: _*)
-            .agg(gateAggs.head, gateAggs.tail: _*)
-        }
-        // Star merge writes SOURCE values and nothing else (matched
-        // rows rewrite to the source row, unmatched sources insert) —
-        // CHECK-constraint semantics on the merge path. `off` indexes
-        // `__dup` inside the row (0 on the standalone gate; inside a
-        // fused census row the gate columns sit after the census's).
-        def requireGate(g: Row, off: Int): Unit = {
-          require(g.isNullAt(off) || g.getLong(off) <= 1L,
-            "MERGE source has multiple rows per key — ambiguous match")
-          val bad = checks.zipWithIndex
-            .map { case ((n, _), i) => n -> g.getLong(off + i + 1) }
-            .filter(_._2 > 0L)
-          require(bad.isEmpty,
-            s"MERGE into $outDir would write rows violating " +
-              "expectation(s): " +
-              bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
-        }
-        // DEFERRED SOURCE GATE (r19): with no usable key range the
-        // gate's only consumers are the dup/expectation requires, so
-        // it rides the census collect below as a tagged union branch
-        // — one Catalyst action instead of two, still judged BEFORE
-        // any write. With a key range the gate must run first: its
-        // bounds prune the census's scan set (and a fully-pruned
-        // merge never builds a census at all).
-        val gate: Option[Row] =
-          if (wantRange) {
-            val g = gateDf(withRange = true).head()
-            requireGate(g, 0)
-            Some(g)
-          } else None
-        val marked = src.withColumn("__matched", lit(1))
-        // AUTOMATIC stats pruning (no caller hint needed — unlike
-        // delete/update, MERGE's match predicate IS the key equi-join,
-        // so the source's key range is a complete bound): with a single
-        // BIGINT key and manifest stats on it, a segment whose recorded
-        // [min,max] is disjoint from the source's key range cannot match
-        // and survives by reference with zero Spark jobs. The bound
-        // rode the fused gate aggregate above.
-        // (stats key physical names; the source's key column is logical)
-        val rangeBase = 1 + checks.size
-        val srcKeyRange: Option[(String, Long, Long)] =
-          gate match {
-            case Some(g) if !g.isNullAt(rangeBase) &&
-                !g.isNullAt(rangeBase + 1) =>
-              Some((keyPhys, g.getLong(rangeBase),
-                g.getLong(rangeBase + 1)))
-            case _ => None
-          }
-        val tracked = m.trackedCols
-        val nonce = java.lang.Long.toHexString(
-          java.util.concurrent.ThreadLocalRandom.current().nextLong())
-        var rewritten = 0
-        var updated = 0L
-        val removed = Set.newBuilder[String]
-        val added = Seq.newBuilder[String]
-        val addedStats = Map.newBuilder[String, Map[String, ColStat]]
-        val addedRows = Map.newBuilder[String, Long]
-        // Change data feed: replaced target rows as update_preimage,
-        // the winning source rows as update_postimage, unmatched
-        // source rows as insert — one cdc segment per MERGE.
-        val cdcSeg = s"seg_cdc_m$nonce"
-        var cdcRows = false
-        val dvSets = Map.newBuilder[String, DvRef]
-        var dvWrites = 0
-        // BATCHED PLANNING (r15): metadata pruning stays per segment
-        // and DRIVER-side (zero jobs); the surviving scan set counts
-        // in ONE grouped-by-segment job over one DV-reconciling
-        // positional read (a merge must never match or rewrite a row
-        // an earlier point delete hid, and the matched positions are
-        // what a merge-on-read DV write records). Before r15 this was
-        // one sequential count + write job per segment — the r14
-        // verdict's driver-side O(segments) ceiling. The source is
-        // broadcast throughout, so every pass is one scan-stage job.
-        val scanSegs = m.segs.zipWithIndex.filter { case (seg, _) =>
-          !srcKeyRange.exists { case (c, lo, hi) =>
-            !mayOverlap(m, seg, c, lo, hi) } }
-        // matched source keys observed by the census (Some once it
-        // ran or pruning proved zero matches): the insert side then
-        // anti-joins the source against this driver-bounded set —
-        // broadcast-small × broadcast-small — instead of re-scanning
-        // the surviving segments' key columns (the [[mergeClauses]]
-        // r17 cut, extended to the star verb in r19). Bounded by
-        // construction: distinct matched keys ≤ source keys.
-        var matchedKeys: Option[Seq[Row]] = None
-        if (scanSegs.isEmpty) matchedKeys = Some(Nil)
-        if (scanSegs.nonEmpty) {
-          val pos = readSegmentsWithPos(spark, outDir, m,
-            scanSegs.map(_._1))
-          // FUSED CENSUS COLLECT (r19): ONE action carries the
-          // per-segment counts (total live rows and matched rows —
-          // left outer against the key-unique source preserves target
-          // cardinality), the globally-distinct matched keys, and
-          // (when no key range pruned the scan set) the deferred
-          // source gate, as a tagged union over the persisted
-          // per-segment aggregate. The r18 shape paid a standalone
-          // gate action plus the census collect, and re-scanned the
-          // corpus on the insert side. Still judged BEFORE any write.
-          val perSegAgg = pos.join(broadcast(marked), keys, "left_outer")
-            .groupBy(col("__dv_s"))
-            .agg(count(lit(1)).as("__c0"),
-              count(when(col("__matched").isNotNull, lit(1)))
-                .as("__cm"),
-              org.apache.spark.sql.functions.collect_set(
-                when(col("__matched").isNotNull,
-                  org.apache.spark.sql.functions.struct(
-                    keys.map(col): _*))).as("__mk"))
-            .persist()
-          val perSeg = try {
-            import org.apache.spark.sql.functions.explode
-            val countRows = perSegAgg.drop("__mk")
-              .withColumn("__tag", lit(0))
-            val keyRows = perSegAgg
-              .select(explode(col("__mk")).as("__k")).distinct()
-              .withColumn("__tag", lit(1))
-            val branches = Seq(countRows, keyRows) ++
-              (if (gate.isEmpty)
-                 Seq(gateDf(withRange = false)
-                   .withColumn("__tag", lit(2)))
-               else Nil)
-            val all = branches
-              .reduce(_.unionByName(_, allowMissingColumns = true))
-              .collect()
-            def tagOf(r: Row) = r.getInt(r.fieldIndex("__tag"))
-            if (gate.isEmpty) {
-              val g = all.find(tagOf(_) == 2).get
-              requireGate(g, g.fieldIndex("__dup"))
-            }
-            matchedKeys = Some(all.filter(tagOf(_) == 1).toSeq
-              .map(r => r.getStruct(r.fieldIndex("__k"))))
-            all.filter(tagOf(_) == 0)
-              .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-              .toMap
-          } finally perSegAgg.unpersist()
-          def countsOf(seg: String): (Long, Long) =
-            perSeg.getOrElse(seg, (0L, 0L))
-          val touched = scanSegs.filter { case (seg, _) =>
-            countsOf(seg)._2 > 0L }
-          if (touched.nonEmpty) {
-            updated = touched.map(t => countsOf(t._1)._2).sum
-            // OVERLAPPED WRITE PASSES (r19, guide §2.6): everything
-            // below — CDC images, merge-on-read DV + post-image
-            // stages, copy-on-write rewrites — is independent of the
-            // INSERT pass (both sides only read the census result and
-            // the cached source, and write disjoint directories), so
-            // it runs on a driver thread while the insert's observed
-            // write proceeds concurrently; the insert tail Awaits this
-            // future BEFORE touching any shared builder, so all
-            // mutations stay single-threaded-visible (happens-before
-            // via the future's completion). Nothing is manifest-
-            // visible from either side until the one CAS at the end.
-            touchedWork = Some(scala.concurrent.Future {
-            // Write passes re-scope the path list to exactly the
-            // segments they touch (`__dv_s` is a COMPUTED column —
-            // filtering on it would not prune files).
-            def posOf(segs: Seq[(String, Int)]) =
-              readSegmentsWithPos(spark, outDir, m, segs.map(_._1))
-            val posT = posOf(touched)
-            // Matched target rows with their positions (semi-join —
-            // rows in untouched segments simply don't match).
-            def matchedPosOf(p: DataFrame) =
-              p.join(broadcast(src), keys, "left_semi")
-            // The winning source rows, one per matched TARGET row: a
-            // target holding k same-key rows must yield k src-valued
-            // rows — a semi-join of src against target keys would
-            // emit 1, and a signed-fold consumer (the Medallion IVM
-            // pattern) would drift by k-1 rows. Inner join
-            // target-keys × src (src is key-unique, checked above)
-            // yields exactly one src-valued row per matched target
-            // row, tagged with its segment for the staged fan-out.
-            // Shared by the CDC post-images and the merge-on-read
-            // append, so a feed consumer cannot tell which storage
-            // strategy served the merge.
-            def srcWinsOf(p: DataFrame) = p
-              .select((keys :+ "__dv_s").map(col).toSeq: _*)
-              .join(broadcast(src), keys, "inner")
-              .select((targetCols.toSeq :+ "__dv_s").map(col): _*)
-            if (cdc) {
-              // CDC IMAGE UNION (r19): pre- and post-images were two
-              // separate write actions into the same cdc segment —
-              // one unioned write carries both (same rows; the union
-              // branches scan inside ONE job).
-              physicalize(matchedPosOf(posT)
-                .drop("__dv_f", "__dv_i", "__dv_s")
-                .withColumn("_change_type", lit("update_preimage")), m)
-                .unionByName(physicalize(srcWinsOf(posT).drop("__dv_s")
-                  .withColumn("_change_type",
-                    lit("update_postimage")), m))
-                .write.mode("append").parquet(s"$outDir/$cdcSeg")
-              cdcRows = true
-            }
-            // Storage-strategy split (unchanged rules): merge-on-read
-            // within the threshold and strictly partial, else rewrite.
-            val (morSegs, cowSegs) = touched.partition { case (seg, _) =>
-              val (total, matches) = countsOf(seg)
-              dvMaxFraction > 0.0 && matches < total &&
-                matches <= (total * dvMaxFraction).toLong
-            }
-            if (morSegs.nonEmpty) {
-              // MERGE-ON-READ matched clause, batched: all matched
-              // positions join their segments' DVs (superseding
-              // union, the delete-DV rule) via ONE staged per-segment
-              // write; the winning source rows append as one new
-              // segment per source segment via a second — O(matched
-              // rows) written, O(1) jobs, files untouched.
-              val posM = posOf(morSegs)
-              val newDel = matchedPosOf(posM)
-                .select(col("__dv_s"), col("__dv_f").as("file_name"),
-                  col("__dv_i").as("row_index"))
-              val withOld = morSegs.map(_._1).filter(m.dv.contains)
-                .foldLeft(newDel) { (acc, s) =>
-                  acc.unionByName(readDv(spark,
-                      Seq(s"$outDir/_dv/${m.dv(s).file}"))
-                    .withColumn("__dv_s", lit(s))
-                    .select(col("__dv_s"), col("file_name"),
-                      col("row_index")))
-                }
-              val dvStage = s"$outDir/_stage_dvm_$nonce"
-              val dvDirs = writeStagedBySegment(withOld, dvStage,
-                onePerSeg = true)
-              java.nio.file.Files.createDirectories(
-                java.nio.file.Paths.get(outDir, "_dv"))
-              val postStage = s"$outDir/_stage_postm_$nonce"
-              val postPhys = physicalize(srcWinsOf(posM), m)
-              val postDirs = writeStagedBySegment(postPhys, postStage)
-              val postStats =
-                if (tracked.isEmpty)
-                  Map.empty[String, Map[String, ColStat]]
-                else segmentStatsGrouped(
-                  readStaged(spark, postStage, postPhys.schema), tracked)
-              morSegs.foreach { case (seg, i) =>
-                val dvName = s"dv_${nonce}_$i"
-                java.nio.file.Files.move(dvDirs(seg).toPath,
-                  java.nio.file.Paths.get(outDir, "_dv", dvName))
-                dvSets += seg -> DvRef(dvName,
-                  m.dv.get(seg).map(_.rows).getOrElse(0L) +
-                    countsOf(seg)._2)
-                dvWrites += 1
-                val postSeg = f"seg_m${m.version + 1}%010d_${i}p_$nonce"
-                java.nio.file.Files.move(postDirs(seg).toPath,
-                  java.nio.file.Paths.get(outDir, postSeg))
-                added += postSeg
-                addedRows += postSeg -> countsOf(seg)._2
-                postStats.get(seg).foreach(st =>
-                  addedStats += postSeg -> st)
-                writeSegmentBlooms(spark, outDir, postSeg, m.bloomCols)
-              }
-              org.apache.commons.io.FileUtils.deleteQuietly(
-                new java.io.File(dvStage))
-              org.apache.commons.io.FileUtils.deleteQuietly(
-                new java.io.File(postStage))
-            }
-            if (cowSegs.nonEmpty) {
-              // Copy-on-write rewrites, batched through ONE staged
-              // per-segment write plus ONE grouped stats job, path-
-              // scoped to exactly the CoW segments.
-              val joined = posOf(cowSegs).as("t").join(
-                broadcast(marked).as("s"), keys, "left_outer")
-              // Projection preserves the target schema's column ORDER
-              // so every segment in the lake stays
-              // byte-layout-compatible.
-              val out = joined.select(targetCols.map { c =>
-                // using-join merges the key columns (left value
-                // survives); non-keys exist on both sides and need
-                // qualification.
-                if (keys.contains(c)) col(c)
-                else when(col("s.__matched").isNotNull, col(s"s.$c"))
-                  .otherwise(col(s"t.$c")).as(c)
-              }.toSeq :+ col("t.__dv_s").as("__dv_s"): _*)
-              val cowStage = s"$outDir/_stage_cowm_$nonce"
-              val outPhys = physicalize(out, m)
-              val cowDirs = writeStagedBySegment(outPhys, cowStage)
-              val cowStats =
-                if (tracked.isEmpty)
-                  Map.empty[String, Map[String, ColStat]]
-                else segmentStatsGrouped(
-                  readStaged(spark, cowStage, outPhys.schema), tracked)
-              cowSegs.foreach { case (seg, i) =>
-                val newSeg = f"seg_m${m.version + 1}%010d_${i}_$nonce"
-                java.nio.file.Files.move(cowDirs(seg).toPath,
-                  java.nio.file.Paths.get(outDir, newSeg))
-                rewritten += 1
-                removed += seg
-                added += newSeg
-                // a star upsert keeps every live row (updates in place)
-                addedRows += newSeg -> countsOf(seg)._1
-                cowStats.get(seg).foreach(st =>
-                  addedStats += newSeg -> st)
-                writeSegmentBlooms(spark, outDir, newSeg, m.bloomCols)
-              }
-              org.apache.commons.io.FileUtils.deleteQuietly(
-                new java.io.File(cowStage))
-            }
-            ()
-            }(scala.concurrent.ExecutionContext.global))
-          }
-        }
-        // INSERT pass (r18 fused write + r19 census keys): the census
-        // above already observed every possible match (scanned
-        // segments + stats-disproved ones), so the insert side
-        // anti-joins the source against that driver-bounded key set —
-        // two broadcast-small relations, no second corpus scan (the
-        // r18 shape re-read the surviving segments' key columns here;
-        // NULL-keyed source rows behave identically on both routes:
-        // NULL never equals, so they stay insert candidates). The
-        // count + CHECK gate + stats still ride the ONE observed
-        // write, and the CDC insert images re-read the just-written
-        // small segment.
-        val inserts = matchedKeys match {
-          case Some(Nil) => src
-          case Some(mk) =>
-            val keySchema = org.apache.spark.sql.types.StructType(
-              keys.map(k => tSchema(tSchema.fieldIndex(k))))
-            val mkDf = spark.createDataFrame(
-              new java.util.ArrayList[Row](mk.asJava), keySchema)
-            src.join(broadcast(mkDf), keys, "left_anti")
-          case None => src.join(
-            readSegments(spark, outDir, m, scanSegs.map(_._1))
-              .select(keys.map(col).toSeq: _*),
-            keys, "left_anti")
-        }
-        val insSeg = f"seg_m${m.version + 1}%010d_ins_$nonce"
-        // The observed insert write runs WHILE the touched-segment
-        // future stages its rewrites; the future is awaited before any
-        // shared bookkeeping (and before a gate refusal propagates, so
-        // no write pass is abandoned mid-flight).
-        val insTry = scala.util.Try(writeSegmentObserved(spark, outDir, m,
-          inserts, insSeg,
-          s"MERGE into $outDir would write rows violating expectation(s)"))
-        touchedWork.foreach(f => scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf))
-        val (insStats, inserted) = insTry.get
-        if (inserted == 0L)
-          org.apache.commons.io.FileUtils.deleteQuietly(
-            new java.io.File(s"$outDir/$insSeg"))
-        else {
-          added += insSeg
-          addedRows += insSeg -> inserted
-          if (cdc) {
-            reader(spark, outDir, m).parquet(s"$outDir/$insSeg")
-              .withColumn("_change_type", lit("insert"))
-              .write.mode("append").parquet(s"$outDir/$cdcSeg")
-            cdcRows = true
-          }
-          if (tracked.nonEmpty) addedStats ++= insStats.map {
-            case (_, st) => insSeg -> st }
-          writeSegmentBlooms(spark, outDir, insSeg, m.bloomCols,
-            Some(inserted))
-        }
-        if (rewritten == 0 && dvWrites == 0 && inserted == 0L)
-          return (m.version, 0, 0L, 0L)
-        tryCommitEdit(outDir, m, removed.result(), added.result(),
-          addedStats.result(), txn,
-          cdcSegs = if (cdcRows) Seq(cdcSeg) else Nil,
-          dvSets = dvSets.result(),
-          addedRows = addedRows.result()) match {
-          case Some(v) => return (v, rewritten, updated, inserted)
-          case None => // true conflict — re-plan against the new tip
-        }
-      } finally {
-        // settle the touched-segment future on EVERY exit (Await.ready
-        // waits without rethrowing — the normal path's Await.result
-        // already propagated its failure): an abnormal exit must never
-        // leave its staged writes running detached against a source
-        // we are about to unpersist
-        touchedWork.foreach(f => scala.concurrent.Await.ready(
-          f, scala.concurrent.duration.Duration.Inf))
-        src.unpersist()
-      }
-    }
-    sys.error(s"merge at $outDir: $dmlMaxAttempts consecutive true " +
-      "conflicts (concurrent writers rewriting the same segments) — " +
-      "coordinate the writers or retry later")
+    val (v, rewritten, updated, _, inserted) = mergeClauses(spark, outDir,
+      source, keys, matched = Seq(MergeClause.Update(None, None)),
+      notMatched = Seq(MergeClause.Insert(None, None)), txn = txn,
+      cdc = cdc, dvMaxFraction = dvMaxFraction)
+    (v, rewritten, updated, inserted)
   }
 
-  /** GENERAL MERGE (r12) — the full SQL MERGE clause set the
-    * star-shape [[mergeInto]] refuses: conditional `WHEN MATCHED [AND
-    * cond] THEN UPDATE SET col = expr … / DELETE` (several, first
-    * match wins), `WHEN NOT MATCHED [AND cond] THEN INSERT …`
+  /** GENERAL MERGE (r12) — the full SQL MERGE clause set, the one
+    * MERGE engine ([[mergeInto]] is its star clause pair): conditional
+    * `WHEN MATCHED [AND cond] THEN UPDATE SET col = expr … / DELETE`
+    * (several, first match wins), `WHEN NOT MATCHED [AND cond] THEN
+    * INSERT …`
     * (explicit column lists, unassigned columns NULL), and `WHEN NOT
     * MATCHED BY SOURCE [AND cond] THEN UPDATE / DELETE`. Same
     * copy-on-write protocol as every DML verb: nothing is visible
@@ -5870,7 +5389,7 @@ object LakeSink {
     * row is the SQL MERGE cardinality error).
     *
     * `dvMaxFraction > 0` enables MERGE-ON-READ fired clauses (r14,
-    * the [[updateWhere]]/[[mergeInto]] rule): a segment whose FIRED
+    * the [[updateWhere]] rule): a segment whose FIRED
     * fraction (update- plus delete-firing rows) is within the
     * threshold and strictly partial keeps its files — fired positions
     * join its deletion vector, and the update-firing rows' POST-IMAGE
@@ -5958,9 +5477,11 @@ object LakeSink {
       }
       val src = source.cache()
       // the touched-segment write passes, run concurrently with the
-      // insert pass (see [[mergeInto]]); every shared var/builder is
-      // mutated EITHER inside this future OR after its Await. Declared
-      // outside the try so the finally can settle it on ANY exit.
+      // insert pass (see OVERLAPPED WRITE PASSES below); every shared
+      // var/builder is mutated EITHER inside this future OR after its
+      // Await. Declared outside the try so the finally can settle it on
+      // ANY exit — an exception between future creation and the
+      // normal-path Await must never leave its writes running detached.
       var touchedWork: Option[scala.concurrent.Future[Unit]] = None
       try {
         // FUSED dup-check + key-range bound (r18): previously two
@@ -5969,9 +5490,10 @@ object LakeSink {
         // of max(count) and min/max over the group keys) answers
         // both. groupBy treats NULL keys as equal, exactly as the
         // pre-fusion duplicate check did. Single-key stats pruning
-        // stays matched-side-only (see [[mergeInto]] — NMBS clauses
-        // can fire on any segment, so pruning is off the moment one
-        // exists).
+        // stays matched-side-only: MERGE's match predicate IS the key
+        // equi-join, so the source's key range bounds every match, but
+        // NMBS clauses can fire on any segment, so pruning is off the
+        // moment one exists.
         val keyPhys = m.physicalOf(keys.head)
         // matched.nonEmpty gates the range too (r18): only the census
         // consumes it, and an insert-only merge runs no census — the
@@ -6196,8 +5718,8 @@ object LakeSink {
               deleted += sumDel
               val tCols = targetCols.map(c => col(s"t.$c").as(c))
               def stagedT = stagedOf(posOf(touched))
-              // OVERLAPPED WRITE PASSES (r19, guide §2.6 — the
-              // [[mergeInto]] shape): the CDC images, merge-on-read
+              // OVERLAPPED WRITE PASSES (r19, guide §2.6): the CDC
+              // images, merge-on-read
               // stages, and copy-on-write rewrites below are
               // independent of the INSERT pass (both sides read only
               // the census result + cached source and write disjoint
@@ -6420,6 +5942,19 @@ object LakeSink {
             m, insPost.drop("__mc"), insSeg,
             s"MERGE into $outDir would insert rows violating " +
               "expectation(s)"))
+          insTry.failed.foreach { e =>
+            // a refused (or failed) insert: the touched-segment passes
+            // may already have moved their outputs to final names —
+            // settle them, delete every never-committed output, rethrow
+            touchedWork.foreach(f => scala.concurrent.Await.ready(
+              f, scala.concurrent.duration.Duration.Inf))
+            val orphans = (added.result() :+ cdcSeg)
+              .map(s => s"$outDir/$s") ++
+              dvSets.result().values.map(r => s"$outDir/_dv/${r.file}")
+            orphans.foreach(p => org.apache.commons.io.FileUtils
+              .deleteQuietly(new java.io.File(p)))
+            throw e
+          }
           touchedWork.foreach(f => scala.concurrent.Await.result(
             f, scala.concurrent.duration.Duration.Inf))
           val (insStats, insN) = insTry.get
@@ -6459,9 +5994,11 @@ object LakeSink {
           case None => // true conflict — re-plan against the new tip
         }
       } finally {
-        // settle the touched-segment future on EVERY exit (see
-        // [[mergeInto]]'s finally): never leave its staged writes
-        // running detached past an abnormal exit
+        // settle the touched-segment future on EVERY exit (Await.ready
+        // waits without rethrowing — the normal path's Await.result
+        // already propagated its failure): never leave its staged
+        // writes running detached against a source we are about to
+        // unpersist
         touchedWork.foreach(f => scala.concurrent.Await.ready(
           f, scala.concurrent.duration.Duration.Inf))
         src.unpersist()

@@ -481,7 +481,7 @@ object StreamOps {
     * sink a 100 TB deployment runs to keep a large keyed table
     * current from a change stream. Each micro-batch MERGEs into the
     * target (`WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *`)
-    * through [[LakeSink.mergeClauses]]; the `txn` guard rides the
+    * through [[LakeSink.mergeInto]]; the `txn` guard rides the
     * same manifest CAS as the data, so a batch replayed after a crash
     * between the lake commit and the streaming checkpoint commit is a
     * structural no-op — exactly-once end to end, the same contract as
@@ -512,10 +512,8 @@ object StreamOps {
     updates.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) {
-          val (_, rw, upd, _, ins) = LakeSink.mergeClauses(
+          val (_, rw, upd, ins) = LakeSink.mergeInto(
             batch.sparkSession, tableDir, batch.toDF(), keys,
-            matched = Seq(LakeSink.MergeClause.Update(None, None)),
-            notMatched = Seq(LakeSink.MergeClause.Insert(None, None)),
             txn = Some((appId, batchId)),
             dvMaxFraction = dvMaxFraction)
           onBatch(batchId, rw, upd, ins)

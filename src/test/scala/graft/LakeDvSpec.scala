@@ -590,4 +590,46 @@ class LakeDvSpec extends AnyFunSuite with SparkFixture {
     assert(h(4L) === ((2L, 2L)))   // second point delete
     assert(h(5L) === ((0L, 0L)))   // purge paid it off
   }
+
+  test("sibling post-image segments of one DML share part-file names; " +
+      "a DV on each hides rows of its own segment only") {
+    val dir = buildLake()
+    // 3 of 5 rows per segment (60% <= 80%): merge-on-read in both, so
+    // ONE staged write lands two post-image segments side by side. One
+    // read split over both segments' files (what a table larger than
+    // the open cost per core gets anyway) makes one task write both
+    // post-images, under the same part-file name.
+    val key = "spark.sql.files.minPartitionNum"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val (_, rw, nUpd) = try LakeSink.updateWhere(spark, dir,
+      col("id").isin(0L, 1L, 2L, 10L, 11L, 12L),
+      Map("flag" -> (col("flag") + 100L)), dvMaxFraction = 0.8)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert((rw, nUpd) === ((0, 6L)))
+    val posts = LakeSink.readManifest(dir).segs
+      .filterNot(Set("seg_b0", "seg_b1"))
+    assert(posts.size === 2)
+    def parts(seg: String): Set[String] =
+      new java.io.File(s"$dir/$seg").list()
+        .filter(_.endsWith(".parquet")).toSet
+    assert((parts(posts(0)) intersect parts(posts(1))).nonEmpty,
+      "precondition: the sibling post-images share a part-file name")
+    // a DV on each post-image: one position in one, two in the other
+    val (_, rwD, _, nDel) = LakeSink.deleteWhere(spark, dir,
+      col("id").isin(0L, 10L, 11L), dvMaxFraction = 0.8)
+    assert((rwD, nDel) === ((0, 3L)))
+    val m = LakeSink.readManifest(dir)
+    assert(posts.forall(m.dv.contains), "both post-images carry a DV")
+    val want = Seq(1L -> 101L, 2L -> 100L, 3L -> 1L, 4L -> 0L,
+      12L -> 100L, 13L -> 1L, 14L -> 0L)
+    // table read (readSegments) keeps every sibling's live rows
+    assert(rowsOf(dir) === want)
+    // DML planning read (positional): an UPDATE of every live row
+    // counts them all
+    val (_, _, nAll) = LakeSink.updateWhere(spark, dir,
+      col("id") >= 0L, Map("flag" -> col("flag")))
+    assert(nAll === want.size.toLong)
+    assert(rowsOf(dir) === want)
+  }
 }

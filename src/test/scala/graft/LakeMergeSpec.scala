@@ -97,6 +97,48 @@ class LakeMergeSpec extends AnyFunSuite with SparkFixture {
     assert(LakeSink.readTable(spark, dir).count() === 6L)
   }
 
+  test("merge into a table with no segments inserts every source row") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_lake_merge_empty").toString
+    LakeSink.createTable(dir, org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("user_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("v",
+        org.apache.spark.sql.types.LongType))))
+    val source = Seq((1L, Option(10L)), (2L, Option(20L)))
+      .toDF("user_id", "v")
+    val (v, rewritten, updated, inserted) =
+      LakeSink.mergeInto(spark, dir, source, Seq("user_id"))
+    assert(v === 2L && rewritten === 0 && updated === 0L && inserted === 2L)
+    assert(LakeSink.readTable(spark, dir).orderBy("user_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((1L, 10L), (2L, 20L)))
+  }
+
+  test("a narrower source column is written in the table's type, with " +
+      "stats on it") {
+    val dir = buildLake()
+    LakeSink.analyzeTable(spark, dir, Seq("v"))
+    // v is INT in the source, BIGINT in the table
+    val source = Seq((2L, 200), (9L, 90)).toDF("user_id", "v")
+    val (_, rewritten, updated, inserted) =
+      LakeSink.mergeInto(spark, dir, source, Seq("user_id"))
+    assert(rewritten === 1 && updated === 1L && inserted === 1L)
+    val m = LakeSink.readManifest(dir)
+    val written = m.segs.filterNot(Set("seg_b0", "seg_b1", "seg_b2"))
+    assert(written.size === 2) // the rewrite of seg_b0 and the inserts
+    written.foreach { seg =>
+      assert(spark.read.parquet(s"$dir/$seg").schema("v").dataType ===
+        org.apache.spark.sql.types.LongType, s"$seg wrote v as INT")
+      assert(m.stats.get(seg).exists(_.contains("v")),
+        s"$seg carries no stats on v")
+    }
+    assert(LakeSink.readTable(spark, dir).orderBy("user_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((1L, 10L), (2L, 200L), (3L, 30L), (4L, 40L), (5L, 50L),
+        (9L, 90L)))
+  }
+
   test("key-duplicated source errors; source missing a target column errors") {
     val dir = buildLake()
     val preVersion = LakeSink.readManifest(dir).version

@@ -12,11 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `appendSegment`: expectation gate + write + stats re-read +
   *    commit-gate footer count were 3 scan actions + a footer walk;
   *    now ONE observed write (CollectMetrics inside the write job);
-  *  - `mergeInto`: dup-check + expectation gate + key-range bound
-  *    were 3 aggregate actions over the source; now one two-level
-  *    aggregate — and the insert pass (count + write + stats = 3
-  *    actions, anti-joined against EVERY segment) is one observed
-  *    write anti-joined against only the stats-surviving segments;
+  *  - MERGE (`mergeInto` is the star clause pair of `mergeClauses`,
+  *    one engine): dup-check + key-range bound were separate
+  *    aggregate actions over the source; now one two-level aggregate
+  *    (deferred onto the census collect when no range prunes), and
+  *    the insert pass (count + CHECK gate + write + stats, once
+  *    anti-joined against EVERY segment) is one observed write
+  *    anti-joined against the census's matched keys;
   *  - `appendPartitioned`: the expectation gate rides the staging
   *    counts aggregate (still refusing BEFORE any file is written).
   *
@@ -25,7 +27,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * — which is exactly the unit the plan floor is paid in. A
   * violating batch must still refuse loud, commit nothing, and (new
   * in r18, because the fused gate observes DURING the write) leave
-  * no segment directory behind.
+  * no segment directory behind — for MERGE also none of the outputs
+  * its concurrent touched-segment passes had already moved into
+  * place.
   */
 class ProtocolFloorSpec extends AnyFunSuite with SparkFixture {
 
@@ -232,6 +236,41 @@ class ProtocolFloorSpec extends AnyFunSuite with SparkFixture {
     }
     assert(e2.getMessage.contains("multiple rows per key"))
     assert(LakeSink.readManifest(dir).version === v0)
+  }
+
+  test("a violating insert refuses a matched merge and leaves only " +
+      "the pre-existing files") {
+    // the touched-segment passes (CoW stage, CDC images) run
+    // concurrently with the insert write and move their outputs to
+    // final names before the insert's gate can refuse — the refusal
+    // must delete them, through both the star and the clause verb
+    val dir = buildNoStatsLake()
+    LakeSink.addExpectation(spark, dir, "v_pos", "v >= 0")
+    val v0 = LakeSink.readManifest(dir).version
+    def files(): Set[String] = {
+      def walk(f: java.io.File): Seq[String] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else Seq(f.getPath)
+      walk(new java.io.File(dir)).toSet
+    }
+    val before = files()
+    // one matched row (k = 5) and one violating insert (k = 100)
+    val src = Seq((5L, 999L), (100L, -1L)).toDF("k", "v")
+    val refusals = Seq[() => Unit](
+      () => LakeSink.mergeInto(spark, dir, src, Seq("k"), cdc = true),
+      () => LakeSink.mergeClauses(spark, dir, src, Seq("k"),
+        matched = Seq(LakeSink.MergeClause.Update(None, None)),
+        notMatched = Seq(LakeSink.MergeClause.Insert(None, None)),
+        cdc = true))
+    refusals.foreach { merge =>
+      val e = intercept[IllegalArgumentException](merge())
+      assert(e.getMessage.contains("v_pos (1 rows)"))
+      assert(LakeSink.readManifest(dir).version === v0)
+      val extra = files() -- before
+      assert(extra.isEmpty,
+        s"refused merge left files: ${extra.toSeq.sorted.mkString(", ")}")
+    }
+    assert(LakeSink.readTable(spark, dir).count() === 30L)
   }
 
   test("no-stats clause merge (streaming upsert shape): fused " +
