@@ -310,17 +310,6 @@ object LakeSink {
       .sorted
   }
 
-  /** Parse one committed manifest file. Header lines (`maxb=`,
-    * `schemav=`, `schema=`, repeated `stats=seg|col|min|max`,
-    * repeated `txn=app|lastBatchId`) precede the segment list; segment
-    * names never contain `=` so the split is unambiguous, and old
-    * manifests without the newer headers parse as schemaV 0 / no
-    * stats / no txns. */
-  private def parseManifest(outDir: String, v: Long): Manifest =
-    parseSnapshotLines(outDir, v, Files.readAllLines(
-      manifestDir(outDir).resolve(f"v$v%010d.txt")).asScala
-      .filter(_.nonEmpty).toSeq)
-
   /** Decode one stats payload (the part after `stats=`/`strstats=`)
     * to (seg, col, stat). */
   private def parseStatPayload(outDir: String, v: Long, l: String,
@@ -338,6 +327,12 @@ object LakeSink {
     }
   }
 
+  /** Parse the lines of one full manifest snapshot. Header lines
+    * (`maxb=`, `schemav=`, `schema=`, repeated `stats=seg|col|min|max`,
+    * repeated `txn=app|lastBatchId`) precede the segment list; segment
+    * names never contain `=` so the split is unambiguous, and old
+    * manifests without the newer headers parse as schemaV 0 / no
+    * stats / no txns. */
   private def parseSnapshotLines(outDir: String, v: Long,
       lines0: Seq[String]): Manifest = {
     val lines = lines0
@@ -1350,10 +1345,12 @@ object LakeSink {
     * columns in `cols` (absent or other-typed columns are skipped —
     * stats are advisory bounds, and no stats is always safe): min,
     * max, and NULL COUNT per column. All-NULL columns record no
-    * min/max entry. Writers call this once per segment they
-    * materialize; the cost is one scan of data that was just written
-    * (in a production writer the bounds come for free from the
-    * parquet writer's own footer accumulation). */
+    * min/max entry. This is the FROM-DISK recompute, one scan of
+    * files already on disk: imports of files the engine did not
+    * write, and the rewrites of [[compact]] and [[compactPartitions]].
+    * Appends, MERGE inserts and [[startCompactingIngest]] collect the
+    * same bounds inside their write job instead
+    * ([[writeSegmentObserved]]). */
   def segmentStats(df: DataFrame,
       cols: Seq[String]): Map[String, ColStat] = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
@@ -4818,7 +4815,7 @@ object LakeSink {
     // files are deleted before the error and were never manifest-
     // visible (the same invisibility any staged write relies on).
     val (segStats, rows) = writeSegmentObserved(spark, outDir, m, df, seg,
-      s"appendSegment to $outDir violates expectation(s)")
+      Some(s"appendSegment to $outDir violates expectation(s)"))
     writeSegmentBlooms(spark, outDir, seg, m.bloomCols, Some(rows))
     // An append commutes with ANY concurrent commit that leaves the
     // schema, expectation set, and our txn state alone (it reads no
@@ -4839,23 +4836,29 @@ object LakeSink {
     * the tracked-column stats, and the row count as `observe` metrics
     * INSIDE the write job — one Catalyst action where the pre-r18
     * path paid three (gate aggregate, write, stats re-read) plus a
-    * footer read at the commit gate. Expectation violations delete
-    * the just-written (never manifest-visible) directory and refuse
-    * loud with the caller's message head (`errHead`, the text before
-    * the per-check counts) — identical wording to the pre-fusion
-    * gates. Returns the stats map
-    * (keyed by segment, physical column names — empty when the lake
-    * tracks nothing) and the row count for `addedRows`. */
+    * footer read at the commit gate. With `gate = Some(errHead)`,
+    * expectation violations delete the just-written (never manifest-
+    * visible) directory and refuse loud with `errHead` (the text
+    * before the per-check counts) — identical wording to the
+    * pre-fusion gates; `None` writes unchecked (compaction moves rows
+    * that are already committed — NOT VALID semantics). Stats cover
+    * the lake's tracked columns plus `extraTracked` (physical names:
+    * a writer's own stats columns, so the first segment of an
+    * untracked lake records them too). Returns the stats map (keyed
+    * by segment, physical column names — empty when nothing is
+    * tracked) and the row count for `addedRows`. */
   private def writeSegmentObserved(spark: SparkSession, outDir: String,
-      m: Manifest, df: DataFrame, seg: String, errHead: String)
+      m: Manifest, df: DataFrame, seg: String, gate: Option[String],
+      extraTracked: Seq[String] = Nil)
       : (Map[String, Map[String, ColStat]], Long) = {
     import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, when}
     import org.apache.spark.sql.types.{LongType, StringType}
-    val checks = m.expects.toSeq.sortBy(_._1)
+    val checks = if (gate.isEmpty) Nil else m.expects.toSeq.sortBy(_._1)
+    val tracked = (m.trackedCols ++ extraTracked).distinct.sorted
     // manifest stats live under PHYSICAL names; `df` speaks logical —
     // aggregate on the logical side, re-key the results
     val trackedTyped: Seq[(String, String, Boolean)] =
-      m.trackedCols.flatMap { p =>
+      tracked.flatMap { p =>
         val lOpt = if (m.colmap.isEmpty) Some(p) else m.logicalOf(p)
         lOpt.flatMap(l => df.schema.fields.collectFirst {
           case f if f.name == l &&
@@ -4884,7 +4887,7 @@ object LakeSink {
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(s"$outDir/$seg"))
     require(bad.isEmpty,
-      s"$errHead: " +
+      s"${gate.get}: " +
         bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
     val st = trackedTyped.zipWithIndex.flatMap {
       case ((p, _, isLong), i) =>
@@ -4899,7 +4902,7 @@ object LakeSink {
           case _ => None // all-NULL column records no bounds
         }
     }.toMap
-    (if (m.trackedCols.isEmpty) Map.empty[String, Map[String, ColStat]]
+    (if (tracked.isEmpty) Map.empty[String, Map[String, ColStat]]
      else Map(seg -> st),
       got("__rows").asInstanceOf[Long])
   }
@@ -5220,7 +5223,7 @@ object LakeSink {
             // (the batch already passed the gate above)
             val seg = f"seg_r${m.version + 1}%010d_ins_$nonce"
             val (stats, n) = writeSegmentObserved(spark, outDir, m, src,
-              seg, s"replaceWhere to $outDir violates expectation(s)")
+              seg, Some(s"replaceWhere to $outDir violates expectation(s)"))
             inserted = n
             if (inserted == 0L)
               org.apache.commons.io.FileUtils.deleteQuietly(
@@ -5940,8 +5943,8 @@ object LakeSink {
           // awaited before any shared bookkeeping or a gate refusal
           val insTry = scala.util.Try(writeSegmentObserved(spark, outDir,
             m, insPost.drop("__mc"), insSeg,
-            s"MERGE into $outDir would insert rows violating " +
-              "expectation(s)"))
+            Some(s"MERGE into $outDir would insert rows violating " +
+              "expectation(s)")))
           insTry.failed.foreach { e =>
             // a refused (or failed) insert: the touched-segment passes
             // may already have moved their outputs to final names —
@@ -6011,10 +6014,15 @@ object LakeSink {
 
   /** Start the ingest-with-maintenance stream. Every `compactEvery`
     * batches, live b-segments are compacted into `targetFiles` files.
-    * `beforeMaintenanceCommit` is the crash-injection seam: it runs
-    * AFTER the compacted segment is fully written and BEFORE the
-    * manifest commit that makes it live — the exact window the
-    * manifest protocol must survive. */
+    * Each batch is one observed write ([[writeSegmentObserved]]): the
+    * table's expectations gate it (a violating batch fails the query
+    * and commits nothing), and its `statsCols` bounds (logical names,
+    * e.g. the event-time epoch — time-ordered micro-batches each cover
+    * a narrow range, exactly the layout that makes pruning effective)
+    * and row count ride the write job. `beforeMaintenanceCommit` is
+    * the crash-injection seam: it runs AFTER the compacted segment is
+    * fully written and BEFORE the manifest commit that makes it live
+    * — the exact window the manifest protocol must survive. */
   def startCompactingIngest(
       df: DataFrame, outDir: String, checkpointDir: String,
       compactEvery: Int = 4, targetFiles: Int = 2,
@@ -6024,47 +6032,42 @@ object LakeSink {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
         val seg = s"seg_b$batchId"
-        // mW only keys the write's column names (the mapping changes
+        // mW keys the write's column names and contracts (both change
         // via rare DDL, never mid-batch); the commit loop below reads
         // its own fresh tips
         val mW = readManifest(outDir)
-        val batchPhys = physicalize(batch, mW)
-        batchPhys.write.mode("overwrite").parquet(s"$outDir/$seg")
-        // Per-batch stats from the just-written segment (statsCols
-        // names the BIGINT columns to track, e.g. the event-time
-        // epoch — time-ordered micro-batches each cover a narrow
-        // range, exactly the layout that makes pruning effective).
-        // Stats key PHYSICAL names (they follow the bytes).
-        val bstats =
-          if (statsCols.isEmpty) Map.empty[String, ColStat]
-          else segmentStats(
-            spark.read.schema(batchPhys.schema)
-              .parquet(s"$outDir/$seg"),
+        // a replayed batch whose ingest already committed (live, or
+        // compacted away) writes nothing: rewriting a live segment
+        // would mint new part-file names under any deletion vector
+        // placed on it since, and resurrect the rows it deletes
+        if (batchId > mW.maxB) {
+          val (bstats, rows) = writeSegmentObserved(spark, outDir, mW,
+            batch, seg,
+            Some(s"ingest batch $batchId to $outDir violates expectation(s)"),
             statsCols.map(mW.physicalOf))
-        writeSegmentBlooms(spark, outDir, seg, mW.bloomCols)
-        // ingest commit loop: retry on version race (replay in practice)
-        var done = false
-        while (!done) {
-          val m = readManifest(outDir)
-          done =
-            if (m.segs.contains(seg)) true // replayed, already live
-            else if (batchId <= m.maxB) {
-              // replayed AND already compacted away: re-adding would
-              // duplicate rows the c-segment holds — drop the orphan
-              org.apache.commons.io.FileUtils.deleteQuietly(
-                new java.io.File(s"$outDir/$seg"))
-              true
-            } else commitEditRecord(outDir, m,
-              // copy, not positional construction: cumulative state
-              // (dv, schema, txns) rides through; per-version
-              // annotations reset (see addExpectation's note)
-              m.copy(version = m.version + 1, maxB = batchId,
-                segs = m.segs :+ seg,
-                stats =
-                  if (bstats.isEmpty) m.stats else m.stats + (seg -> bstats),
-                cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true),
-              Set.empty, Seq(seg),
-              if (bstats.isEmpty) Map.empty else Map(seg -> bstats))
+          writeSegmentBlooms(spark, outDir, seg, mW.bloomCols, Some(rows))
+          // ingest commit loop: retry on version race
+          var done = false
+          while (!done) {
+            val m = readManifest(outDir)
+            done =
+              if (m.segs.contains(seg)) true
+              else if (batchId <= m.maxB) {
+                // another writer ingested this batch meanwhile:
+                // re-adding would duplicate its rows — drop the orphan
+                org.apache.commons.io.FileUtils.deleteQuietly(
+                  new java.io.File(s"$outDir/$seg"))
+                true
+              } else commitEditRecord(outDir, m,
+                // copy, not positional construction: cumulative state
+                // (dv, schema, txns) rides through; per-version
+                // annotations reset (see addExpectation's note)
+                m.copy(version = m.version + 1, maxB = batchId,
+                  segs = m.segs :+ seg, stats = m.stats ++ bstats,
+                  segRows = m.segRows + (seg -> rows),
+                  cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true),
+                Set.empty, Seq(seg), bstats)
+          }
         }
         if (batchId % compactEvery == (compactEvery - 1)) {
           val m = readManifest(outDir)
@@ -6073,27 +6076,19 @@ object LakeSink {
             val cseg = s"seg_c$batchId"
             // DV-reconciling read: a b-segment that took a point delete
             // between ingest and compaction must not resurrect its rows
-            val csegPhys = physicalize(
-              readSegments(spark, outDir, m, bsegs)
-                .repartition(targetFiles), m)
-            csegPhys.write.mode("overwrite").parquet(s"$outDir/$cseg")
-            val cstats =
-              if (statsCols.isEmpty) Map.empty[String, ColStat]
-              else segmentStats(
-                spark.read.schema(csegPhys.schema)
-                  .parquet(s"$outDir/$cseg"),
-                statsCols.map(m.physicalOf))
-            writeSegmentBlooms(spark, outDir, cseg, m.bloomCols)
+            val (cstats, crows) = writeSegmentObserved(spark, outDir, m,
+              readSegments(spark, outDir, m, bsegs).repartition(targetFiles),
+              cseg, None, statsCols.map(m.physicalOf))
+            writeSegmentBlooms(spark, outDir, cseg, m.bloomCols, Some(crows))
             beforeMaintenanceCommit(batchId)
             if (commitEditRecord(outDir, m,
                 m.copy(version = m.version + 1,
                   segs = m.segs.filterNot(bsegs.contains) :+ cseg,
-                  stats = (if (cstats.isEmpty) m.stats
-                    else m.stats + (cseg -> cstats)) -- bsegs,
+                  stats = (m.stats -- bsegs) ++ cstats,
+                  segRows = m.segRows + (cseg -> crows),
                   cdcSegs = Nil, cdcDropSegs = Nil, dataChange = false,
                   dv = m.dv -- bsegs),
-                bsegs.toSet, Seq(cseg),
-                if (cstats.isEmpty) Map.empty else Map(cseg -> cstats))) {
+                bsegs.toSet, Seq(cseg), cstats)) {
               // now-orphaned inputs: invisible to every reader; removal
               // is best-effort hygiene, crash-safe to skip
               bsegs.foreach { s =>

@@ -102,6 +102,43 @@ class LakeExpectationsSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("v_cap"))
   }
 
+  test("the compacting ingest enforces expectations per batch; its " +
+      "compaction does not re-validate older segments") {
+    implicit val ctx = spark.sqlContext
+    val out = java.nio.file.Files
+      .createTempDirectory("graft_lake_expect_ingest").toString
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_lake_expect_ckpt").toString
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long)]
+    val q = LakeSink.startCompactingIngest(input.toDF().toDF("k", "v"),
+      out, ckpt, compactEvery = 4, targetFiles = 1)
+    try {
+      // batches 0-2 land before the contract exists; batch 0 holds a
+      // row the contract will reject
+      Seq(Seq((1L, -5L), (2L, 20L)), Seq((3L, 30L)), Seq((4L, 40L)))
+        .foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      LakeSink.addExpectation(spark, out, "v_pos", "v >= 0")
+      // batch 3 passes; its compaction moves the old -5 row unchecked
+      input.addData((5L, 50L))
+      q.processAllAvailable()
+      val m = LakeSink.readManifest(out)
+      assert(m.segs === Seq("seg_c3"), s"compaction did not commit: ${m.segs}")
+      assert(LakeSink.readTable(spark, out).select("k", "v").as[(Long, Long)]
+        .collect().sorted.toSeq ===
+        Seq((1L, -5L), (2L, 20L), (3L, 30L), (4L, 40L), (5L, 50L)))
+      // batch 4 violates: the query fails, nothing commits, no dir left
+      input.addData((6L, 60L), (7L, -7L))
+      val e = intercept[Exception] { q.processAllAvailable() }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("v_pos (1 rows)"))),
+        s"refusal does not name the check: $e")
+      assert(LakeSink.readManifest(out).version === m.version)
+      assert(!new java.io.File(s"$out/seg_b4").exists(),
+        "a refused batch left its segment directory behind")
+    } finally q.stop()
+  }
+
   test("splitByExpectations quarantines FALSE and NULL rows") {
     val dir = buildLake()
     LakeSink.addExpectation(spark, dir, "v_cap", "v <= 100")

@@ -20,7 +20,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    anti-joined against EVERY segment) is one observed write
   *    anti-joined against the census's matched keys;
   *  - `appendPartitioned`: the expectation gate rides the staging
-  *    counts aggregate (still refusing BEFORE any file is written).
+  *    counts aggregate (still refusing BEFORE any file is written);
+  *  - `startCompactingIngest`: a batch's stats re-read (an aggregate
+  *    AQE splits into two jobs) and the commit gate's footer count
+  *    now ride the batch's one observed write. Its `foreachBatch`
+  *    runs on the stream's cloned session, whose QueryExecutions the
+  *    suite session's listener never sees, so that pin counts the
+  *    Spark JOBS tagged with the stream's batch id.
   *
   * Job counts vary under AQE (a two-level aggregate is one action
   * but several jobs), so these pins count ACTIONS — QueryExecutions
@@ -113,6 +119,74 @@ class ProtocolFloorSpec extends AnyFunSuite with SparkFixture {
       spark.read.parquet(s"$dir/seg_fused"), Seq("k")))
     // the commit gate took the observed count — no footer walk needed
     assert(m.segRows.get("seg_fused") === Some(3L))
+  }
+
+  test("compacting ingest: a non-compacting batch is ONE Spark job; " +
+      "stats and row counts ride the segment writes") {
+    implicit val ctx = spark.sqlContext
+    val out = java.nio.file.Files
+      .createTempDirectory("graft_floor_ingest").toString
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_floor_ingest_ckpt").toString
+    val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long)]
+    // jobs per micro-batch of THIS query (job properties carry the
+    // stream's local properties)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]
+    @volatile var queryId = ""
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).filter(p =>
+          p.getProperty("sql.streaming.queryId") == queryId)
+          .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.computeIfAbsent(b,
+            _ => new java.util.concurrent.atomic.AtomicInteger)
+            .incrementAndGet())
+    }
+    spark.sparkContext.addSparkListener(l)
+    val q = LakeSink.startCompactingIngest(
+      input.toDF().toDF("k", "ts_us"), out, ckpt,
+      compactEvery = 4, targetFiles = 1, statsCols = Seq("ts_us"))
+    queryId = q.id.toString
+    def jobsOf(b: Int): Int = {
+      var last = -1; var cur = 0; var polls = 0
+      while ((cur != last || polls < 3) && polls < 50) {
+        last = cur; Thread.sleep(100)
+        cur = Option(jobs.get(b.toString)).map(_.get).getOrElse(0)
+        polls += 1
+      }
+      cur
+    }
+    def fromDisk(seg: String) = LakeSink.segmentStats(
+      spark.read.parquet(s"$out/$seg"), Seq("ts_us"))
+    try {
+      (0 until 4).foreach { b =>
+        input.addData((0 until 3).map(i => (b * 10L + i, b * 100L + i)): _*)
+        q.processAllAvailable()
+        if (b < 3) {
+          val n = jobsOf(b)
+          assert(n === 1, s"ingest batch $b ran $n jobs — the stats " +
+            "and the row count must ride its write")
+          val m = LakeSink.readManifest(out)
+          // batch 0 lands in an untracked lake: statsCols alone
+          // must start the tracking
+          assert(m.stats(s"seg_b$b") === fromDisk(s"seg_b$b"))
+          assert(m.stats(s"seg_b$b")("ts_us") ===
+            LakeSink.LongStat(b * 100L, b * 100L + 2, 0L))
+          assert(m.segRows.get(s"seg_b$b") === Some(3L))
+        }
+      }
+      val m = LakeSink.readManifest(out)
+      assert(m.segs === Seq("seg_c3"))
+      assert(m.stats("seg_c3") === fromDisk("seg_c3"))
+      assert(m.stats("seg_c3")("ts_us") === LakeSink.LongStat(0L, 302L, 0L))
+      assert(m.segRows === Map("seg_c3" -> 12L))
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(l)
+    }
   }
 
   test("violating append refuses loud, commits nothing, leaves no dir") {

@@ -439,6 +439,59 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     } finally q2.stop()
   }
 
+  test("compacting lake sink: a replayed batch rewrites no live " +
+      "segment, so a deletion vector placed on it stays valid") {
+    import graft.streaming.LakeSink
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("graft_lake_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_lake_ckpt").toString
+    def parquetFiles(seg: String): Seq[String] =
+      new java.io.File(s"$out/$seg").listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet")).sorted.toSeq
+    val input = MemoryStream[Event]
+    val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // run 1: batch 3's ingest commits, its compaction dies before the
+    // manifest commit — the streaming checkpoint never records batch 3
+    val q1 = LakeSink.startCompactingIngest(input.toDF(), out, ckpt,
+      compactEvery = 4, targetFiles = 2,
+      beforeMaintenanceCommit = _ =>
+        if (!crashed.getAndSet(true))
+          throw new RuntimeException("injected crash before manifest commit"))
+    val batches = (0 until 4).map(i =>
+      Seq(ev(f"2024-01-01 10:0$i:00", user = i.toLong),
+        ev(f"2024-01-01 10:0$i:30", user = i.toLong)))
+    try {
+      batches.take(3).foreach { b => input.addData(b: _*); q1.processAllAvailable() }
+      input.addData(batches(3): _*)
+      intercept[Exception] { q1.processAllAvailable() }
+    } finally q1.stop()
+    // between crash and restart, a merge-on-read DELETE puts a DV on
+    // one row of the live seg_b3 (the DV keys that segment's files)
+    val victim = batches(3).head.event_id
+    val b3Files = parquetFiles("seg_b3")
+    LakeSink.deleteWhere(spark, out, col("event_id") === victim,
+      dvMaxFraction = 0.5)
+    assert(LakeSink.readManifest(out).dv.keySet === Set("seg_b3"))
+    // run 2: batch 3 replays; its compaction sees seg_b3 as it was
+    val atCompaction = new java.util.concurrent.atomic.AtomicReference[Seq[String]]
+    val q2 = LakeSink.startCompactingIngest(input.toDF(), out, ckpt,
+      compactEvery = 4, targetFiles = 2,
+      beforeMaintenanceCommit = _ => atCompaction.set(parquetFiles("seg_b3")))
+    try {
+      q2.processAllAvailable()
+      val m = LakeSink.readManifest(out)
+      assert(m.segs.forall(_.startsWith("seg_c")) && m.dv.isEmpty,
+        s"compaction did not complete after replay: ${m.segs}")
+      val ids = LakeSink.readTable(spark, out)
+        .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(!ids.contains(victim), s"deleted row $victim came back: $ids")
+      assert(ids.size === 7 && ids === ids.distinct, s"$ids")
+      assert(atCompaction.get === b3Files,
+        "the replayed batch rewrote a live segment's files")
+    } finally q2.stop()
+  }
+
   test("lake time travel + vacuum: retained versions read exactly, " +
       "orphans and stale history go away") {
     import graft.streaming.LakeSink
