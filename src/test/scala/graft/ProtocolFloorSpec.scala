@@ -365,6 +365,64 @@ class ProtocolFloorSpec extends AnyFunSuite with SparkFixture {
     assert(LakeSink.readTable(spark, dir).count() === 31L)
   }
 
+  test("copy-on-write UPDATE: census + one staged rewrite = 2 actions") {
+    val dir = buildNoStatsLake()
+    val acts = actionsIn {
+      val (_, rewritten, updated) = LakeSink.updateWhere(spark, dir,
+        col("k") === 5L, Map("v" -> lit(999L)))
+      assert(rewritten === 1 && updated === 1L)
+    }
+    assert(acts === 2,
+      s"copy-on-write update ran $acts actions — expected the grouped " +
+        "census and one staged per-segment rewrite")
+    assert(LakeSink.readTable(spark, dir).filter(col("v") === 999L)
+      .count() === 1L)
+  }
+
+  test("merge-on-read UPDATE: census + DV stage + post-image stage " +
+      "= 3 actions") {
+    val dir = buildNoStatsLake()
+    val acts = actionsIn {
+      val (_, rewritten, updated) = LakeSink.updateWhere(spark, dir,
+        col("k") === 5L, Map("v" -> lit(999L)), dvMaxFraction = 0.5)
+      assert(rewritten === 0 && updated === 1L)
+    }
+    assert(acts === 3,
+      s"merge-on-read update ran $acts actions — expected the grouped " +
+        "census, one staged DV write and one staged post-image write")
+    assert(LakeSink.readManifest(dir).dv.size === 1)
+    assert(LakeSink.readTable(spark, dir).count() === 30L)
+  }
+
+  test("copy-on-write DELETE on a stats-tracked lake: census + staged " +
+      "rewrite + grouped stats = 3 actions") {
+    val dir = buildStatsLake()
+    val acts = actionsIn {
+      val (_, rewritten, dropped, deleted) =
+        LakeSink.deleteWhere(spark, dir, col("k") === 5L)
+      assert(rewritten === 1 && dropped === 0 && deleted === 1L)
+    }
+    assert(acts === 3,
+      s"copy-on-write delete ran $acts actions — expected the grouped " +
+        "census over the one stats-surviving segment, one staged " +
+        "rewrite and one grouped stats job")
+    assert(LakeSink.readTable(spark, dir).count() === 29L)
+  }
+
+  test("cdc DELETE: census + delete images + staged rewrite = 3 actions") {
+    val dir = buildNoStatsLake()
+    val acts = actionsIn {
+      LakeSink.deleteWhere(spark, dir, col("k") === 5L, cdc = true)
+    }
+    assert(acts === 3,
+      s"cdc delete ran $acts actions — expected the grouped census, " +
+        "one delete-image write and one staged rewrite")
+    val m = LakeSink.readManifest(dir)
+    val feed = spark.read.parquet(m.cdcSegs.map(s => s"$dir/$s"): _*)
+    assert(feed.count() === 1L)
+    assert(feed.head.getAs[String]("_change_type") === "delete")
+  }
+
   test("cdc star merge writes ALL change images in one action") {
     val dir = buildNoStatsLake()
     val src = Seq((5L, 999L), (15L, 888L)).toDF("k", "v")
