@@ -893,60 +893,50 @@ object LakeSink {
     * tip; segments already written by the stale attempt become orphans
     * for [[vacuum]]. */
   private def tryCommitEdit(outDir: String, base: Manifest,
-      removed: Set[String], added: Seq[String],
-      addedStats: Map[String, Map[String, ColStat]],
-      txn: Option[(String, Long)],
-      cdcSegs: Seq[String] = Nil,
-      dvSets: Map[String, DvRef] = Map.empty,
-      addedParts: Map[String, PartVal] = Map.empty,
-      cdcDropSegs: Seq[String] = Nil,
+      e: SegmentEdit, txn: Option[(String, Long)] = None,
       dataChange: Boolean = true,
       // MERGE WITH SCHEMA EVOLUTION (r15): a (schemaV, schemaJson,
       // colmap) bump riding the SAME CAS as the data edit — the
       // widened schema and the merged rows become visible atomically.
       // Racing schema changes stay true conflicts (the commutes check
       // pins base.schemaV).
-      newSchema: Option[(Long, String, Map[String, String])] = None,
-      // r17: row counts the caller already knows for `added` segments
-      // (DML censuses count them anyway) — commitEditRecord then
-      // records them with ZERO footer reads; segments not listed fall
-      // back to the partition fact or one footer read at the gate.
-      addedRows: Map[String, Long] = Map.empty)
+      newSchema: Option[(Long, String, Map[String, String])] = None)
       : Option[Long] = {
     val baseSegs = base.segs.toSet
     // resolve every added segment's row count ONCE, before the CAS
     // loop (r18, advisor: the commit gate's footer fallback otherwise
     // re-read every added segment's footers on EACH lost race) — same
-    // priority order as the gate: caller-known count, partition fact,
-    // one footer read; unreadable segments record nothing (advisory)
-    val addedRowsFull: Map[String, Long] = added.flatMap { s =>
-      addedRows.get(s).orElse(addedParts.get(s).map(_.rows))
+    // priority order as the gate: caller-known count (`e.addedRows`,
+    // r17: DML censuses count them anyway), partition fact, one footer
+    // read; unreadable segments record nothing (advisory)
+    val addedRowsFull: Map[String, Long] = e.added.flatMap { s =>
+      e.addedRows.get(s).orElse(e.addedParts.get(s).map(_.rows))
         .orElse(try Some(segmentFooterRows(outDir, s))
                 catch { case _: Exception => None })
         .map(s -> _)
     }.toMap
     var tip = base
     while (true) {
-      val segs = tip.segs.filterNot(removed) ++ added
-      val stats = (tip.stats -- removed) ++ addedStats
+      val segs = tip.segs.filterNot(e.removed) ++ e.added
+      val stats = (tip.stats -- e.removed) ++ e.addedStats
       val txns = txn.fold(tip.txns) { case (a, id) => tip.txns + (a -> id) }
-      val dv = (tip.dv -- removed) ++ dvSets
-      val parts = (tip.parts -- removed) ++ addedParts
+      val dv = (tip.dv -- e.removed) ++ e.dvSets
+      val parts = (tip.parts -- e.removed) ++ e.addedParts
       if (commitEditRecord(outDir, tip,
           Manifest(tip.version + 1, tip.maxB, segs,
             newSchema.fold(tip.schemaV)(_._1),
             newSchema.fold(tip.schemaJson)(s => Some(s._2)),
-            stats, txns, tip.expects, cdcSegs,
+            stats, txns, tip.expects, e.cdcSegs,
             dataChange = dataChange, dv = dv,
             colmap = newSchema.fold(tip.colmap)(_._3),
             partSpec = tip.partSpec, parts = parts,
-            cdcDropSegs = cdcDropSegs, bloomCols = tip.bloomCols,
+            cdcDropSegs = e.cdcDrops, bloomCols = tip.bloomCols,
             copied = tip.copied,
             // carry the chain's row counts — a snapshot-interval
             // commit writes FULL state, so omitting them here would
             // silently drop every prior segment's count (r17 review)
-            segRows = (tip.segRows -- removed) ++ addedRowsFull),
-          removed, added, addedStats, dvSets, addedParts))
+            segRows = (tip.segRows -- e.removed) ++ addedRowsFull),
+          e.removed, e.added, e.addedStats, e.dvSets, e.addedParts))
         return Some(tip.version + 1)
       val now = readManifest(outDir)
       val nowSegs = now.segs.toSet
@@ -1657,6 +1647,14 @@ object LakeSink {
       cond: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     analyzedFilter(spark, schema, cond).map(_.condition)
       .flatMap(graft.functions.ParamLiteral.liftComparisons).getOrElse(cond)
+
+  /** A live segment's LIVE rows with zero Spark jobs: its recorded
+    * row count (r18: the segment's, then its partition fact's; the
+    * footer walk is the foreign-writer fallback) minus its DV rows. */
+  private def liveRows(outDir: String, m: Manifest, seg: String): Long =
+    m.segRows.get(seg).orElse(m.parts.get(seg).map(_.rows))
+      .getOrElse(segmentFooterRows(outDir, seg)) -
+      m.dv.get(seg).map(_.rows).getOrElse(0L)
 
   /** Live row count of a segment from its parquet FOOTERS — a
     * driver-side metadata read (no Spark job), used when a proof
@@ -3572,6 +3570,231 @@ object LakeSink {
     (orphans.size, stale.size)
   }
 
+  /** One planning attempt's staged edit — everything a verb needs to
+    * commit it ([[tryCommitEdit]]), or to combine (`++`) with its own
+    * additions in the SAME commit (the [[replaceWhere]] and MERGE
+    * insert moves). Staged segment/DV/cdc files referenced here are
+    * invisible until a manifest CAS lists them; a lost CAS turns them
+    * into [[vacuum]] orphans. `addedRows` carries the row counts the
+    * census already knows, so the commit gate opens no footer;
+    * `rewritten`/`dropped`/`deleted`/`dvWrites` are receipt counts. */
+  private final case class SegmentEdit(
+      removed: Set[String] = Set.empty, added: Seq[String] = Nil,
+      addedStats: Map[String, Map[String, ColStat]] = Map.empty,
+      addedParts: Map[String, PartVal] = Map.empty,
+      addedRows: Map[String, Long] = Map.empty,
+      dvSets: Map[String, DvRef] = Map.empty,
+      cdcSegs: Seq[String] = Nil, cdcDrops: Seq[String] = Nil,
+      rewritten: Int = 0, dropped: Int = 0, deleted: Long = 0L,
+      dvWrites: Int = 0) {
+    def isNoop: Boolean = rewritten == 0 && dropped == 0 && dvWrites == 0
+    def ++(o: SegmentEdit): SegmentEdit = SegmentEdit(
+      removed ++ o.removed, added ++ o.added, addedStats ++ o.addedStats,
+      addedParts ++ o.addedParts, addedRows ++ o.addedRows,
+      dvSets ++ o.dvSets, (cdcSegs ++ o.cdcSegs).distinct,
+      cdcDrops ++ o.cdcDrops, rewritten + o.rewritten,
+      dropped + o.dropped, deleted + o.deleted, dvWrites + o.dvWrites)
+  }
+
+  /** A touched segment's census, counted by its verb: live rows, and
+    * how many of them fire an update and a delete. */
+  private final case class Fires(total: Long, upd: Long, del: Long)
+
+  /** Values of the `__act` column of a [[writeTouched]] frame. */
+  private val ActKeep = 0
+  private val ActUpdate = 1
+  private val ActDelete = 2
+
+  /** Manifest-pruning hints for a DML predicate: the caller's explicit
+    * numeric hint, else every safe hint [[inferPruneHints]] derives
+    * from the predicate's own conjuncts over the tracked and bloom
+    * columns (numeric + string + IS NULL) — SQL DML gets file skipping
+    * for free. Inference runs in LOGICAL space (the predicate and
+    * `schema` speak logical); the hints re-key to the PHYSICAL names
+    * manifest stats live under. `schema` is fetched only if inference
+    * runs. */
+  private def dmlPruneHints(spark: SparkSession, m: Manifest,
+      schema: => org.apache.spark.sql.types.StructType,
+      cond: org.apache.spark.sql.Column,
+      pruneHint: Option[(String, Long, Long)]): Seq[PruneHint] = {
+    val trackedLogical =
+      if (m.colmap.isEmpty) m.trackedCols
+      else m.trackedCols.flatMap(m.logicalOf(_))
+    val bloomLogical = m.bloomCols.flatMap(m.logicalOf(_))
+    (pruneHint match {
+      case Some((c, lo, hi)) => Seq(NumRange(c, lo, hi))
+      case None =>
+        if (trackedLogical.isEmpty && bloomLogical.isEmpty) Nil
+        else inferPruneHints(spark, schema, cond, trackedLogical,
+          bloomLogical)
+    }).map(hintPhysical(_, m))
+  }
+
+  /** THE TOUCHED-SEGMENT WRITER — the write tail DELETE, UPDATE and
+    * MERGE share after their own census and CHECK gates ([[purgeDv]]
+    * uses its copy-on-write half, [[rewriteSegments]]). `touched` lists
+    * (segment, manifest index) with each segment's census in `fires`;
+    * `rows(segs)` is a positional frame over those segments carrying
+    * `__dv_s`/`__dv_f`/`__dv_i`, the action column `__act`
+    * ([[ActKeep]]/[[ActUpdate]]/[[ActDelete]]) and whatever `pre` (the
+    * row as read) and `post` (the row as the statement leaves it,
+    * `pre`'s values on kept rows) read, both named by target column.
+    * Write passes re-scope the path list to exactly the segments they
+    * touch (`__dv_s` is a COMPUTED column — filtering on it would not
+    * prune files), and re-scan instead of caching: a constant number
+    * of full-parallelism scans beats caching an unbounded
+    * multi-segment working set. Per segment:
+    *  - every live row fires delete: it drops by metadata, no write;
+    *  - a strictly partial segment whose fired fraction is within
+    *    `dvMaxFraction` goes MERGE-ON-READ: its fired positions join
+    *    its deletion vector (superseding union — files are immutable)
+    *    and its update-firing rows' post-images append as one new
+    *    segment, so the write cost is O(fired rows). The DV'd source
+    *    keeps its partition fact with the ORIGINAL row count (the DV
+    *    is the liveness correction) and its recorded stats (stale-
+    *    superset bounds stay advisory-sound);
+    *  - every other segment is rewritten COPY-ON-WRITE with the
+    *    post-images of its non-deleted rows (its DV retires with it).
+    * Each kind is ONE staged per-segment write over all its segments
+    * — O(1) jobs in the number of segments. New segments are named
+    * `<prefix><version+1>_<index>[p]_<nonce>`; stats, blooms and row
+    * counts are recorded for each, and the partition fact survives
+    * with the new row count unless an `assigned` column is a fact
+    * column. With `cdcSeg` set, the change images (update pre- and
+    * post-images, delete images) are ONE unioned write into it (Delta's
+    * _change_data move — the only extra IO is the changed rows), run
+    * CONCURRENTLY with the storage stages (disjoint directories) and
+    * settled on every exit. */
+  private def writeTouched(spark: SparkSession, outDir: String,
+      m: Manifest, touched: Seq[(String, Int)], fires: Map[String, Fires],
+      rows: Seq[String] => DataFrame,
+      pre: Seq[org.apache.spark.sql.Column],
+      post: Seq[org.apache.spark.sql.Column],
+      assigned: Set[String], prefix: String, nonce: String,
+      dvMaxFraction: Double, cdcSeg: Option[String]): SegmentEdit = {
+    import org.apache.spark.sql.functions.{col, lit}
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    def act(a: Int) = col("__act") === a
+    val nUpd = touched.map(t => fires(t._1).upd).sum
+    val nDel = touched.map(t => fires(t._1).del).sum
+    val cdcFut = cdcSeg.map(cs => Future {
+      val t = rows(touched.map(_._1))
+      def images(a: Int, cols: Seq[org.apache.spark.sql.Column],
+          change: String) = t.filter(act(a)).select(cols: _*)
+        .withColumn("_change_type", lit(change))
+      val all =
+        (if (nUpd > 0L) Seq(images(ActUpdate, pre, "update_preimage"),
+           images(ActUpdate, post, "update_postimage")) else Nil) ++
+        (if (nDel > 0L) Seq(images(ActDelete, pre, "delete")) else Nil)
+      all.reduceOption(_.unionByName(_)).map { u =>
+        physicalize(u, m).write.mode("append").parquet(s"$outDir/$cs")
+        cs
+      }.toSeq
+    }(scala.concurrent.ExecutionContext.global))
+    val stored = try {
+      val (gone, kept) = touched.partition { case (s, _) =>
+        fires(s).del == fires(s).total }
+      val (mor, cow) = kept.partition { case (s, _) =>
+        val f = fires(s)
+        val fired = f.upd + f.del
+        dvMaxFraction > 0.0 && fired < f.total &&
+          fired <= (f.total * dvMaxFraction).toLong
+      }
+      val dvSets =
+        if (mor.isEmpty) Map.empty[String, DvRef]
+        else {
+          val newDel = rows(mor.map(_._1)).filter(!act(ActKeep))
+            .select(col("__dv_s"), col("__dv_f").as("file_name"),
+              col("__dv_i").as("row_index"))
+          val withOld = mor.map(_._1).filter(m.dv.contains)
+            .foldLeft(newDel) { (acc, s) =>
+              acc.unionByName(readDv(spark,
+                  Seq(s"$outDir/_dv/${m.dv(s).file}"))
+                .withColumn("__dv_s", lit(s))
+                .select(col("__dv_s"), col("file_name"), col("row_index")))
+            }
+          val stage = s"$outDir/_stage_dv_$nonce"
+          val dirs = writeStagedBySegment(withOld, stage, onePerSeg = true)
+          Files.createDirectories(Paths.get(outDir, "_dv"))
+          val refs = mor.map { case (s, i) =>
+            val name = s"dv_${nonce}_$i"
+            Files.move(dirs(s).toPath, Paths.get(outDir, "_dv", name))
+            s -> DvRef(name, m.dv.get(s).map(_.rows).getOrElse(0L) +
+              fires(s).upd + fires(s).del)
+          }.toMap
+          org.apache.commons.io.FileUtils.deleteQuietly(
+            new java.io.File(stage))
+          refs
+        }
+      val morUpd = mor.filter(t => fires(t._1).upd > 0L)
+      val postImages = stageSegments(spark, outDir, m,
+        morUpd.map { case (s, i) =>
+          (s, f"$prefix${m.version + 1}%010d_${i}p_$nonce", fires(s).upd) },
+        assigned, s"$outDir/_stage_post_$nonce") {
+        rows(morUpd.map(_._1)).filter(act(ActUpdate))
+          .select(col("__dv_s") +: post: _*)
+      }
+      val rewrites = rewriteSegments(spark, outDir, m,
+        cow.map { case (s, i) => (s, i, fires(s).total - fires(s).del) },
+        assigned, prefix, nonce) {
+        rows(cow.map(_._1)).filter(!act(ActDelete))
+          .select(col("__dv_s") +: post: _*)
+      }
+      SegmentEdit(removed = gone.map(_._1).toSet, dvSets = dvSets,
+        dropped = gone.size, deleted = nDel, dvWrites = mor.size) ++
+        postImages ++ rewrites
+    } finally cdcFut.foreach(f => Await.ready(f, Duration.Inf))
+    stored.copy(cdcSegs = cdcFut.toSeq.flatMap(Await.result(_, Duration.Inf)))
+  }
+
+  /** The copy-on-write half of [[writeTouched]]: rewrite each
+    * (segment, manifest index, rows written) from ONE staged write of
+    * the `__dv_s`-carrying `frame`, as `<prefix><version+1>_<index>_
+    * <nonce>`; the old segments (and their DVs) retire. */
+  private def rewriteSegments(spark: SparkSession, outDir: String,
+      m: Manifest, segs: Seq[(String, Int, Long)], assigned: Set[String],
+      prefix: String, nonce: String)(frame: => DataFrame): SegmentEdit =
+    stageSegments(spark, outDir, m, segs.map { case (s, i, n) =>
+      (s, f"$prefix${m.version + 1}%010d_${i}_$nonce", n) },
+      assigned, s"$outDir/_stage_cow_$nonce")(frame)
+      .copy(removed = segs.map(_._1).toSet, rewritten = segs.size)
+
+  /** ONE staged per-segment write of the `__dv_s`-carrying `frame`
+    * (logical names) for `targets` (source segment, new segment, rows
+    * written): each staged directory moves to its new name with its
+    * stats (ONE grouped job over the staged bytes), bloom sidecars and
+    * row count, and inherits the source's partition fact with the new
+    * row count unless an `assigned` column is one of its fact columns
+    * (primary or composite). */
+  private def stageSegments(spark: SparkSession, outDir: String,
+      m: Manifest, targets: Seq[(String, String, Long)],
+      assigned: Set[String], stage: String)(frame: => DataFrame)
+      : SegmentEdit = {
+    if (targets.isEmpty) return SegmentEdit()
+    val phys = physicalize(frame, m)
+    val dirs = writeStagedBySegment(phys, stage)
+    val tracked = m.trackedCols
+    val stats =
+      if (tracked.isEmpty) Map.empty[String, Map[String, ColStat]]
+      else segmentStatsGrouped(readStaged(spark, stage, phys.schema), tracked)
+    val edit = targets.foldLeft(SegmentEdit()) { case (e, (src, seg, n)) =>
+      // a target always has rows to write (a segment whose every row
+      // goes drops by metadata instead): a missing staged dir is an
+      // invariant violation — fail loud
+      Files.move(dirs(src).toPath, Paths.get(outDir, seg))
+      writeSegmentBlooms(spark, outDir, seg, m.bloomCols, Some(n))
+      val fact = m.parts.get(src).filterNot(_.facts.exists { case (c, _) =>
+        m.logicalOf(c).exists(assigned) })
+      e.copy(added = e.added :+ seg,
+        addedStats = e.addedStats ++ stats.get(src).map(seg -> _),
+        addedParts = e.addedParts ++ fact.map(pv => seg -> pv.copy(rows = n)),
+        addedRows = e.addedRows + (seg -> n))
+    }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
+    edit
+  }
+
   /** Row-level DELETE, copy-on-write — the verb that completes the
     * lake protocol (ingest / compact / time-travel / vacuum / delete;
     * Delta's DELETE works the same way). Per live segment: rows
@@ -3634,24 +3857,6 @@ object LakeSink {
     * [[dmlMaxAttempts]] straight losses. Never a lost update: every
     * commit lands via the CAS against a tip whose segments the staged
     * edit provably read-or-commutes-with. */
-  /** One planning attempt's staged DELETE edit — everything a caller
-    * needs to commit it (or combine it with its own additions in the
-    * SAME commit, the [[replaceWhere]] move). Staged segment/DV/cdc
-    * files referenced here are invisible until a manifest CAS lists
-    * them; a lost CAS turns them into [[vacuum]] orphans. */
-  private final case class DeleteEdit(
-      removed: Set[String], added: Seq[String],
-      addedStats: Map[String, Map[String, ColStat]],
-      addedParts: Map[String, PartVal],
-      dvSets: Map[String, DvRef],
-      cdcSeg: String, cdcRows: Boolean, cdcDrops: Seq[String],
-      rewritten: Int, dropped: Int, deleted: Long, dvWrites: Int,
-      // r17: per-added-segment row counts the census already knows —
-      // the commit gate records them with zero footer reads
-      addedRows: Map[String, Long] = Map.empty) {
-    def isNoop: Boolean = rewritten == 0 && dropped == 0 && dvWrites == 0
-  }
-
   def deleteWhere(spark: SparkSession, outDir: String,
       cond: org.apache.spark.sql.Column,
       pruneHint: Option[(String, Long, Long)] = None,
@@ -3676,12 +3881,7 @@ object LakeSink {
         cdc, dvMaxFraction, nonce)
       if (e.isNoop) return (m.version, 0, 0, 0L)
       beforeCommit()
-      tryCommitEdit(outDir, m, e.removed, e.added, e.addedStats, None,
-        cdcSegs = if (e.cdcRows) Seq(e.cdcSeg) else Nil,
-        dvSets = e.dvSets,
-        addedParts = e.addedParts,
-        cdcDropSegs = e.cdcDrops,
-        addedRows = e.addedRows) match {
+      tryCommitEdit(outDir, m, e) match {
         case Some(v) => return (v, e.rewritten, e.dropped, e.deleted)
         case None => // true conflict — re-plan against the new tip
       }
@@ -3705,296 +3905,124 @@ object LakeSink {
       m: Manifest, condOpt: Option[org.apache.spark.sql.Column],
       pruneHint: Option[(String, Long, Long)],
       cdc: Boolean, dvMaxFraction: Double,
-      nonce: String): DeleteEdit = {
+      nonce: String): SegmentEdit = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
-    val cdcSeg = s"seg_cdc_d$nonce"
+    val cdcSeg = if (cdc) Some(s"seg_cdc_d$nonce") else None
+    // one schema fetch per attempt (a recorded-schema lake parses it
+    // from the manifest — zero jobs; a schema-less lake pays ONE
+    // footer read, not one per use)
+    lazy val schemaOnce = tableSchema(spark, outDir, m)
+    lazy val cols = schemaOnce.fieldNames.toSeq.map(col)
+    def liveOf(seg: String): Long = liveRows(outDir, m, seg)
     condOpt match {
       case None =>
-        var dropped = 0
-        var deleted = 0L
-        var cdcRows = false
-        val removed = Set.newBuilder[String]
-        val cdcDrops = Seq.newBuilder[String]
-        m.segs.foreach { seg =>
-          // manifest-carried count first (r18) — the footer walk is
-          // the foreign-writer fallback, not the steady-state path
-          val live = m.segRows.getOrElse(seg,
-            segmentFooterRows(outDir, seg)) -
-            m.dv.get(seg).map(_.rows).getOrElse(0L)
-          if (cdc && m.dv.contains(seg)) {
-            physicalize(readSegments(spark, outDir, m, Seq(seg))
-              .withColumn("_change_type", lit("delete")), m)
-              .write.mode("append").parquet(s"$outDir/$cdcSeg")
-            cdcRows = true
-          } else if (cdc) cdcDrops += seg
-          dropped += 1
-          removed += seg
-          deleted += live
-        }
-        return DeleteEdit(removed.result(), Nil, Map.empty, Map.empty,
-          Map.empty, cdcSeg, cdcRows, cdcDrops.result(),
-          0, dropped, deleted, 0)
+        // plain segments ride `cdcdrop=`; under cdc a DV-carrying
+        // segment goes through the writer, which drops it by metadata
+        // and writes its LIVE rows as explicit delete images (its dead
+        // rows must not re-enter the feed)
+        val (imaged, plain) = m.segs.zipWithIndex.partition { case (s, _) =>
+          cdc && m.dv.contains(s) }
+        val meta = SegmentEdit(removed = plain.map(_._1).toSet,
+          cdcDrops = if (cdc) plain.map(_._1) else Nil,
+          dropped = plain.size, deleted = plain.map(t => liveOf(t._1)).sum)
+        return if (imaged.isEmpty) meta
+          else meta ++ writeTouched(spark, outDir, m, imaged,
+            imaged.map { case (s, _) => s -> Fires(liveOf(s), 0L, liveOf(s)) }
+              .toMap,
+            ss => readSegmentsWithPos(spark, outDir, m, ss)
+              .withColumn("__act", lit(ActDelete)),
+            cols, cols, Set.empty, "seg_d", nonce, 0.0, cdcSeg)
       case Some(_) =>
     }
     val cond: org.apache.spark.sql.Column = condOpt.get
-    locally {
-      val tracked = m.trackedCols
-      // No explicit hint? Derive ALL safe hints from the predicate's
-      // own conjuncts over the tracked columns (numeric + string +
-      // IS NULL) — SQL DML gets file skipping for free.
-      // Inference runs in LOGICAL space (the predicate and the table
-      // schema speak logical); the resulting hints re-key to the
-      // PHYSICAL names manifest stats live under.
-      val trackedLogical =
-        if (m.colmap.isEmpty) tracked else tracked.flatMap(m.logicalOf(_))
-      // one schema fetch per attempt (a recorded-schema lake parses it
-      // from the manifest — zero jobs; a schema-less lake pays ONE
-      // footer read, not one per use)
-      lazy val schemaOnce = tableSchema(spark, outDir, m)
-      val bloomLogical = m.bloomCols.flatMap(m.logicalOf(_))
-      val hints: Seq[PruneHint] =
-        (pruneHint.map { case (c, lo, hi) => NumRange(c, lo, hi) } match {
-          case Some(h) => Seq(h)
-          case None =>
-            if (trackedLogical.isEmpty && bloomLogical.isEmpty) Nil
-            else inferPruneHints(spark, schemaOnce, cond, trackedLogical,
-              bloomLogical)
-        }).map(hintPhysical(_, m))
-      // Written-segment names carry the caller's per-attempt NONCE:
-      // two racing writers both staging rewrites for version v+1 must
-      // never share a dir — the CAS loser's in-flight write would
-      // silently replace the winner's committed data (the one
-      // corruption the manifest protocol alone cannot see). A stale
-      // attempt's dirs become vacuum orphans.
-      var rewritten = 0
-      var dropped = 0
-      var deleted = 0L
-      val removed = Set.newBuilder[String]
-      val added = Seq.newBuilder[String]
-      val addedStats = Map.newBuilder[String, Map[String, ColStat]]
-      val addedParts = Map.newBuilder[String, PartVal]
-      val addedRows = Map.newBuilder[String, Long]
-      // CHANGE DATA FEED: the deleted rows, written once alongside the
-      // rewrite (Delta's _change_data move) into one per-DML cdc
-      // segment the commit records — the only extra IO is the changed
-      // rows themselves, and [[changesCdcBetween]] never has to diff
-      // snapshots. Orphaned on a lost CAS like any staged rewrite.
-      var cdcRows = false
-      val dvSets = Map.newBuilder[String, DvRef]
-      var dvWrites = 0
-      // PARTITION-COVERED planning (zero data jobs): each segment with
-      // recorded partition facts is decided on the manifest alone
-      // when the predicate references only its fact columns — since
-      // r15 a segment may carry a COMPOSITE fact tuple ((day ×
-      // tenant)-style), so `DELETE WHERE day < cutoff AND tenant = x`
-      // is metadata-only too. One compiled decider per distinct
-      // recorded column SET (mixed sets = partition evolution; each
-      // segment decides under ITS OWN).
-      val deciders = scala.collection.mutable.Map
-        .empty[Seq[String], Option[Map[String, Option[String]] => Boolean]]
-      def deciderFor(cs: Seq[String])
-          : Option[Map[String, Option[String]] => Boolean] =
-        deciders.getOrElseUpdate(cs, partitionDecider(spark,
-          schemaOnce, cond, m, cs))
-      // STATS-PROVEN full match (the partition decider's stats twin):
-      // when every top-level conjunct is provable from a segment's
-      // recorded min/max/null stats, the whole segment drops by
-      // metadata — retention on a stats-tracked time-ordered layout
-      // (streaming ingest with statsCols) without any partition spec.
-      val fullChecks: Option[Seq[Map[String, ColStat] => Boolean]] =
-        if (m.stats.isEmpty) None
-        else inferFullMatchChecks(spark, schemaOnce, cond, m)
-      val cdcDrops = Seq.newBuilder[String]
-      var cdcDropped = false
-      // Metadata ladder per segment, DRIVER-side (zero jobs):
-      // partition-covered decisions, stats-proven full matches, and
-      // hint pruning classify every segment; only the surviving scan
-      // class enters the ONE batched planning job below.
-      val scanSegs = Seq.newBuilder[(String, Int)]
-      m.segs.zipWithIndex.foreach { case (seg, i) =>
-        val pvOpt = m.parts.get(seg)
-        val partDecision: Option[Boolean] =
-          pvOpt.flatMap(pv => deciderFor(pv.facts.map(_._1))
-            .map(f => f(pv.facts.toMap)))
-        val statsFull = partDecision.isEmpty && fullChecks.exists { cs =>
-          val st = m.stats.getOrElse(seg, Map.empty[String, ColStat])
-          st.nonEmpty && cs.forall(c => c(st))
-        }
-        if (partDecision.contains(false)) {
-          // no row of this partition can match — skip, zero jobs
-        } else if (statsFull && (m.dv.get(seg).isEmpty || !cdc)) {
-          // every live row provably matches: metadata-only drop; rows
-          // from the parquet footers (driver-side, no Spark job) minus
-          // any deletion-vector debt. cdcdrop rule as below.
-          dropped += 1
-          removed += seg
-          deleted += m.segRows.getOrElse(seg,
-            segmentFooterRows(outDir, seg)) -
-            m.dv.get(seg).map(_.rows).getOrElse(0L)
-          if (cdc) { cdcDrops += seg; cdcDropped = true }
-        } else if (partDecision.contains(true) &&
-            (m.dv.get(seg).isEmpty || !cdc)) {
-          // EVERY live row matches: metadata-only drop. Row count from
-          // the manifest (minus any deletion-vector debt); with cdc on,
-          // the commit records the dropped segment as its own change
-          // data (`cdcdrop=`) — the feed reads the dead files as
-          // deletes, so even the feed costs this DML zero IO. (A
-          // DV-carrying segment under cdc falls through to the scan
-          // path instead: its dead rows must not re-enter the feed.)
-          dropped += 1
-          removed += seg
-          deleted += pvOpt.get.rows - m.dv.get(seg).map(_.rows).getOrElse(0L)
-          if (cdc) { cdcDrops += seg; cdcDropped = true }
-        } else if (!hints.exists(h => !mayMatchHint(m, outDir, seg, h)))
-          scanSegs += ((seg, i))
+    val hints = dmlPruneHints(spark, m, schemaOnce, cond, pruneHint)
+    // Written-segment names carry the caller's per-attempt NONCE: two
+    // racing writers both staging rewrites for version v+1 must never
+    // share a dir — the CAS loser's in-flight write would silently
+    // replace the winner's committed data (the one corruption the
+    // manifest protocol alone cannot see). A stale attempt's dirs
+    // become vacuum orphans.
+    //
+    // PARTITION-COVERED planning (zero data jobs): each segment with
+    // recorded partition facts is decided on the manifest alone when
+    // the predicate references only its fact columns — since r15 a
+    // segment may carry a COMPOSITE fact tuple ((day × tenant)-style),
+    // so `DELETE WHERE day < cutoff AND tenant = x` is metadata-only
+    // too. One compiled decider per distinct recorded column SET
+    // (mixed sets = partition evolution; each segment decides under
+    // ITS OWN).
+    val deciders = scala.collection.mutable.Map
+      .empty[Seq[String], Option[Map[String, Option[String]] => Boolean]]
+    def deciderFor(cs: Seq[String])
+        : Option[Map[String, Option[String]] => Boolean] =
+      deciders.getOrElseUpdate(cs, partitionDecider(spark,
+        schemaOnce, cond, m, cs))
+    // STATS-PROVEN full match (the partition decider's stats twin):
+    // when every top-level conjunct is provable from a segment's
+    // recorded min/max/null stats, the whole segment drops by metadata
+    // — retention on a stats-tracked time-ordered layout (streaming
+    // ingest with statsCols) without any partition spec.
+    val fullChecks: Option[Seq[Map[String, ColStat] => Boolean]] =
+      if (m.stats.isEmpty) None
+      else inferFullMatchChecks(spark, schemaOnce, cond, m)
+    // Metadata ladder per segment, DRIVER-side (zero jobs): partition-
+    // covered decisions, stats-proven full matches, and hint pruning
+    // classify every segment; only the surviving scan class enters the
+    // ONE batched planning job below.
+    val drops = Seq.newBuilder[String]
+    val scanSegs = Seq.newBuilder[(String, Int)]
+    m.segs.zipWithIndex.foreach { case (seg, i) =>
+      val partDecision: Option[Boolean] = m.parts.get(seg).flatMap(pv =>
+        deciderFor(pv.facts.map(_._1)).map(f => f(pv.facts.toMap)))
+      val statsFull = partDecision.isEmpty && fullChecks.exists { cs =>
+        val st = m.stats.getOrElse(seg, Map.empty[String, ColStat])
+        st.nonEmpty && cs.forall(c => c(st))
       }
-      val scan = scanSegs.result()
-      if (scan.nonEmpty) {
-        // The metadata ladder has read the predicate's literals; the
-        // data passes below run it with its constants as parameters.
-        val rowCond = paramCondition(spark, schemaOnce, cond)
-        // BATCHED PLANNING (r15): the whole scan class counts in ONE
-        // grouped-by-segment job over one DV-reconciling positional
-        // read (counts and predicates see only LIVE rows; the matched
-        // positions are exactly what a merge-on-read write records) —
-        // before r15 this was one sequential Spark job per segment,
-        // the r14 verdict's driver-side O(segments) ceiling. Write
-        // passes re-scan instead of caching: a constant number of
-        // full-parallelism scans beats caching an unbounded
-        // multi-segment working set. (Parameters are not pushed to
-        // parquet row groups; the segment pruning above skips data.)
-        val pos = readSegmentsWithPos(spark, outDir, m, scan.map(_._1))
-        val perSeg = pos.groupBy(col("__dv_s"))
-          .agg(count(lit(1)), count(when(rowCond, lit(1))))
-          .collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        def countsOf(seg: String): (Long, Long) =
-          perSeg.getOrElse(seg, (0L, 0L))
-        val touched = scan.filter { case (seg, _) => countsOf(seg)._2 > 0L }
-        if (touched.nonEmpty) {
-          deleted += touched.map(t => countsOf(t._1)._2).sum
-          // Write passes re-scope the path list to exactly the
-          // segments they touch (`__dv_s` is a COMPUTED column —
-          // filtering on it would not prune files): a 3-segment delete
-          // on a 5000-segment scan set re-reads 3 segments, not 5000.
-          def posOf(segs: Seq[(String, Int)]) =
-            readSegmentsWithPos(spark, outDir, m, segs.map(_._1))
-          // CHANGE DATA FEED: all segments' deleted rows in ONE
-          // write alongside the edit (Delta's _change_data move) —
-          // the only extra IO is the changed rows themselves. Runs
-          // CONCURRENTLY with the storage-strategy stages below
-          // (guide §2.6, r19 session 2 — disjoint directories),
-          // settled on every exit before the edit returns.
-          val cdcFut: Option[scala.concurrent.Future[Unit]] =
-            if (!cdc) None
-            else Some(scala.concurrent.Future {
-              physicalize(posOf(touched)
-                .filter(coalesce(rowCond, lit(false)))
-                .drop("__dv_f", "__dv_i", "__dv_s")
-                .withColumn("_change_type", lit("delete")), m)
-                .write.mode("append").parquet(s"$outDir/$cdcSeg")
-              ()
-            }(scala.concurrent.ExecutionContext.global))
-          try {
-          // Classification from the counts (unchanged rules): a fully-
-          // matching segment drops by metadata; a partial match within
-          // the DV threshold writes a deletion vector; the rest
-          // rewrite copy-on-write.
-          val (fullSegs, partial) = touched.partition { case (seg, _) =>
-            val (total, matches) = countsOf(seg); matches == total }
-          fullSegs.foreach { case (seg, _) => dropped += 1; removed += seg }
-          val (morSegs, cowSegs) = partial.partition { case (seg, _) =>
-            val (total, matches) = countsOf(seg)
-            dvMaxFraction > 0.0 &&
-              matches <= (total * dvMaxFraction).toLong
-          }
-          if (morSegs.nonEmpty) {
-            // MERGE-ON-READ point deletes, batched: ALL segments'
-            // matched positions (each unioned with the segment's
-            // previous DV — files are immutable, a new delete
-            // supersedes) land via ONE staged per-segment write —
-            // total write cost O(deleted rows), total job cost O(1).
-            // At 100 TB this turns a GDPR-style few-row delete from a
-            // rewrite into kilobyte writes; readers reconcile,
-            // OPTIMIZE applies physically, vacuum GCs superseded
-            // files. Stats stay as recorded: a DV only narrows the
-            // true bounds, so stale min/max remain advisory-sound.
-            val newDel = posOf(morSegs).filter(coalesce(rowCond, lit(false)))
-              .select(col("__dv_s"), col("__dv_f").as("file_name"),
-                col("__dv_i").as("row_index"))
-            val withOld = morSegs.map(_._1).filter(m.dv.contains)
-              .foldLeft(newDel) { (acc, s) =>
-                acc.unionByName(readDv(spark,
-                    Seq(s"$outDir/_dv/${m.dv(s).file}"))
-                  .withColumn("__dv_s", lit(s))
-                  .select(col("__dv_s"), col("file_name"),
-                    col("row_index")))
-              }
-            val dvStage = s"$outDir/_stage_dvd_$nonce"
-            val dvDirs = writeStagedBySegment(withOld, dvStage,
-              onePerSeg = true)
-            java.nio.file.Files.createDirectories(
-              java.nio.file.Paths.get(outDir, "_dv"))
-            morSegs.foreach { case (seg, i) =>
-              val dvName = s"dv_${nonce}_$i"
-              java.nio.file.Files.move(dvDirs(seg).toPath,
-                java.nio.file.Paths.get(outDir, "_dv", dvName))
-              dvSets += seg -> DvRef(dvName,
-                m.dv.get(seg).map(_.rows).getOrElse(0L) +
-                  countsOf(seg)._2)
-              dvWrites += 1
-            }
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(dvStage))
-          }
-          if (cowSegs.nonEmpty) {
-            // Copy-on-write rewrites, batched through ONE staged
-            // per-segment write plus ONE grouped stats job, path-
-            // scoped to exactly the CoW segments. keep = NOT TRUE,
-            // i.e. FALSE or NULL — SQL DELETE keeps NULL-predicate
-            // rows.
-            val keep = posOf(cowSegs).filter(!coalesce(rowCond, lit(false)))
-              .drop("__dv_f", "__dv_i")
-            val cowStage = s"$outDir/_stage_cowd_$nonce"
-            val keepPhys = physicalize(keep, m)
-            val cowDirs = writeStagedBySegment(keepPhys, cowStage)
-            val cowStats =
-              if (tracked.isEmpty) Map.empty[String, Map[String, ColStat]]
-              else segmentStatsGrouped(
-                readStaged(spark, cowStage, keepPhys.schema), tracked)
-            cowSegs.foreach { case (seg, i) =>
-              val newSeg = f"seg_d${m.version + 1}%010d_${i}_$nonce"
-              java.nio.file.Files.move(cowDirs(seg).toPath,
-                java.nio.file.Paths.get(outDir, newSeg))
-              rewritten += 1
-              removed += seg
-              added += newSeg
-              cowStats.get(seg).foreach(st => addedStats += newSeg -> st)
-              writeSegmentBlooms(spark, outDir, newSeg, m.bloomCols)
-              // a delete-rewrite keeps a SUBSET of the segment's rows,
-              // so the partition fact survives with the new count
-              val (total, matches) = countsOf(seg)
-              m.parts.get(seg).foreach(pv => addedParts +=
-                newSeg -> pv.copy(rows = total - matches))
-              addedRows += newSeg -> (total - matches)
-            }
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(cowStage))
-          }
-          } finally cdcFut.foreach(f => scala.concurrent.Await.ready(
-            f, scala.concurrent.duration.Duration.Inf))
-          cdcFut.foreach { f =>
-            scala.concurrent.Await.result(f,
-              scala.concurrent.duration.Duration.Inf)
-            cdcRows = true // touched is non-empty: the images have rows
-          }
-        }
-      }
-      DeleteEdit(removed.result(), added.result(), addedStats.result(),
-        addedParts.result(), dvSets.result(), cdcSeg, cdcRows,
-        if (cdcDropped) cdcDrops.result() else Nil,
-        rewritten, dropped, deleted, dvWrites, addedRows.result())
+      if (partDecision.contains(false)) {
+        // no row of this partition can match — skip, zero jobs
+      } else if ((statsFull || partDecision.contains(true)) &&
+          (m.dv.get(seg).isEmpty || !cdc)) {
+        // EVERY live row provably matches: metadata-only drop, rows
+        // from the manifest minus any deletion-vector debt; with cdc
+        // on, the commit records the dropped segment as its own change
+        // data (`cdcdrop=`) — the feed reads the dead files as deletes,
+        // so even the feed costs this DML zero IO. (A DV-carrying
+        // segment under cdc falls through to the scan path instead:
+        // its dead rows must not re-enter the feed.)
+        drops += seg
+      } else if (!hints.exists(h => !mayMatchHint(m, outDir, seg, h)))
+        scanSegs += ((seg, i))
     }
+    val dropped = drops.result()
+    val meta = SegmentEdit(removed = dropped.toSet,
+      cdcDrops = if (cdc) dropped else Nil, dropped = dropped.size,
+      deleted = dropped.map(liveOf).sum)
+    val scan = scanSegs.result()
+    if (scan.isEmpty) return meta
+    // The metadata ladder has read the predicate's literals; the data
+    // passes below run it with its constants as parameters.
+    val matched = coalesce(paramCondition(spark, schemaOnce, cond), lit(false))
+    // BATCHED PLANNING (r15): the whole scan class counts in ONE
+    // grouped-by-segment job over one DV-reconciling positional read
+    // (counts and predicates see only LIVE rows; the matched positions
+    // are exactly what a merge-on-read write records) — before r15
+    // this was one sequential Spark job per segment, the r14 verdict's
+    // driver-side O(segments) ceiling. (Parameters are not pushed to
+    // parquet row groups; the segment pruning above skips data.)
+    val perSeg = readSegmentsWithPos(spark, outDir, m, scan.map(_._1))
+      .groupBy(col("__dv_s"))
+      .agg(count(lit(1)), count(when(matched, lit(1))))
+      .collect()
+      .map(r => r.getString(0) -> Fires(r.getLong(1), 0L, r.getLong(2)))
+      .toMap
+    val touched = scan.filter(t => perSeg.get(t._1).exists(_.del > 0L))
+    if (touched.isEmpty) return meta
+    // SQL DELETE removes only rows where the predicate is TRUE: FALSE
+    // and NULL rows are both kept
+    meta ++ writeTouched(spark, outDir, m, touched, perSeg,
+      ss => readSegmentsWithPos(spark, outDir, m, ss).withColumn("__act",
+        when(matched, lit(ActDelete)).otherwise(lit(ActKeep))),
+      cols, cols, Set.empty, "seg_d", nonce, dvMaxFraction, cdcSeg)
   }
 
   /** Row-level UPDATE, copy-on-write — [[deleteWhere]]'s companion,
@@ -4015,19 +4043,19 @@ object LakeSink {
     * strictly partial — a fully-matching segment writes the same
     * bytes either way, so it stays a rewrite) is NOT rewritten;
     * instead the matched positions join the segment's deletion
-    * vector (superseding union, exactly the delete path) and the
-    * POST-IMAGE rows are appended as new segments — the write cost
-    * is O(updated rows), not O(segment rows). Post-images are
-    * grouped by their surviving partition fact (an update keeps the
-    * row's partition value unless the partition column itself is
-    * assigned), one appended segment per group, so partition
-    * pruning and metadata-only retention keep working on the moved
-    * rows; DV'd source segments keep their fact with the original
-    * row count (the DV is the liveness correction, exactly the
-    * delete-DV rule). Readers reconcile at scan, OPTIMIZE applies
-    * DVs physically, vacuum GCs superseded files; the CDC images
-    * are identical to the copy-on-write path's, so a feed consumer
-    * cannot tell which storage strategy served an update. */
+    * vector and the POST-IMAGE rows append as one new segment per
+    * source segment — the write cost is O(updated rows), not
+    * O(segment rows). Both storage strategies are the shared
+    * touched-segment writer's ([[writeTouched]], DELETE's and
+    * MERGE's too): rewrites and post-images keep the partition fact
+    * (with their own row count) unless a fact column is assigned, so
+    * partition pruning and metadata-only retention keep working on
+    * the moved rows; DV'd source segments keep their fact with the
+    * original row count (the DV is the liveness correction).
+    * Readers reconcile at scan, OPTIMIZE applies DVs physically,
+    * vacuum GCs superseded files; the CDC images are identical to the
+    * copy-on-write path's, so a feed consumer cannot tell which
+    * storage strategy served an update. */
   def updateWhere(spark: SparkSession, outDir: String,
       cond: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column],
@@ -4046,41 +4074,10 @@ object LakeSink {
       val m = readManifest(outDir)
       require(m.segs.nonEmpty, s"lake at $outDir has no committed segments")
       val checks = m.expects.toSeq.sortBy(_._1)
-      val tracked = m.trackedCols
-      // No explicit hint? Derive ALL safe hints from the predicate's
-      // own conjuncts over the tracked columns (numeric + string +
-      // IS NULL) — SQL DML gets file skipping for free.
-      // Inference runs in LOGICAL space (the predicate and the table
-      // schema speak logical); the resulting hints re-key to the
-      // PHYSICAL names manifest stats live under.
-      val trackedLogical =
-        if (m.colmap.isEmpty) tracked else tracked.flatMap(m.logicalOf(_))
-      val bloomLogical = m.bloomCols.flatMap(m.logicalOf(_))
       val schema = tableSchema(spark, outDir, m)
-      val hints: Seq[PruneHint] =
-        (pruneHint.map { case (c, lo, hi) => NumRange(c, lo, hi) } match {
-          case Some(h) => Seq(h)
-          case None =>
-            if (trackedLogical.isEmpty && bloomLogical.isEmpty) Nil
-            else inferPruneHints(spark, schema,
-              cond, trackedLogical, bloomLogical)
-        }).map(hintPhysical(_, m))
+      val hints = dmlPruneHints(spark, m, schema, cond, pruneHint)
       val nonce = java.lang.Long.toHexString(
         java.util.concurrent.ThreadLocalRandom.current().nextLong())
-      var rewritten = 0
-      var updated = 0L
-      val removed = Set.newBuilder[String]
-      val added = Seq.newBuilder[String]
-      val addedStats = Map.newBuilder[String, Map[String, ColStat]]
-      val addedParts = Map.newBuilder[String, PartVal]
-      val addedRows = Map.newBuilder[String, Long]
-      // Change data feed: pre- AND post-images of updated rows (the
-      // Delta CDF update_preimage/update_postimage pair), one cdc
-      // segment per DML, recorded by the commit.
-      val cdcSeg = s"seg_cdc_u$nonce"
-      var cdcRows = false
-      val dvSets = Map.newBuilder[String, DvRef]
-      var dvWrites = 0
       // Metadata pruning stays per segment and DRIVER-side (zero
       // jobs); only the surviving scan set enters the batched read.
       val scanSegs = m.segs.zipWithIndex.filter { case (seg, _) =>
@@ -4101,34 +4098,30 @@ object LakeSink {
       // table touching thousands of segments paid thousands of
       // serial job submissions while the cluster idled).
       // The match flag and every assignment right-hand side are
-      // evaluated against the OLD row inside the same projection,
-      // then the expectations judge the post-image values — CHECK-
-      // constraint semantics on every write path, not just appends.
-      // Registration is NOT VALID (no historical scan), so only rows
-      // this UPDATE writes NEW VALUES for are checked; untouched rows
-      // riding a copy-on-write rewrite are not re-judged.
+      // evaluated against the OLD row inside the same projection (a
+      // chained withColumn would feed already-updated columns into
+      // later assignments), then the expectations judge the post-image
+      // values — CHECK-constraint semantics on every write path, not
+      // just appends. Registration is NOT VALID (no historical scan),
+      // so only rows this UPDATE writes NEW VALUES for are checked;
+      // untouched rows riding a copy-on-write rewrite are not re-judged.
       // Right-hand sides are guarded by the match flag (lazy CaseWhen
       // branch): SQL UPDATE evaluates SET expressions ONLY on
       // matching rows — an RHS that errors on a non-matching row
       // (ANSI division by zero under `WHERE w > 0`, SET `v = x / w`)
       // must not fail the statement. Unmatched rows carry their old
       // values, which the __m-guarded aggregates below never judge.
-      // The write passes re-scan the touched segments
-      // instead of caching: a constant number of full-parallelism
-      // scans beats caching an unbounded multi-segment working set —
-      // per-segment caching was bounded, a batched cache would be the
-      // whole touched byte-range.
+      // The same post-image feeds the writer's rewrites, merge-on-read
+      // appends and CDC images, so a feed consumer cannot tell which
+      // storage strategy served the update.
       // The hints have read the predicate's literals; the data passes
-      // below run it with its constants as parameters.
-      val rowCond = paramCondition(spark, schema, cond)
-      val pos = readSegmentsWithPos(spark, outDir, m, scanSegs.map(_._1))
-      val flagged = pos.select(
-        col("__dv_s") +:
-          coalesce(rowCond, lit(false)).as("__m") +:
-          cols.map(c => assignments.get(c)
-            .map(v => when(coalesce(rowCond, lit(false)), v)
-              .otherwise(col(c)).as(c))
-            .getOrElse(col(c))): _*)
+      // run it with its constants as parameters.
+      val matched = coalesce(paramCondition(spark, schema, cond), lit(false))
+      val post = cols.map(c => assignments.get(c)
+        .map(v => when(matched, v).otherwise(col(c)).as(c))
+        .getOrElse(col(c)))
+      val flagged = readSegmentsWithPos(spark, outDir, m, scanSegs.map(_._1))
+        .select(col("__dv_s") +: matched.as("__m") +: post: _*)
       val aggs = count(lit(1)) +:
         count(when(col("__m"), lit(1))) +:
         checks.map { case (_, sql) =>
@@ -4137,8 +4130,6 @@ object LakeSink {
       val perSeg = flagged.groupBy(col("__dv_s"))
         .agg(aggs.head, aggs.tail: _*)
         .collect().map(r => r.getString(0) -> r).toMap
-      def matchesOf(seg: String): Long =
-        perSeg.get(seg).map(_.getLong(2)).getOrElse(0L)
       // CHECK gate over the WHOLE statement, before any write.
       val bad = checks.zipWithIndex.map { case ((n, _), j) =>
         n -> perSeg.valuesIterator.map(_.getLong(j + 3)).sum }
@@ -4147,172 +4138,19 @@ object LakeSink {
         s"UPDATE at $outDir would write rows violating " +
           "expectation(s): " +
           bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
-      val touched = scanSegs.filter { case (seg, _) => matchesOf(seg) > 0L }
+      val fires = perSeg.map { case (seg, r) =>
+        seg -> Fires(r.getLong(1), r.getLong(2), 0L) }
+      val touched = scanSegs.filter(t => fires.get(t._1).exists(_.upd > 0L))
       if (touched.isEmpty) return (m.version, 0, 0L)
-      updated = touched.map { case (seg, _) => matchesOf(seg) }.sum
-      // Write passes re-scope the path list to exactly the segments
-      // they touch (`__dv_s` is a COMPUTED column — filtering on it
-      // would not prune files): a 3-segment update on a 5000-segment
-      // scan set re-reads 3 segments, not 5000.
-      def posOf(segs: Seq[(String, Int)]) =
-        readSegmentsWithPos(spark, outDir, m, segs.map(_._1))
-      val posT = posOf(touched)
-      // Post-image of the matched rows: every right-hand side against
-      // the OLD row in one projection (chained withColumn would feed
-      // already-updated columns into later assignments) — shared by
-      // the CDC images and the merge-on-read append, so a feed
-      // consumer cannot tell which storage strategy served the update.
-      def matchedPostOf(p: DataFrame) = p.filter(rowCond).select(
-        col("__dv_s") +: cols.map(c =>
-          assignments.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-      // CDC IMAGE UNION (r19 session 2 — the MERGE §1 shape,
-      // finally extended to UPDATE): pre- and post-images were two
-      // separate write actions into the same cdc segment; one unioned
-      // write carries both. It also runs CONCURRENTLY with the
-      // storage-strategy stages below (guide §2.6 — disjoint
-      // directories, both sides read only the census + posT), settled
-      // on every exit before any result is visible.
-      val cdcFut: Option[scala.concurrent.Future[Unit]] =
-        if (!cdc) None
-        else Some(scala.concurrent.Future {
-          physicalize(posT.filter(rowCond).drop("__dv_f", "__dv_i", "__dv_s")
-            .withColumn("_change_type", lit("update_preimage")), m)
-            .unionByName(physicalize(matchedPostOf(posT).drop("__dv_s")
-              .withColumn("_change_type", lit("update_postimage")), m))
-            .write.mode("append").parquet(s"$outDir/$cdcSeg")
-          ()
-        }(scala.concurrent.ExecutionContext.global))
-      try {
-      // Storage-strategy split per segment (unchanged rules): MERGE-
-      // ON-READ when the match fraction is within the threshold and
-      // strictly partial (a fully-matching segment writes the same
-      // bytes either way, so it stays a rewrite); COPY-ON-WRITE else.
-      val (morSegs, cowSegs) = touched.partition { case (seg, _) =>
-        val r = perSeg(seg)
-        val (total, matches) = (r.getLong(1), r.getLong(2))
-        dvMaxFraction > 0.0 && matches < total &&
-          matches <= (total * dvMaxFraction).toLong
-      }
-      if (morSegs.nonEmpty) {
-        // MERGE-ON-READ point updates, batched: ALL segments' matched
-        // positions join their deletion vectors (superseding union:
-        // files are immutable, the exact delete-DV rule) via ONE
-        // staged per-segment write, and ALL post-image rows append as
-        // one new segment per source segment via a second — total
-        // write cost O(updated rows), total job cost O(1). The DV'd
-        // source keeps its partition fact with the ORIGINAL row count
-        // (the DV is the liveness correction) and its recorded stats
-        // (stale-superset bounds stay advisory-sound).
-        val posM = posOf(morSegs)
-        val newDel = posM.filter(coalesce(rowCond, lit(false)))
-          .select(col("__dv_s"), col("__dv_f").as("file_name"),
-            col("__dv_i").as("row_index"))
-        val withOld = morSegs.map(_._1).filter(m.dv.contains)
-          .foldLeft(newDel) { (acc, s) =>
-            acc.unionByName(readDv(spark,
-                Seq(s"$outDir/_dv/${m.dv(s).file}"))
-              .withColumn("__dv_s", lit(s))
-              .select(col("__dv_s"), col("file_name"), col("row_index")))
-          }
-        val dvStage = s"$outDir/_stage_dvu_$nonce"
-        val dvDirs = writeStagedBySegment(withOld, dvStage,
-          onePerSeg = true)
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(outDir, "_dv"))
-        val postStage = s"$outDir/_stage_postu_$nonce"
-        val postPhys = physicalize(matchedPostOf(posM), m)
-        val postDirs = writeStagedBySegment(postPhys, postStage)
-        val postStats =
-          if (tracked.isEmpty) Map.empty[String, Map[String, ColStat]]
-          else segmentStatsGrouped(
-            readStaged(spark, postStage, postPhys.schema), tracked)
-        morSegs.foreach { case (seg, i) =>
-          val dvName = s"dv_${nonce}_$i"
-          java.nio.file.Files.move(dvDirs(seg).toPath,
-            java.nio.file.Paths.get(outDir, "_dv", dvName))
-          dvSets += seg -> DvRef(dvName,
-            m.dv.get(seg).map(_.rows).getOrElse(0L) + matchesOf(seg))
-          dvWrites += 1
-          val postSeg = f"seg_u${m.version + 1}%010d_${i}p_$nonce"
-          java.nio.file.Files.move(postDirs(seg).toPath,
-            java.nio.file.Paths.get(outDir, postSeg))
-          added += postSeg
-          postStats.get(seg).foreach(st => addedStats += postSeg -> st)
-          writeSegmentBlooms(spark, outDir, postSeg, m.bloomCols)
-          // post-image rows keep the row's partition values unless
-          // any fact column (primary or composite) is assigned
-          m.parts.get(seg).foreach { pv =>
-            if (!pv.facts.exists { case (c, _) =>
-                m.logicalOf(c).exists(assignments.contains) })
-              addedParts += postSeg -> pv.copy(rows = matchesOf(seg))
-          }
-          addedRows += postSeg -> matchesOf(seg)
-        }
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(dvStage))
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(postStage))
-      }
-      if (cowSegs.nonEmpty) {
-        // Copy-on-write rewrites, batched: matching rows take their
-        // assignments, non-matching rows pass through bit-identical,
-        // each segment's dv entry (if any) retires with the segment —
-        // ALL rewrites through ONE staged per-segment write plus ONE
-        // grouped stats job over the staged bytes, path-scoped to
-        // exactly the CoW segments.
-        val out = posOf(cowSegs).select(
-          col("__dv_s") +: cols.map { c =>
-            assignments.get(c) match {
-              case Some(v) => when(rowCond, v).otherwise(col(c)).as(c)
-              case None => col(c)
-            }
-          }: _*)
-        val cowStage = s"$outDir/_stage_cowu_$nonce"
-        val outPhys = physicalize(out, m)
-        val cowDirs = writeStagedBySegment(outPhys, cowStage)
-        val cowStats =
-          if (tracked.isEmpty) Map.empty[String, Map[String, ColStat]]
-          else segmentStatsGrouped(
-            readStaged(spark, cowStage, outPhys.schema), tracked)
-        cowSegs.foreach { case (seg, i) =>
-          val newSeg = f"seg_u${m.version + 1}%010d_${i}_$nonce"
-          java.nio.file.Files.move(cowDirs(seg).toPath,
-            java.nio.file.Paths.get(outDir, newSeg))
-          rewritten += 1
-          removed += seg
-          added += newSeg
-          cowStats.get(seg).foreach(st => addedStats += newSeg -> st)
-          writeSegmentBlooms(spark, outDir, newSeg, m.bloomCols)
-          // an update keeps every row; the partition facts survive
-          // unless any fact column (primary or composite) was assigned
-          m.parts.get(seg).foreach { pv =>
-            if (!pv.facts.exists { case (c, _) =>
-                m.logicalOf(c).exists(assignments.contains) })
-              addedParts += newSeg -> pv
-          }
-          // an update keeps every LIVE row (the positional read
-          // reconciled the retiring DV)
-          perSeg.get(seg).foreach(r => addedRows += newSeg -> r.getLong(1))
-        }
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(cowStage))
-      }
-      } finally cdcFut.foreach(f => scala.concurrent.Await.ready(
-        f, scala.concurrent.duration.Duration.Inf))
-      cdcFut.foreach { f =>
-        scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf)
-        cdcRows = true // touched is non-empty, so the images have rows
-      }
-      if (rewritten == 0 && dvWrites == 0) return (m.version, 0, 0L)
+      val e = writeTouched(spark, outDir, m, touched, fires,
+        ss => readSegmentsWithPos(spark, outDir, m, ss).withColumn("__act",
+          when(matched, lit(ActUpdate)).otherwise(lit(ActKeep))),
+        cols.map(col), post, assignments.keySet, "seg_u", nonce,
+        dvMaxFraction, if (cdc) Some(s"seg_cdc_u$nonce") else None)
       beforeCommit()
-      tryCommitEdit(outDir, m, removed.result(), added.result(),
-        addedStats.result(), None,
-        cdcSegs = if (cdcRows) Seq(cdcSeg) else Nil,
-        dvSets = dvSets.result(),
-        addedParts = addedParts.result(),
-        addedRows = addedRows.result()) match {
-        case Some(v) => return (v, rewritten, updated)
+      tryCommitEdit(outDir, m, e) match {
+        case Some(v) =>
+          return (v, e.rewritten, touched.map(t => fires(t._1).upd).sum)
         case None => // true conflict — re-plan against the new tip
       }
     }
@@ -4452,59 +4290,27 @@ object LakeSink {
       val m = readManifest(outDir)
       requireTable(m, outDir)
       if (m.dv.isEmpty) return (m.version, 0)
-      val tracked = m.trackedCols
       val nonce = java.lang.Long.toHexString(
         java.util.concurrent.ThreadLocalRandom.current().nextLong())
-      val removed = Set.newBuilder[String]
-      val added = Seq.newBuilder[String]
-      val addedStats = Map.newBuilder[String, Map[String, ColStat]]
-      val addedParts = Map.newBuilder[String, PartVal]
-      val addedRows = Map.newBuilder[String, Long]
       // BATCHED (r15): ONE DV-reconciling positional read of every
-      // debt-carrying segment, ONE staged per-segment write, ONE
-      // grouped stats job — job cost O(1) in the number of DV'd
-      // segments (was one sequential rewrite job per segment, the
-      // "8 sequential per-segment jobs" shape BASELINE.md's r14 row
-      // measured). Write cost stays O(DV debt): clean segments never
-      // enter the read.
+      // debt-carrying segment through the touched-segment writer's
+      // copy-on-write half — ONE staged per-segment write, ONE grouped
+      // stats job; job cost O(1) in the number of DV'd segments (was
+      // one sequential rewrite job per segment, the "8 sequential
+      // per-segment jobs" shape BASELINE.md's r14 row measured). Write
+      // cost stays O(DV debt): clean segments never enter the read.
+      // The purge makes each DV's correction physical: the rewrite
+      // holds the live rows (recorded rows − DV rows).
       val dvSegs = m.segs.zipWithIndex.filter(t => m.dv.contains(t._1))
-      val pos = readSegmentsWithPos(spark, outDir, m, dvSegs.map(_._1))
-      val stage = s"$outDir/_stage_purge_$nonce"
-      val purgePhys = physicalize(pos.drop("__dv_f", "__dv_i"), m)
-      val dirs = writeStagedBySegment(purgePhys, stage)
-      val stats =
-        if (tracked.isEmpty) Map.empty[String, Map[String, ColStat]]
-        else segmentStatsGrouped(
-          readStaged(spark, stage, purgePhys.schema), tracked)
-      dvSegs.foreach { case (seg, i) =>
-        val dvRef = m.dv(seg)
-        val newSeg = f"seg_p${m.version + 1}%010d_${i}_$nonce"
-        // a DV'd segment always has ≥1 live row (a fully-dead segment
-        // drops by metadata at DML time, never carries a DV) — a
-        // missing staged dir here is an invariant violation, fail loud
-        java.nio.file.Files.move(dirs(seg).toPath,
-          java.nio.file.Paths.get(outDir, newSeg))
-        removed += seg
-        added += newSeg
-        stats.get(seg).foreach(st => addedStats += newSeg -> st)
-        writeSegmentBlooms(spark, outDir, newSeg, m.bloomCols)
-        m.parts.get(seg).foreach { pv =>
-          addedParts += newSeg -> pv.copy(rows = pv.rows - dvRef.rows)
-        }
-        // the purge makes the DV's correction physical: live = old − dv
-        m.segRows.get(seg).foreach(r =>
-          addedRows += newSeg -> (r - dvRef.rows))
+      val e = rewriteSegments(spark, outDir, m, dvSegs.map { case (s, i) =>
+        (s, i, liveRows(outDir, m, s)) },
+        Set.empty, "seg_p", nonce) {
+        readSegmentsWithPos(spark, outDir, m, dvSegs.map(_._1))
+          .drop("__dv_f", "__dv_i")
       }
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(stage))
-      val purged = m.dv.size
       beforeCommit()
-      tryCommitEdit(outDir, m, removed.result(), added.result(),
-        addedStats.result(), None,
-        addedParts = addedParts.result(),
-        dataChange = false,
-        addedRows = addedRows.result()) match {
-        case Some(v) => return (v, purged)
+      tryCommitEdit(outDir, m, e, dataChange = false) match {
+        case Some(v) => return (v, e.rewritten)
         case None => // true conflict — re-plan against the new tip
       }
     }
@@ -4823,8 +4629,8 @@ object LakeSink {
     // protocol; a true conflict (schema/expectations moved — the
     // validation above ran against stale contracts — or our txn
     // landed) re-plans from the top, re-validating under the new state.
-    tryCommitEdit(outDir, m, Set.empty, Seq(seg), segStats, txn,
-      addedRows = Map(seg -> rows)) match {
+    tryCommitEdit(outDir, m, SegmentEdit(added = Seq(seg),
+      addedStats = segStats, addedRows = Map(seg -> rows)), txn) match {
       case Some(v) => v
       case None => appendSegment(spark, outDir,
         df, seg, txn) // tail re-plan; txn guard stops infinite recursion
@@ -4979,8 +4785,8 @@ object LakeSink {
       s"appendPartitioned to $outDir violates expectation(s)")
     if (staged.isEmpty) return (m.version, 0)
     val (segs, addParts, addStats) = staged.get
-    tryCommitEdit(outDir, m, Set.empty, segs, addStats,
-      None, addedParts = addParts) match {
+    tryCommitEdit(outDir, m, SegmentEdit(added = segs,
+      addedStats = addStats, addedParts = addParts)) match {
       case Some(v) => (v, segs.size)
       case None => appendPartitioned(spark, outDir, df) // re-plan
     }
@@ -5193,15 +4999,10 @@ object LakeSink {
         val nonce = java.lang.Long.toHexString(
           java.util.concurrent.ThreadLocalRandom.current().nextLong())
         val e =
-          if (m.segs.isEmpty)
-            DeleteEdit(Set.empty, Nil, Map.empty, Map.empty, Map.empty,
-              s"seg_cdc_d$nonce", cdcRows = false, Nil, 0, 0, 0L, 0)
+          if (m.segs.isEmpty) SegmentEdit()
           else planDeleteEdits(spark, outDir, m, cond, None, cdc,
             dvMaxFraction, nonce)
-        var insSegs: Seq[String] = Nil
-        var insStats: Map[String, Map[String, ColStat]] = Map.empty
-        var insParts: Map[String, PartVal] = Map.empty
-        var insRows: Map[String, Long] = Map.empty
+        var ins = SegmentEdit()
         var inserted = 0L
         m.partSpec match {
           case Some(spec) =>
@@ -5213,7 +5014,8 @@ object LakeSink {
                   "first")))
             stagePartitionedSegments(spark, outDir, m, src,
               partPhys, partCol).foreach { case (segs, parts, stats) =>
-              insSegs = segs; insParts = parts; insStats = stats
+              ins = SegmentEdit(added = segs, addedStats = stats,
+                addedParts = parts)
               inserted = parts.values.map(_.rows).sum
             }
           case None =>
@@ -5229,26 +5031,20 @@ object LakeSink {
               org.apache.commons.io.FileUtils.deleteQuietly(
                 new java.io.File(s"$outDir/$seg"))
             else {
-              insSegs = Seq(seg)
-              insRows = Map(seg -> n)
-              if (m.trackedCols.nonEmpty) insStats = stats
+              ins = SegmentEdit(added = Seq(seg), addedRows = Map(seg -> n),
+                addedStats = if (m.trackedCols.nonEmpty) stats else Map.empty)
               writeSegmentBlooms(spark, outDir, seg, m.bloomCols, Some(n))
             }
         }
-        var cdcRows = e.cdcRows
         if (cdc && inserted > 0L) {
+          // the insert images join the delete edit's cdc segment
+          val cdcSeg = s"seg_cdc_d$nonce"
           physicalize(src.withColumn("_change_type", lit("insert")), m)
-            .write.mode("append").parquet(s"$outDir/${e.cdcSeg}")
-          cdcRows = true
+            .write.mode("append").parquet(s"$outDir/$cdcSeg")
+          ins = ins.copy(cdcSegs = Seq(cdcSeg))
         }
         if (e.isNoop && inserted == 0L) return (m.version, 0, 0, 0L, 0L)
-        tryCommitEdit(outDir, m, e.removed, e.added ++ insSegs,
-          e.addedStats ++ insStats, None,
-          cdcSegs = if (cdcRows) Seq(e.cdcSeg) else Nil,
-          dvSets = e.dvSets,
-          addedParts = e.addedParts ++ insParts,
-          cdcDropSegs = e.cdcDrops,
-          addedRows = e.addedRows ++ insRows) match {
+        tryCommitEdit(outDir, m, e ++ ins) match {
           case Some(v) =>
             return (v, e.rewritten, e.dropped, e.deleted, inserted)
           case None => // true conflict — re-plan against the new tip
@@ -5391,6 +5187,12 @@ object LakeSink {
     * matched-side clause exists (multiple source matches per target
     * row is the SQL MERGE cardinality error).
     *
+    * Touched segments go through the shared touched-segment writer
+    * ([[writeTouched]], DELETE's and UPDATE's too), inside the future
+    * that overlaps the insert pass: a segment whose every live row
+    * fires DELETE drops by metadata (counted as rewritten in the
+    * receipt), rewrites and post-images keep the partition fact unless
+    * a SET assigns a fact column (`UPDATE SET *` assigns every column).
     * `dvMaxFraction > 0` enables MERGE-ON-READ fired clauses (r14,
     * the [[updateWhere]] rule): a segment whose FIRED
     * fraction (update- plus delete-firing rows) is within the
@@ -5479,13 +5281,13 @@ object LakeSink {
           s"column(s): ${missing.toSeq.sorted.mkString(", ")}")
       }
       val src = source.cache()
-      // the touched-segment write passes, run concurrently with the
-      // insert pass (see OVERLAPPED WRITE PASSES below); every shared
-      // var/builder is mutated EITHER inside this future OR after its
-      // Await. Declared outside the try so the finally can settle it on
+      // the touched-segment writer, run concurrently with the insert
+      // pass (see OVERLAPPED WRITE PASSES below); its edit joins the
+      // insert's only after its Await. Declared outside the try so the
+      // finally can settle it on
       // ANY exit — an exception between future creation and the
       // normal-path Await must never leave its writes running detached.
-      var touchedWork: Option[scala.concurrent.Future[Unit]] = None
+      var touchedWork: Option[scala.concurrent.Future[SegmentEdit]] = None
       try {
         // FUSED dup-check + key-range bound (r18): previously two
         // separate aggregate actions over the cached source — one
@@ -5544,7 +5346,6 @@ object LakeSink {
         val nonce = java.lang.Long.toHexString(
           java.util.concurrent.ThreadLocalRandom.current().nextLong())
         val cdcSeg = s"seg_cdc_g$nonce"
-        var cdcRows = false
         // Clause indices: matched-side clauses 0..n-1, NMBS 100+i —
         // one when-chain in list order IS first-match-wins
         val srcM = src.withColumn("__m", lit(1))
@@ -5581,15 +5382,15 @@ object LakeSink {
             case (_, els) => els
           }.cast(f.dataType).as(c)
         }
-        var rewritten = 0
+        // a row-level clause's assignments, for the partition-fact
+        // rule: `UPDATE SET *` assigns every column
+        val assigned: Set[String] = allRw.flatMap {
+          case (MergeClause.Update(_, Some(set)), _) => set.map(_._1)
+          case (MergeClause.Update(_, None), _) => targetCols
+          case _ => Nil
+        }.toSet
         var updated = 0L
         var deleted = 0L
-        val removed = Set.newBuilder[String]
-        val added = Seq.newBuilder[String]
-        val addedStats = Map.newBuilder[String, Map[String, ColStat]]
-        val addedRows = Map.newBuilder[String, Long]
-        val dvSets = Map.newBuilder[String, DvRef]
-        var dvWrites = 0
         // Some(⋯) once a census pass has OBSERVED every possible match
         // (scanned segments + stats-disproved ones): the insert side
         // then needs no second corpus scan. None = no census ran
@@ -5621,14 +5422,9 @@ object LakeSink {
               scanSegs.map(_._1))
             val joinCond = keys.map(k =>
               col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-            // Write passes re-scope the path list to exactly the
-            // segments they touch (`__dv_s` is a COMPUTED column —
-            // filtering on it would not prune files).
             def stagedOf(p: DataFrame) = p.as("t")
               .join(broadcast(srcM).as("s"), joinCond, "left_outer")
               .withColumn("__mc", clauseIdx)
-            def posOf(segs: Seq[(String, Int)]) =
-              readSegmentsWithPos(spark, outDir, m, segs.map(_._1))
             def post = stagedOf(pos).select(col("__dv_s") +:
               col("__mc") +: isM.as("__isM") +:
               struct(keys.map(k => col(s"t.$k")): _*).as("__k") +:
@@ -5699,12 +5495,10 @@ object LakeSink {
               all.filter(tag(_) == 0)
                 .map(r => r.getString(0) -> r).toMap
             } finally perSegAgg.unpersist()
-            def firesOf(seg: String): (Long, Long, Long) =
-              perSeg.get(seg).map(r =>
-                (r.getLong(1), r.getLong(2), r.getLong(3)))
-                .getOrElse((0L, 0L, 0L))
+            val fires = perSeg.map { case (seg, r) =>
+              seg -> Fires(r.getLong(1), r.getLong(2), r.getLong(3)) }
             val touched = scanSegs.filter { case (seg, _) =>
-              val (_, nUpd, nDel) = firesOf(seg); nUpd > 0L || nDel > 0L }
+              fires.get(seg).exists(f => f.upd > 0L || f.del > 0L) }
             if (touched.nonEmpty) {
               // CHECK gate over the WHOLE statement, before any write
               val bad = checks.zipWithIndex.map { case ((n, _), j) =>
@@ -5715,175 +5509,34 @@ object LakeSink {
                   "expectation(s): " +
                   bad.map { case (n, c) => s"$n ($c rows)" }
                     .mkString(", "))
-              val sumUpd = touched.map(t => firesOf(t._1)._2).sum
-              val sumDel = touched.map(t => firesOf(t._1)._3).sum
-              updated += sumUpd
-              deleted += sumDel
-              val tCols = targetCols.map(c => col(s"t.$c").as(c))
-              def stagedT = stagedOf(posOf(touched))
-              // OVERLAPPED WRITE PASSES (r19, guide §2.6): the CDC
-              // images, merge-on-read
-              // stages, and copy-on-write rewrites below are
-              // independent of the INSERT pass (both sides read only
-              // the census result + cached source and write disjoint
-              // directories), so they run on a driver thread while the
-              // insert's observed write proceeds; the insert tail
-              // Awaits this future BEFORE any shared bookkeeping. The
-              // statement-wide CHECK gate above already ran on the
-              // driver thread, before ANY write on either side.
+              updated = touched.map(t => fires(t._1).upd).sum
+              deleted = touched.map(t => fires(t._1).del).sum
+              // OVERLAPPED WRITE PASSES (r19, guide §2.6): the touched-
+              // segment writer's CDC images, merge-on-read stages and
+              // copy-on-write rewrites are independent of the INSERT
+              // pass (both sides read only the census result + cached
+              // source and write disjoint directories), so they run on
+              // a driver thread while the insert's observed write
+              // proceeds; the insert tail Awaits this future BEFORE any
+              // shared bookkeeping. The statement-wide CHECK gate above
+              // already ran on the driver thread, before ANY write on
+              // either side.
               touchedWork = Some(scala.concurrent.Future {
-              if (cdc) {
-                // CDC IMAGE UNION (r19): pre-image, post-image, and
-                // delete images were up to three separate write
-                // actions into the same cdc segment — one unioned
-                // write carries them all (same rows, same files-only
-                // layout; the union branches scan inside ONE job).
-                val images =
-                  (if (sumUpd > 0L) Seq(
-                     stagedT.filter(inIdx(col("__mc"), updIdx))
-                       .select(tCols: _*)
-                       .withColumn("_change_type",
-                         lit("update_preimage")),
-                     stagedT.filter(inIdx(col("__mc"), updIdx))
-                       .select(targetCols.map(newVal): _*)
-                       .withColumn("_change_type",
-                         lit("update_postimage")))
-                   else Nil) ++
-                  (if (sumDel > 0L) Seq(
-                     stagedT.filter(inIdx(col("__mc"), delIdx))
-                       .select(tCols: _*)
-                       .withColumn("_change_type", lit("delete")))
-                   else Nil)
-                physicalize(images.reduce(_.unionByName(_)), m)
-                  .write.mode("append").parquet(s"$outDir/$cdcSeg")
-                cdcRows = true
-              }
-              // Storage-strategy split on the FIRED fraction
-              // (update- plus delete-firing rows; unchanged rules).
-              val (morSegs, cowSegs) = touched.partition { case (seg, _) =>
-                val (total, nUpd, nDel) = firesOf(seg)
-                val fired = nUpd + nDel
-                dvMaxFraction > 0.0 && fired < total &&
-                  fired <= (total * dvMaxFraction).toLong
-              }
-              if (morSegs.nonEmpty) {
-                // MERGE-ON-READ fired clauses, batched: every fired
-                // position joins its segment's DV (superseding union)
-                // via ONE staged per-segment write; only the
-                // update-firing rows carry values forward, as one
-                // appended post-image segment per source segment via a
-                // second. O(fired rows) written, O(1) jobs, files
-                // untouched.
-                val newDel = stagedOf(posOf(morSegs))
-                  .filter(inIdx(col("__mc"), updIdx) ||
-                    inIdx(col("__mc"), delIdx))
-                  .select(col("__dv_s"), col("__dv_f").as("file_name"),
-                    col("__dv_i").as("row_index"))
-                val withOld = morSegs.map(_._1).filter(m.dv.contains)
-                  .foldLeft(newDel) { (acc, s) =>
-                    acc.unionByName(readDv(spark,
-                      Seq(s"$outDir/_dv/${m.dv(s).file}"))
-                      .withColumn("__dv_s", lit(s))
-                      .select(col("__dv_s"), col("file_name"),
-                        col("row_index")))
-                  }
-                val dvStage = s"$outDir/_stage_dvg_$nonce"
-                val dvDirs = writeStagedBySegment(withOld, dvStage,
-                  onePerSeg = true)
-                java.nio.file.Files.createDirectories(
-                  java.nio.file.Paths.get(outDir, "_dv"))
-                morSegs.foreach { case (seg, si) =>
-                  val (_, nUpd, nDel) = firesOf(seg)
-                  val dvName = s"dv_${nonce}_$si"
-                  java.nio.file.Files.move(dvDirs(seg).toPath,
-                    java.nio.file.Paths.get(outDir, "_dv", dvName))
-                  dvSets += seg -> DvRef(dvName,
-                    m.dv.get(seg).map(_.rows).getOrElse(0L) +
-                      nUpd + nDel)
-                  dvWrites += 1
-                }
-                org.apache.commons.io.FileUtils.deleteQuietly(
-                  new java.io.File(dvStage))
-                val morUpd = morSegs.filter(t => firesOf(t._1)._2 > 0L)
-                if (morUpd.nonEmpty) {
-                  val postStage = s"$outDir/_stage_postg_$nonce"
-                  val postPhys = physicalize(stagedOf(posOf(morUpd))
-                    .filter(inIdx(col("__mc"), updIdx))
-                    .select(col("__dv_s") +:
-                      targetCols.map(newVal): _*), m)
-                  val postDirs = writeStagedBySegment(postPhys, postStage)
-                  val postStats =
-                    if (tracked.isEmpty)
-                      Map.empty[String, Map[String, ColStat]]
-                    else segmentStatsGrouped(
-                      readStaged(spark, postStage, postPhys.schema),
-                      tracked)
-                  morUpd.foreach { case (seg, si) =>
-                    val postSeg =
-                      f"seg_g${m.version + 1}%010d_${si}p_$nonce"
-                    java.nio.file.Files.move(postDirs(seg).toPath,
-                      java.nio.file.Paths.get(outDir, postSeg))
-                    added += postSeg
-                    addedRows += postSeg -> firesOf(seg)._2
-                    postStats.get(seg).foreach(st =>
-                      addedStats += postSeg -> st)
-                    writeSegmentBlooms(spark, outDir, postSeg,
-                      m.bloomCols)
-                  }
-                  org.apache.commons.io.FileUtils.deleteQuietly(
-                    new java.io.File(postStage))
-                }
-              }
-              if (cowSegs.nonEmpty) {
-                // Copy-on-write rewrites, batched through ONE staged
-                // per-segment write plus ONE grouped stats job, path-
-                // scoped to exactly the CoW segments.
-                val out = stagedOf(posOf(cowSegs))
-                  .filter(!inIdx(col("__mc"), delIdx))
-                  .select(col("__dv_s") +: targetCols.map(newVal): _*)
-                val cowStage = s"$outDir/_stage_cowg_$nonce"
-                val outPhys = physicalize(out, m)
-                val cowDirs = writeStagedBySegment(outPhys, cowStage)
-                val cowStats =
-                  if (tracked.isEmpty)
-                    Map.empty[String, Map[String, ColStat]]
-                  else segmentStatsGrouped(
-                    readStaged(spark, cowStage, outPhys.schema), tracked)
-                cowSegs.foreach { case (seg, si) =>
-                  cowDirs.get(seg) match {
-                    case Some(d) =>
-                      val newSeg =
-                        f"seg_g${m.version + 1}%010d_${si}_$nonce"
-                      java.nio.file.Files.move(d.toPath,
-                        java.nio.file.Paths.get(outDir, newSeg))
-                      rewritten += 1
-                      removed += seg
-                      added += newSeg
-                      // the rewrite keeps the non-delete-firing rows
-                      addedRows += newSeg ->
-                        (firesOf(seg)._1 - firesOf(seg)._3)
-                      cowStats.get(seg).foreach(st =>
-                        addedStats += newSeg -> st)
-                      writeSegmentBlooms(spark, outDir, newSeg,
-                        m.bloomCols)
-                    case None =>
-                      // every row fired DELETE: the rewrite is empty —
-                      // the staged write produced no directory, so the
-                      // segment simply drops by metadata (counted as a
-                      // rewrite: its content WAS rewritten, to zero)
-                      rewritten += 1
-                      removed += seg
-                  }
-                }
-                org.apache.commons.io.FileUtils.deleteQuietly(
-                  new java.io.File(cowStage))
-              }
-              ()
+                writeTouched(spark, outDir, m, touched, fires,
+                  ss => stagedOf(readSegmentsWithPos(spark, outDir, m, ss))
+                    .withColumn("__act",
+                      when(inIdx(col("__mc"), updIdx), lit(ActUpdate))
+                        .when(inIdx(col("__mc"), delIdx), lit(ActDelete))
+                        .otherwise(lit(ActKeep))),
+                  targetCols.map(c => col(s"t.$c").as(c)),
+                  targetCols.map(newVal), assigned, "seg_g", nonce,
+                  dvMaxFraction, if (cdc) Some(cdcSeg) else None)
               }(scala.concurrent.ExecutionContext.global))
             }
           }
         }
         var inserted = 0L
+        var ins = SegmentEdit()
         if (notMatched.nonEmpty) {
           // insert candidates = source rows with no target match. When
           // a census pass ran it already observed every matched key
@@ -5946,18 +5599,22 @@ object LakeSink {
             Some(s"MERGE into $outDir would insert rows violating " +
               "expectation(s)")))
           insTry.failed.foreach { e =>
-            // a refused (or failed) insert: the touched-segment passes
-            // may already have moved their outputs to final names —
-            // settle them, delete every never-committed output, rethrow
+            // a refused (or failed) insert: the touched-segment writer
+            // may already have moved its outputs to final names —
+            // settle it, delete every never-committed output, rethrow
+            // (a writer that failed itself leaves vacuum orphans)
             touchedWork.foreach(f => scala.concurrent.Await.ready(
               f, scala.concurrent.duration.Duration.Inf))
-            val orphans = (added.result() :+ cdcSeg)
-              .map(s => s"$outDir/$s") ++
-              dvSets.result().values.map(r => s"$outDir/_dv/${r.file}")
+            val done = touchedWork.flatMap(_.value).flatMap(_.toOption)
+              .getOrElse(SegmentEdit())
+            val orphans = (done.added :+ cdcSeg).map(s => s"$outDir/$s") ++
+              done.dvSets.values.map(r => s"$outDir/_dv/${r.file}")
             orphans.foreach(p => org.apache.commons.io.FileUtils
               .deleteQuietly(new java.io.File(p)))
             throw e
           }
+          // the writer's CDC images land in the same cdc segment as the
+          // insert images below: settle it before appending
           touchedWork.foreach(f => scala.concurrent.Await.result(
             f, scala.concurrent.duration.Duration.Inf))
           val (insStats, insN) = insTry.get
@@ -5966,34 +5623,32 @@ object LakeSink {
             org.apache.commons.io.FileUtils.deleteQuietly(
               new java.io.File(s"$outDir/$insSeg"))
           else {
-            added += insSeg
-            addedRows += insSeg -> inserted
             if (cdc) {
               reader(spark, outDir, m).parquet(s"$outDir/$insSeg")
                 .withColumn("_change_type", lit("insert"))
                 .write.mode("append").parquet(s"$outDir/$cdcSeg")
-              cdcRows = true
             }
-            if (tracked.nonEmpty) addedStats ++= insStats
+            ins = SegmentEdit(added = Seq(insSeg),
+              addedRows = Map(insSeg -> inserted),
+              addedStats = if (tracked.nonEmpty) insStats else Map.empty,
+              cdcSegs = if (cdc) Seq(cdcSeg) else Nil)
             writeSegmentBlooms(spark, outDir, insSeg, m.bloomCols,
               Some(inserted))
           }
         }
         // covers the notMatched-empty route (the insert block's own
         // Await did not run); a second Await is a no-op
-        touchedWork.foreach(f => scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf))
+        val e = touchedWork.fold(SegmentEdit())(f =>
+          scala.concurrent.Await.result(
+            f, scala.concurrent.duration.Duration.Inf)) ++ ins
         // a fires-nothing merge commits nothing — including the
         // schema evolution (no rows would carry the new columns)
-        if (rewritten == 0 && dvWrites == 0 && inserted == 0L)
-          return (m0.version, 0, 0L, 0L, 0L)
-        tryCommitEdit(outDir, m0, removed.result(), added.result(),
-          addedStats.result(), txn,
-          cdcSegs = if (cdcRows) Seq(cdcSeg) else Nil,
-          dvSets = dvSets.result(),
-          newSchema = newSchema,
-          addedRows = addedRows.result()) match {
-          case Some(v) => return (v, rewritten, updated, deleted, inserted)
+        if (e.isNoop && inserted == 0L) return (m0.version, 0, 0L, 0L, 0L)
+        tryCommitEdit(outDir, m0, e, txn, newSchema = newSchema) match {
+          // a segment whose every row fired DELETE counts as rewritten
+          // (to zero rows) in the MERGE receipt
+          case Some(v) => return (v, e.rewritten + e.dropped, updated,
+            deleted, inserted)
           case None => // true conflict — re-plan against the new tip
         }
       } finally {

@@ -24,8 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    segment's own files (`cdcdrop=`) at zero DML-time IO, and
   *    vacuum retains those files with the version;
   *  - rewrites inherit the partition fact when they provably keep it
-  *    (delete keeps a subset; update keeps all rows unless it assigns
-  *    the partition column), so later retention stays metadata-only;
+  *    (delete keeps a subset; update and MERGE keep every non-deleted
+  *    row unless they assign a partition column — a star MERGE assigns
+  *    them all), with the live row count, so later retention stays
+  *    metadata-only and exact;
   *  - partition EVOLUTION: changing the spec re-targets future
   *    appends; old segments keep deciding under their own column;
   *  - compaction carries the spec, resets per-segment values, and
@@ -244,6 +246,76 @@ class LakePartitionSpec extends AnyFunSuite with SparkFixture {
     // still correct everywhere
     assert(LakeSink.readTable(spark, dir)
       .filter(col("day") === 5L).count() === 1L)
+  }
+
+  test("copy-on-write update of a DV'd partition segment records the " +
+      "live row count in its fact") {
+    val dir = buildLake()
+    // merge-on-read delete of 1 of day 3's 6 rows: the segment keeps
+    // its files and its fact (rows = 6) plus a one-row DV
+    LakeSink.deleteWhere(spark, dir,
+      col("day") === 3L && col("cents") === 300L, dvMaxFraction = 0.5)
+    assert(LakeSink.readManifest(dir).dv.size === 1)
+    // every live row of day 3 matches: a copy-on-write rewrite that
+    // makes the DV physical — the fact must follow the 5 live rows
+    val (_, rewritten, updated) = LakeSink.updateWhere(spark, dir,
+      col("day") === 3L, Map("cents" -> (col("cents") + 1000L)))
+    assert(rewritten === 1 && updated === 5L)
+    val m = LakeSink.readManifest(dir)
+    val day3 = m.parts.filter(_._2.value.contains("3"))
+    assert(day3.size === 1)
+    val (seg, pv) = day3.head
+    assert(pv.rows === 5L)
+    assert(m.segRows.get(seg) === Some(5L))
+    assert(m.dv.isEmpty)
+    // the metadata-only retention delete reports the live rows
+    val (_, _, dropped, deleted) =
+      LakeSink.deleteWhere(spark, dir, col("day") === 3L)
+    assert(dropped === 1 && deleted === 5L)
+    assert(LakeSink.readTable(spark, dir).count() === 18L)
+  }
+
+  test("MERGE rewrites keep the partition fact unless they assign a " +
+      "fact column; a star MERGE forfeits it") {
+    import LakeSink.MergeClause.{Delete, Update}
+    import spark.implicits._
+    val dir = buildLake()
+    def factOf(day: Long): Option[(String, LakeSink.PartVal)] =
+      LakeSink.readManifest(dir).parts
+        .find(_._2.value.contains(day.toString))
+    // a clause MERGE whose SET skips `day`: day 2's rewrite keeps the
+    // fact with all 6 rows
+    val (_, rw1, upd1, _, _) = LakeSink.mergeClauses(spark, dir,
+      Seq((200L, "zz")).toDF("cents", "user"), Seq("cents"),
+      matched = Seq(Update(None, Some(Seq("user" -> "s.user")))))
+    assert(rw1 === 1 && upd1 === 1L)
+    val (seg2, pv2) = factOf(2L).getOrElse(fail("day 2 lost its fact"))
+    assert(pv2.rows === 6L)
+    assert(LakeSink.readManifest(dir).segRows.get(seg2) === Some(6L))
+    // a delete-firing rewrite keeps the fact with the live count
+    val (_, rw2, _, del2, _) = LakeSink.mergeClauses(spark, dir,
+      Seq(300L, 301L).toDF("cents"), Seq("cents"),
+      matched = Seq(Delete(None)))
+    assert(rw2 === 1 && del2 === 2L)
+    val (seg3, pv3) = factOf(3L).getOrElse(fail("day 3 lost its fact"))
+    assert(pv3.rows === 4L)
+    assert(LakeSink.readManifest(dir).segRows.get(seg3) === Some(4L))
+    // both facts decide a retention delete on the manifest alone
+    var res: (Long, Int, Int, Long) = null
+    val jobs = jobsIn {
+      res = LakeSink.deleteWhere(spark, dir, col("day") >= 2L &&
+        col("day") <= 3L)
+    }
+    assert(jobs === 0)
+    assert(res._3 === 2 && res._4 === 10L)
+    // a star MERGE (UPDATE SET *) assigns every column, `day` included
+    val (_, rw3, upd3, _) = LakeSink.mergeInto(spark, dir,
+      Seq((4L, "zz", 400L)).toDF("day", "user", "cents"), Seq("cents"))
+    assert(rw3 === 1 && upd3 === 1L)
+    assert(factOf(4L).isEmpty)
+    assert(LakeSink.readTable(spark, dir).count() === 12L)
+    assert(LakeSink.readTable(spark, dir)
+      .filter(col("user") === "zz").count() === 1L)
   }
 
   test("partition evolution: future appends split by the new column; " +

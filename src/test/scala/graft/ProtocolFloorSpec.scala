@@ -42,7 +42,10 @@ class ProtocolFloorSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   /** Catalyst actions (QueryExecutions) run by `body`. Listener
-    * delivery is async: poll until stable. */
+    * delivery is async: poll until stable, before `body` too — an
+    * action the test ran just before `body` (building its lake) may
+    * still be queued on the listener bus when the listener registers,
+    * and must not be counted as `body`'s. */
   private def actionsIn(body: => Unit): Int = {
     val n = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -53,14 +56,18 @@ class ProtocolFloorSpec extends AnyFunSuite with SparkFixture {
           qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = { n.incrementAndGet(); () }
     }
-    spark.listenerManager.register(l)
-    try {
-      body
+    def settled(): Int = {
       var last = -1; var cur = n.get(); var polls = 0
       while ((cur != last || polls < 3) && polls < 50) {
         last = cur; Thread.sleep(100); cur = n.get(); polls += 1
       }
       cur
+    }
+    spark.listenerManager.register(l)
+    try {
+      val before = settled()
+      body
+      settled() - before
     } finally spark.listenerManager.unregister(l)
   }
 
