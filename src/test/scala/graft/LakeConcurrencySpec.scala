@@ -217,4 +217,54 @@ class LakeConcurrencySpec extends AnyFunSuite with SparkFixture {
     assert(remaining(dir) === (13 until 20).map(_.toLong).toSet)
     // and no resurrection: the inner delete's rows stayed dead
   }
+
+  // ---- the retry bound ------------------------------------------------
+  // Every re-planning writer gives up after 8 straight losses and names
+  // itself, the table and "consecutive" (tools/CrossProcessCasProbe
+  // backs off on that word). One case per loss discipline.
+
+  test("retry bound, plain CAS: a restore that loses every race stops after 8 attempts") {
+    val dir = vLake("seg_a" -> (0 until 10))
+    LakeSink.appendSegment(spark, dir,
+      (10 until 20).map(_.toLong).toDF("v"), "seg_b")
+    val attempts = new AtomicInteger(0)
+    val e = intercept[RuntimeException] {
+      LakeSink.restoreTable(spark, dir, 1L, beforeCommit = () => {
+        // every attempt: an uncoordinated append takes the version
+        // this restore is about to commit
+        val n = attempts.incrementAndGet()
+        LakeSink.appendSegment(spark, dir,
+          Seq(100L + n).toDF("v"), s"seg_x$n")
+      })
+    }
+    assert(attempts.get() === 8, "the bound is 8 attempts")
+    val msg = String.valueOf(e.getMessage)
+    assert(msg.contains(s"restore at $dir") && msg.contains("consecutive"),
+      msg)
+    // nothing of the restore landed: the 8 appends are the only commits
+    assert(LakeSink.readManifest(dir).version === 10L)
+    assert(remaining(dir) ===
+      ((0 until 20) ++ (101 to 108)).map(_.toLong).toSet)
+  }
+
+  test("retry bound, true conflict: a delete whose base is rewritten every attempt stops after 8") {
+    import org.apache.spark.sql.functions.col
+    val dir = vLake("seg_a" -> (0 until 20))
+    val attempts = new AtomicInteger(0)
+    val e = intercept[RuntimeException] {
+      LakeSink.deleteWhere(spark, dir, col("v") < 5L,
+        beforeCommit = () => {
+          // every attempt: a concurrent delete rewrites the one segment
+          // this delete read — a true conflict, so a full re-plan
+          val n = attempts.incrementAndGet()
+          LakeSink.deleteWhere(spark, dir, col("v") === (20L - n))
+        })
+    }
+    assert(attempts.get() === 8, "the bound is 8 attempts")
+    val msg = String.valueOf(e.getMessage)
+    assert(msg.contains(s"delete at $dir") && msg.contains("consecutive"),
+      msg)
+    // the outer delete never landed; each inner one did
+    assert(remaining(dir) === (0 until 12).map(_.toLong).toSet)
+  }
 }
