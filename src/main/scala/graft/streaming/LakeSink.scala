@@ -724,18 +724,7 @@ object LakeSink {
       addedStats.toSeq.flatMap { case (seg, byCol) =>
         byCol.toSeq.map { case (c, st) => statLine(seg, c, st) }
       }.sorted
-    val md = manifestDir(outDir)
-    Files.createDirectories(md)
-    val tmp = Files.createTempFile(md, s"tmp_v${m.version}-", ".inprogress")
-    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    try {
-      Files.createLink(md.resolve(f"v${m.version}%010d.txt"), tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally {
-      Files.deleteIfExists(tmp)
-    }
+    publishVersion(outDir, m.version, lines)
   }
 
   /** Publish manifest version `v` atomically with FAIL-IF-EXISTS
@@ -766,15 +755,20 @@ object LakeSink {
       copied: Set[String] = Set.empty,
       minReaderFloor: Long = 1L,
       minWriterFloor: Long = 1L,
-      segRows: Map[String, Long] = Map.empty): Boolean = {
+      segRows: Map[String, Long] = Map.empty): Boolean =
+    publishVersion(outDir, v, snapshotLines(maxB, segs, schemaV,
+      schemaJson, stats, txns, expects, cdcSegs, dataChange, dv, colmap,
+      partSpec, parts, cdcDropSegs, bloomCols, copied,
+      minReaderFloor, minWriterFloor, segRows))
+
+  /** The CAS itself: write `lines` to a temp file, hard-link it to
+    * version `v`'s name (false = `v` already taken), drop the temp. */
+  private def publishVersion(outDir: String, v: Long,
+      lines: Seq[String]): Boolean = {
     val md = manifestDir(outDir)
     Files.createDirectories(md)
     val tmp = Files.createTempFile(md, s"tmp_v$v-", ".inprogress")
-    Files.write(tmp, snapshotLines(maxB, segs, schemaV, schemaJson,
-      stats, txns, expects, cdcSegs, dataChange, dv, colmap, partSpec,
-      parts, cdcDropSegs, bloomCols, copied,
-      minReaderFloor, minWriterFloor, segRows).mkString("\n")
-      .getBytes("UTF-8"))
+    Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
     try {
       Files.createLink(md.resolve(f"v$v%010d.txt"), tmp)
       true
@@ -867,10 +861,48 @@ object LakeSink {
         partLines ++ rowsLines ++ dvLines ++ cdcLines ++ copyLines)) ++ segs
   }
 
-  /** Attempts a DML re-plan loop makes before giving up — each retry
-    * costs a full re-plan (reads + rewrites), so a table busy enough to
-    * lose 8 straight races needs coordination, not more retries. */
-  private val dmlMaxAttempts = 8
+  /** A fresh per-attempt name suffix: two racing writers staging
+    * files for the same version must never share a directory. */
+  private def newNonce(): String = java.lang.Long.toHexString(
+    java.util.concurrent.ThreadLocalRandom.current().nextLong())
+
+  /** THE COMMIT LOOP every re-planning writer runs (restore, import,
+    * COPY INTO, DELETE, UPDATE, purge, append, replaceWhere, MERGE and
+    * the ingest stream). Each attempt reads the tip, mints a nonce
+    * ([[newNonce]]) and calls `attemptAt`, which plans, stages and
+    * commits against that tip. It returns Some(receipt) when it
+    * committed or found nothing to do, and None when it lost the race
+    * for good: a plain CAS loss for a verb that commits with
+    * [[commitNext]], [[commitManifest]] or [[commitEditRecord]], or a
+    * TRUE CONFLICT from [[tryCommitEdit]] (whose in-place rebase has
+    * already absorbed every commit that only appended). None re-plans
+    * against the new tip; staged files of the lost attempt are vacuum
+    * orphans unless the verb cleans them up itself.
+    *
+    * The bound: 8 attempts, then one loud error naming the verb and
+    * the table. Each retry costs a full re-plan (reads + rewrites), so
+    * a table busy enough to lose 8 straight races needs coordination,
+    * not more retries. Never a lost update: every commit lands via the
+    * CAS against a tip whose segments the staged edit provably
+    * read-or-commutes-with. Callers that retry on their own match the
+    * word "consecutive" in the error.
+    *
+    * `attemptAt` must not `return` from its enclosing method: a
+    * non-local return is a thrown control exception, which a `try` in
+    * the attempt body could swallow. */
+  private def commitLoop[R](verb: String, outDir: String)(
+      attemptAt: (Manifest, String) => Option[R]): R = {
+    val dmlMaxAttempts = 8
+    var done: Option[R] = None
+    var attempt = 0
+    while (attempt < dmlMaxAttempts && done.isEmpty) {
+      attempt += 1
+      done = attemptAt(readManifest(outDir), newNonce())
+    }
+    done.getOrElse(sys.error(s"$verb at $outDir: $dmlMaxAttempts " +
+      "consecutive lost commits (concurrent writers) — coordinate the " +
+      "writers or retry later"))
+  }
 
   /** OPTIMISTIC-CONCURRENCY commit for copy-on-write DML: publish an
     * edit (drop `removed`, add `added`) computed against `base`, even
@@ -1150,18 +1182,23 @@ object LakeSink {
   private def readDv(spark: SparkSession, paths: Seq[String]) =
     spark.read.schema(dvFileSchema).parquet(paths: _*)
 
-  /** Read a just-staged per-segment directory back with its schema
+  /** Read just-staged per-segment directories back with their schema
     * SUPPLIED (the written frame's data columns, `__dv_s` restored as
     * the string partition column) — the stats re-read over staged
     * bytes was paying a schema-inference pass per verb (r18). The
     * caller passes the exact schema of the frame it just wrote, so
-    * this is identical to inference minus the footer pass. */
+    * this is identical to inference minus the footer pass. The
+    * `__dv_s=<seg>` directories are read by path under `basePath`:
+    * a read of the `_stage_…` root itself would be a path Spark
+    * filters as hidden, and it warns on every such read. */
   private def readStaged(spark: SparkSession, stage: String,
+      dirs: Iterable[java.io.File],
       written: org.apache.spark.sql.types.StructType) =
     spark.read.schema(org.apache.spark.sql.types.StructType(
       written.fields.filterNot(_.name == "__dv_s") :+
         org.apache.spark.sql.types.StructField("__dv_s",
-          org.apache.spark.sql.types.StringType))).parquet(stage)
+          org.apache.spark.sql.types.StringType)))
+      .option("basePath", stage).parquet(dirs.map(_.getPath).toSeq: _*)
 
   /** The table's current schema: the manifest's, or (pre-evolution
     * lakes) the homogeneous segment footer (memoized per written
@@ -2428,9 +2465,9 @@ object LakeSink {
     * need to UNSET a surviving segment's deletion vector, which the
     * delta line format cannot express (`dvec=` only sets). Restores
     * are rare operator actions; O(live segments) metadata is the
-    * simple-correct price. CAS losses follow the DML optimistic-retry
-    * protocol; a cdc image staged by a losing attempt is a vacuum
-    * orphan like any staged rewrite.
+    * simple-correct price. A lost CAS re-plans through [[commitLoop]];
+    * a cdc image staged by a losing attempt is a vacuum orphan like
+    * any staged rewrite.
     *
     * Returns (newVersion, segmentsRestored, segmentsRemoved) —
     * (currentVersion, 0, 0) when the table is already at the target
@@ -2445,10 +2482,7 @@ object LakeSink {
       s"lake at $outDir has no manifest v$toVersion (vacuumed or never " +
         "committed) — the RESTORE horizon is the vacuum retention horizon")
     val t = manifestAt(outDir, toVersion)
-    var attempt = 0
-    while (attempt < dmlMaxAttempts) {
-      attempt += 1
-      val m = readManifest(outDir)
+    commitLoop("restore", outDir) { (m, nonce) =>
       // RESTORE is a write against the TIP (r16): a tip whose declared
       // minWriter exceeds this engine must refuse — committing the
       // restored state would silently drop the future protocol state
@@ -2457,95 +2491,93 @@ object LakeSink {
       require(toVersion <= m.version,
         s"RESTORE target v$toVersion is past the tip v${m.version}")
       if (m.segs == t.segs && m.dv == t.dv && m.schemaV == t.schemaV)
-        return (m.version, 0, 0)
-      val missing = t.segs.filterNot(s =>
-        Files.exists(Paths.get(outDir, s)))
-      require(missing.isEmpty,
-        s"RESTORE to v$toVersion needs vacuumed segments " +
-          missing.mkString(", "))
-      val mSet = m.segs.toSet
-      val tSet = t.segs.toSet
-      val removedSegs = m.segs.filterNot(tSet)
-      val addedSegs = t.segs.filterNot(mSet)
-      val nonce = java.lang.Long.toHexString(
-        java.util.concurrent.ThreadLocalRandom.current().nextLong())
-      val cdcSeg = s"seg_cdc_r$nonce"
-      var cdcRows = false
-      if (cdc) {
-        require(t.schemaV == m.schemaV && t.colmap == m.colmap,
-          s"RESTORE to v$toVersion crosses a schema generation " +
-            s"(${t.schemaV} vs ${m.schemaV}) — change images under two " +
-            "schemas cannot share one feed window; restore with " +
-            "cdc=false and re-snapshot feed consumers")
-        if (removedSegs.nonEmpty) {
-          physicalize(readSegments(spark, outDir, m, removedSegs)
-            .withColumn("_change_type", lit("delete")), m)
-            .write.mode("append").parquet(s"$outDir/$cdcSeg")
-          cdcRows = true
-        }
-        if (addedSegs.nonEmpty) {
-          physicalize(readSegments(spark, outDir, t, addedSegs)
-            .withColumn("_change_type", lit("insert")), t)
-            .write.mode("append").parquet(s"$outDir/$cdcSeg")
-          cdcRows = true
-        }
-        // surviving segments whose DV state differs: positional diff
-        mSet.intersect(tSet).toSeq.sorted
-          .filter(s => m.dv.get(s) != t.dv.get(s)).foreach { seg =>
-            def positions(mm: Manifest): Option[DataFrame] =
-              mm.dv.get(seg).map(r =>
-                readDv(spark, Seq(s"$outDir/_dv/${r.file}")))
-            val raw = reader(spark, outDir, m).parquet(s"$outDir/$seg")
-              .withColumn("__dv_f", col("_metadata.file_name"))
-              .withColumn("__dv_i", col("_metadata.row_index"))
-            // the raw scan already carries PHYSICAL names (cdc files
-            // speak physical, like every file on disk) — no rename seam
-            def imageAt(pos: DataFrame, change: String): Unit = {
-              raw.join(broadcast(pos),
-                  raw("__dv_f") === pos("file_name") &&
-                    raw("__dv_i") === pos("row_index"), "left_semi")
-                .drop("__dv_f", "__dv_i")
-                .withColumn("_change_type", lit(change))
-                .write.mode("append").parquet(s"$outDir/$cdcSeg")
-              cdcRows = true
-            }
-            val posM = positions(m)
-            val posT = positions(t)
-            def diff(a: Option[DataFrame], b: Option[DataFrame])
-                : Option[DataFrame] = a.map { af =>
-              b.fold(af)(bf => af.join(broadcast(bf),
-                af("file_name") === bf("file_name") &&
-                  af("row_index") === bf("row_index"), "left_anti"))
-            }
-            // hidden now, live after restore → the rows come back
-            diff(posM, posT).foreach(p => imageAt(p, "insert"))
-            // live now, hidden after restore → the rows go away
-            diff(posT, posM).foreach(p => imageAt(p, "delete"))
+        Some((m.version, 0, 0))
+      else {
+        val missing = t.segs.filterNot(s =>
+          Files.exists(Paths.get(outDir, s)))
+        require(missing.isEmpty,
+          s"RESTORE to v$toVersion needs vacuumed segments " +
+            missing.mkString(", "))
+        val mSet = m.segs.toSet
+        val tSet = t.segs.toSet
+        val removedSegs = m.segs.filterNot(tSet)
+        val addedSegs = t.segs.filterNot(mSet)
+        val cdcSeg = s"seg_cdc_r$nonce"
+        var cdcRows = false
+        if (cdc) {
+          require(t.schemaV == m.schemaV && t.colmap == m.colmap,
+            s"RESTORE to v$toVersion crosses a schema generation " +
+              s"(${t.schemaV} vs ${m.schemaV}) — change images under two " +
+              "schemas cannot share one feed window; restore with " +
+              "cdc=false and re-snapshot feed consumers")
+          if (removedSegs.nonEmpty) {
+            physicalize(readSegments(spark, outDir, m, removedSegs)
+              .withColumn("_change_type", lit("delete")), m)
+              .write.mode("append").parquet(s"$outDir/$cdcSeg")
+            cdcRows = true
           }
+          if (addedSegs.nonEmpty) {
+            physicalize(readSegments(spark, outDir, t, addedSegs)
+              .withColumn("_change_type", lit("insert")), t)
+              .write.mode("append").parquet(s"$outDir/$cdcSeg")
+            cdcRows = true
+          }
+          // surviving segments whose DV state differs: positional diff
+          mSet.intersect(tSet).toSeq.sorted
+            .filter(s => m.dv.get(s) != t.dv.get(s)).foreach { seg =>
+              def positions(mm: Manifest): Option[DataFrame] =
+                mm.dv.get(seg).map(r =>
+                  readDv(spark, Seq(s"$outDir/_dv/${r.file}")))
+              val raw = reader(spark, outDir, m).parquet(s"$outDir/$seg")
+                .withColumn("__dv_f", col("_metadata.file_name"))
+                .withColumn("__dv_i", col("_metadata.row_index"))
+              // the raw scan already carries PHYSICAL names (cdc files
+              // speak physical, like every file on disk) — no rename seam
+              def imageAt(pos: DataFrame, change: String): Unit = {
+                raw.join(broadcast(pos),
+                    raw("__dv_f") === pos("file_name") &&
+                      raw("__dv_i") === pos("row_index"), "left_semi")
+                  .drop("__dv_f", "__dv_i")
+                  .withColumn("_change_type", lit(change))
+                  .write.mode("append").parquet(s"$outDir/$cdcSeg")
+                cdcRows = true
+              }
+              val posM = positions(m)
+              val posT = positions(t)
+              def diff(a: Option[DataFrame], b: Option[DataFrame])
+                  : Option[DataFrame] = a.map { af =>
+                b.fold(af)(bf => af.join(broadcast(bf),
+                  af("file_name") === bf("file_name") &&
+                    af("row_index") === bf("row_index"), "left_anti"))
+              }
+              // hidden now, live after restore → the rows come back
+              diff(posM, posT).foreach(p => imageAt(p, "insert"))
+              // live now, hidden after restore → the rows go away
+              diff(posT, posM).foreach(p => imageAt(p, "delete"))
+            }
+        }
+        beforeCommit()
+        // a lost CAS re-plans against the new tip
+        Option.when(commitManifest(outDir, m.version + 1, m.maxB, t.segs,
+            t.schemaV, t.schemaJson, t.stats, m.txns, m.expects,
+            cdcSegs = if (cdcRows) Seq(cdcSeg) else Nil,
+            dataChange = true, dv = t.dv, colmap = t.colmap,
+            partSpec = m.partSpec, parts = t.parts,
+            bloomCols = m.bloomCols,
+            // like txns: the load-history ledger is append-only TIP
+            // state — a restore undoes data, not the fact that a
+            // landing-zone file was already ingested (a post-restore
+            // COPY INTO re-run must not duplicate it)
+            copied = m.copied,
+            // never-downgrade (r16): the restored snapshot keeps the
+            // HIGHEST declared minimums seen on the chain — undoing
+            // data must not re-admit writers the tip had fenced out
+            minReaderFloor = math.max(m.minReader, t.minReader),
+            minWriterFloor = math.max(m.minWriter, t.minWriter),
+            segRows = t.segRows))(
+          (m.version + 1, addedSegs.size, removedSegs.size))
       }
-      beforeCommit()
-      if (commitManifest(outDir, m.version + 1, m.maxB, t.segs,
-          t.schemaV, t.schemaJson, t.stats, m.txns, m.expects,
-          cdcSegs = if (cdcRows) Seq(cdcSeg) else Nil,
-          dataChange = true, dv = t.dv, colmap = t.colmap,
-          partSpec = m.partSpec, parts = t.parts,
-          bloomCols = m.bloomCols,
-          // like txns: the load-history ledger is append-only TIP
-          // state — a restore undoes data, not the fact that a
-          // landing-zone file was already ingested (a post-restore
-          // COPY INTO re-run must not duplicate it)
-          copied = m.copied,
-          // never-downgrade (r16): the restored snapshot keeps the
-          // HIGHEST declared minimums seen on the chain — undoing
-          // data must not re-admit writers the tip had fenced out
-          minReaderFloor = math.max(m.minReader, t.minReader),
-          minWriterFloor = math.max(m.minWriter, t.minWriter),
-          segRows = t.segRows))
-        return (m.version + 1, addedSegs.size, removedSegs.size)
-      // lost the CAS — re-plan against the new tip
     }
-    sys.error(s"restore at $outDir: $dmlMaxAttempts consecutive CAS " +
-      "losses (concurrent writers) — coordinate the writers or retry")
   }
 
   /** [[restoreTable]] at [[versionAtOrBefore]]'s resolution — the
@@ -2984,10 +3016,7 @@ object LakeSink {
       Files.isRegularFile(p) &&
         p.getFileName.toString.endsWith(".parquet"))
     require(parts.nonEmpty, s"$srcDir holds no .parquet files")
-    var attempt = 0
-    while (attempt < dmlMaxAttempts) {
-      attempt += 1
-      val m = readManifest(lakeDir)
+    commitLoop("import", lakeDir) { (m, nonce) =>
       require(m.colmap.isEmpty,
         s"lake at $lakeDir has an active column mapping — imported " +
           "files carry logical column names and cannot join a " +
@@ -2999,8 +3028,6 @@ object LakeSink {
           s"imported schema (${imp.mkString(", ")}) does not match " +
             s"table schema (${cur.mkString(", ")}) at $lakeDir")
       }
-      val nonce = java.lang.Long.toHexString(
-        java.util.concurrent.ThreadLocalRandom.current().nextLong())
       val seg = s"seg_imp_$nonce"
       val to = Paths.get(lakeDir, seg)
       Files.createDirectories(to)
@@ -3015,12 +3042,13 @@ object LakeSink {
       if (commitNext(lakeDir, m, m.copy(version = m.version + 1,
           segs = m.segs :+ seg, stats = m.stats ++ stats,
           cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true)))
-        return (m.version + 1, parts.size, rows)
-      // lost the CAS — drop the staged links and re-plan
-      org.apache.commons.io.FileUtils.deleteQuietly(to.toFile)
+        Some((m.version + 1, parts.size, rows))
+      else {
+        // lost the CAS — drop the staged links and re-plan
+        org.apache.commons.io.FileUtils.deleteQuietly(to.toFile)
+        None
+      }
     }
-    sys.error(s"import at $lakeDir: $dmlMaxAttempts consecutive CAS " +
-      "losses (concurrent writers) — coordinate the writers or retry")
   }
 
   /** Load-history identity of one landing-zone file: a short hash of
@@ -3077,10 +3105,7 @@ object LakeSink {
         p.getFileName.toString.endsWith(".parquet"))
     require(parts.nonEmpty, s"$srcDir holds no .parquet files")
     val withIds = parts.map(p => p -> copyId(p))
-    var attempt = 0
-    while (attempt < dmlMaxAttempts) {
-      attempt += 1
-      val m = readManifest(lakeDir)
+    commitLoop("COPY INTO", lakeDir) { (m, _) =>
       require(m.colmap.isEmpty,
         s"lake at $lakeDir has an active column mapping — copied " +
           "files carry logical column names and cannot join a " +
@@ -3089,93 +3114,96 @@ object LakeSink {
       // nothing new → nothing to validate or commit: the no-op re-run
       // an orchestrator fires every tick costs manifest metadata only
       // (CopyLedgerProbe pins 0 Spark jobs, wall flat in ledger size)
-      if (fresh.isEmpty)
-        return (m.version, 0, parts.size, 0L)
-      if (m.segs.nonEmpty || m.schemaJson.isDefined) {
-        val cur = tableSchema(spark, lakeDir, m).fieldNames.toSeq
-        val imp = spark.read.parquet(srcDir).schema.fieldNames.toSeq
-        require(imp == cur,
-          s"copied schema (${imp.mkString(", ")}) does not match " +
-            s"table schema (${cur.mkString(", ")}) at $lakeDir")
-      }
-      // one single-file segment per source file, named by identity —
-      // deterministic, so a crashed prior attempt's orphan dir is
-      // safely re-staged, and CAS-loss retries re-link the same names.
-      // Re-staging must distinguish a stale ORPHAN (crashed attempt —
-      // delete and re-link) from a segment a CONCURRENT copier
-      // committed since `m` was read (r16): that one is LIVE data
-      // whose id the CAS retry will find in the ledger — unlinking it
-      // even briefly breaks readers, and is the first half of the
-      // hung-loader + orchestrator-retry data-loss scenario. Re-read
-      // the tip right before touching disk and skip ids it has
-      // loaded; the commit below still CASes against `m`, so a raced
-      // tip just means one wasted staging pass, never a wrong commit.
-      val tip = readManifest(lakeDir)
-      val tipLive = tip.segs.toSet
-      val staged = fresh.filterNot { case (_, id) =>
-        tip.copied(id) || tipLive(s"seg_cp_$id")
-      }.map { case (p, id) =>
-        val seg = s"seg_cp_$id"
-        val to = Paths.get(lakeDir, seg)
-        val dst = to.resolve(p.getFileName.toString)
-        // NON-DESTRUCTIVE re-stage (r16 review catch): every stager of
-        // this id produces the identical dir (one hard link to the
-        // same source inode), so a dir that ALREADY has exactly that
-        // content is reusable as-is — whether it came from our own
-        // crashed attempt or a concurrent copier that commits between
-        // the tip read above and now. Deleting-then-relinking here
-        // left a window where a crash stranded a committed manifest
-        // pointing at a missing dir; only a dir with WRONG content (a
-        // partial orphan, never committable) is torn down.
-        val reusable = Files.isDirectory(to) && Files.exists(dst) &&
-          Files.isSameFile(dst, p) && listDir(to).size == 1
-        if (!reusable) {
-          org.apache.commons.io.FileUtils.deleteQuietly(to.toFile)
-          Files.createDirectories(to)
-          Files.createLink(dst, p)
+      if (fresh.isEmpty) Some((m.version, 0, parts.size, 0L))
+      else {
+        if (m.segs.nonEmpty || m.schemaJson.isDefined) {
+          val cur = tableSchema(spark, lakeDir, m).fieldNames.toSeq
+          val imp = spark.read.parquet(srcDir).schema.fieldNames.toSeq
+          require(imp == cur,
+            s"copied schema (${imp.mkString(", ")}) does not match " +
+              s"table schema (${cur.mkString(", ")}) at $lakeDir")
         }
-        (seg, id)
+        // one single-file segment per source file, named by identity —
+        // deterministic, so a crashed prior attempt's orphan dir is
+        // safely re-staged, and CAS-loss retries re-link the same names.
+        // Re-staging must distinguish a stale ORPHAN (crashed attempt —
+        // delete and re-link) from a segment a CONCURRENT copier
+        // committed since `m` was read (r16): that one is LIVE data
+        // whose id the CAS retry will find in the ledger — unlinking it
+        // even briefly breaks readers, and is the first half of the
+        // hung-loader + orchestrator-retry data-loss scenario. Re-read
+        // the tip right before touching disk and skip ids it has
+        // loaded; the commit below still CASes against `m`, so a raced
+        // tip just means one wasted staging pass, never a wrong commit.
+        val tip = readManifest(lakeDir)
+        val tipLive = tip.segs.toSet
+        val staged = fresh.filterNot { case (_, id) =>
+          tip.copied(id) || tipLive(s"seg_cp_$id")
+        }.map { case (p, id) =>
+          val seg = s"seg_cp_$id"
+          val to = Paths.get(lakeDir, seg)
+          val dst = to.resolve(p.getFileName.toString)
+          // NON-DESTRUCTIVE re-stage (r16 review catch): every stager of
+          // this id produces the identical dir (one hard link to the
+          // same source inode), so a dir that ALREADY has exactly that
+          // content is reusable as-is — whether it came from our own
+          // crashed attempt or a concurrent copier that commits between
+          // the tip read above and now. Deleting-then-relinking here
+          // left a window where a crash stranded a committed manifest
+          // pointing at a missing dir; only a dir with WRONG content (a
+          // partial orphan, never committable) is torn down.
+          val reusable = Files.isDirectory(to) && Files.exists(dst) &&
+            Files.isSameFile(dst, p) && listDir(to).size == 1
+          if (!reusable) {
+            org.apache.commons.io.FileUtils.deleteQuietly(to.toFile)
+            Files.createDirectories(to)
+            Files.createLink(dst, p)
+          }
+          (seg, id)
+        }
+        // staged.isEmpty: every fresh file was loaded by a concurrent
+        // copier after `m` was read — re-plan; the re-read ledger will
+        // classify them as skips
+        if (staged.isEmpty) None
+        else {
+          val rows = staged.map { case (seg, _) =>
+            segmentFooterRows(lakeDir, seg) }.sum
+          val stats =
+            if (statsCols.isEmpty) Map.empty[String, Map[String, ColStat]]
+            else staged.map { case (seg, _) =>
+              seg -> segmentStats(
+                spark.read.parquet(s"$lakeDir/$seg"), statsCols)
+            }.toMap
+          staged.foreach { case (seg, _) =>
+            writeSegmentBlooms(spark, lakeDir, seg, m.bloomCols) }
+          beforeCommit()
+          if (commitNext(lakeDir, m, m.copy(version = m.version + 1,
+              segs = m.segs ++ staged.map(_._1), stats = m.stats ++ stats,
+              copied = m.copied ++ staged.map(_._2),
+              cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true)))
+            Some((m.version + 1, staged.size,
+              parts.size - staged.size, rows))
+          else {
+            // Lost the CAS — the winner may have COMMITTED some of these
+            // very ids (hung loader + orchestrator retry over one landing
+            // prefix): deleting a dir the new tip references would
+            // permanently break the table — the id is in the ledger, so
+            // no retry ever re-stages it, and the manifest points at
+            // missing files. Delete ONLY dirs the re-read tip references
+            // by neither ledger nor live segment set (r16; same rule as
+            // replaceTableAs: ours-but-unreferenced files are vacuum
+            // orphans at worst).
+            val now = readManifest(lakeDir)
+            val nowLive = now.segs.toSet
+            staged.foreach { case (seg, id) =>
+              if (!now.copied(id) && !nowLive(seg))
+                org.apache.commons.io.FileUtils.deleteQuietly(
+                  Paths.get(lakeDir, seg).toFile) }
+            None
+          }
+        }
       }
-      if (staged.nonEmpty) {
-        val rows = staged.map { case (seg, _) =>
-          segmentFooterRows(lakeDir, seg) }.sum
-        val stats =
-          if (statsCols.isEmpty) Map.empty[String, Map[String, ColStat]]
-          else staged.map { case (seg, _) =>
-            seg -> segmentStats(
-              spark.read.parquet(s"$lakeDir/$seg"), statsCols)
-          }.toMap
-        staged.foreach { case (seg, _) =>
-          writeSegmentBlooms(spark, lakeDir, seg, m.bloomCols) }
-        beforeCommit()
-        if (commitNext(lakeDir, m, m.copy(version = m.version + 1,
-            segs = m.segs ++ staged.map(_._1), stats = m.stats ++ stats,
-            copied = m.copied ++ staged.map(_._2),
-            cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true)))
-          return (m.version + 1, staged.size,
-            parts.size - staged.size, rows)
-        // Lost the CAS — the winner may have COMMITTED some of these
-        // very ids (hung loader + orchestrator retry over one landing
-        // prefix): deleting a dir the new tip references would
-        // permanently break the table — the id is in the ledger, so
-        // no retry ever re-stages it, and the manifest points at
-        // missing files. Delete ONLY dirs the re-read tip references
-        // by neither ledger nor live segment set (r16; same rule as
-        // replaceTableAs: ours-but-unreferenced files are vacuum
-        // orphans at worst).
-        val now = readManifest(lakeDir)
-        val nowLive = now.segs.toSet
-        staged.foreach { case (seg, id) =>
-          if (!now.copied(id) && !nowLive(seg))
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              Paths.get(lakeDir, seg).toFile) }
-      }
-      // staged.isEmpty: every fresh file was loaded by a concurrent
-      // copier after `m` was read — loop; the re-read ledger will
-      // classify them as skips
     }
-    sys.error(s"COPY INTO at $lakeDir: $dmlMaxAttempts consecutive CAS " +
-      "losses (concurrent writers) — coordinate the writers or retry")
   }
 
   /** DESCRIBE DETAIL: one-row table-level summary — current version,
@@ -3777,7 +3805,8 @@ object LakeSink {
     val tracked = m.trackedCols
     val stats =
       if (tracked.isEmpty) Map.empty[String, Map[String, ColStat]]
-      else segmentStatsGrouped(readStaged(spark, stage, phys.schema), tracked)
+      else segmentStatsGrouped(
+        readStaged(spark, stage, dirs.values, phys.schema), tracked)
     val edit = targets.foldLeft(SegmentEdit()) { case (e, (src, seg, n)) =>
       // a target always has rows to write (a segment whose every row
       // goes drops by metadata instead): a missing staged dir is an
@@ -3849,14 +3878,10 @@ object LakeSink {
     * as neither rewritten nor dropped (they survive, minus rows) —
     * the manifest's `dv` entries are the receipt.
     *
-    * CONCURRENCY: a lost manifest race triggers the optimistic retry
-    * protocol ([[tryCommitEdit]]) — commit as-staged when concurrent
-    * commits only appended (this delete serializes before them), full
-    * re-plan against the new tip when a segment this delete read was
-    * itself rewritten (true conflict); abort only after
-    * [[dmlMaxAttempts]] straight losses. Never a lost update: every
-    * commit lands via the CAS against a tip whose segments the staged
-    * edit provably read-or-commutes-with. */
+    * CONCURRENCY: [[commitLoop]] over [[tryCommitEdit]] — commit
+    * as-staged when concurrent commits only appended (this delete
+    * serializes before them), full re-plan when a segment it read was
+    * itself rewritten (true conflict). */
   def deleteWhere(spark: SparkSession, outDir: String,
       cond: org.apache.spark.sql.Column,
       pruneHint: Option[(String, Long, Long)] = None,
@@ -3870,25 +3895,17 @@ object LakeSink {
     // beforeMaintenanceCommit pattern): it runs after each attempt's
     // planning/rewrites and before its commit — the exact window a
     // concurrent writer's commit forces the optimistic retry protocol.
-    var attempt = 0
-    while (attempt < dmlMaxAttempts) {
-      attempt += 1
-      val m = readManifest(outDir)
+    commitLoop("delete", outDir) { (m, nonce) =>
       require(m.segs.nonEmpty, s"lake at $outDir has no committed segments")
-      val nonce = java.lang.Long.toHexString(
-        java.util.concurrent.ThreadLocalRandom.current().nextLong())
       val e = planDeleteEdits(spark, outDir, m, Some(cond), pruneHint,
         cdc, dvMaxFraction, nonce)
-      if (e.isNoop) return (m.version, 0, 0, 0L)
-      beforeCommit()
-      tryCommitEdit(outDir, m, e) match {
-        case Some(v) => return (v, e.rewritten, e.dropped, e.deleted)
-        case None => // true conflict — re-plan against the new tip
+      if (e.isNoop) Some((m.version, 0, 0, 0L))
+      else {
+        beforeCommit()
+        tryCommitEdit(outDir, m, e).map(v =>
+          (v, e.rewritten, e.dropped, e.deleted))
       }
     }
-    sys.error(s"delete at $outDir: $dmlMaxAttempts consecutive true " +
-      "conflicts (concurrent writers rewriting the same segments) — " +
-      "coordinate the writers or retry later")
   }
 
   /** Plan ONE attempt's delete edit against manifest `m` — the whole
@@ -4068,95 +4085,88 @@ object LakeSink {
       s"dvMaxFraction must be in [0,1], got $dvMaxFraction")
     import org.apache.spark.sql.functions.{coalesce, count, expr, col, lit, sum, when}
     require(assignments.nonEmpty, "UPDATE with no assignments")
-    var attempt = 0
-    while (attempt < dmlMaxAttempts) {
-      attempt += 1
-      val m = readManifest(outDir)
+    commitLoop("update", outDir) { (m, nonce) =>
       require(m.segs.nonEmpty, s"lake at $outDir has no committed segments")
       val checks = m.expects.toSeq.sortBy(_._1)
       val schema = tableSchema(spark, outDir, m)
       val hints = dmlPruneHints(spark, m, schema, cond, pruneHint)
-      val nonce = java.lang.Long.toHexString(
-        java.util.concurrent.ThreadLocalRandom.current().nextLong())
       // Metadata pruning stays per segment and DRIVER-side (zero
       // jobs); only the surviving scan set enters the batched read.
       val scanSegs = m.segs.zipWithIndex.filter { case (seg, _) =>
         !hints.exists(h => !mayMatchHint(m, outDir, seg, h)) }
-      if (scanSegs.isEmpty) return (m.version, 0, 0L)
-      val cols = schema.fieldNames.toSeq
-      // A misspelled assignment column must error, not silently no-op.
-      val unknown = assignments.keySet -- cols
-      require(unknown.isEmpty,
-        s"UPDATE assigns column(s) not in table schema: " +
-          unknown.toSeq.sorted.mkString(", "))
-      // BATCHED PLANNING (r15): the whole touched set plans in ONE
-      // grouped-by-segment job over one DV-reconciling positional
-      // read — per segment: total live rows, matching rows, and
-      // per-expectation POST-IMAGE violation counts. Before r15 this
-      // was one sequential Spark job PER SEGMENT (the r14 verdict's
-      // driver-side O(segments) ceiling: a broad UPDATE on a 100 TB
-      // table touching thousands of segments paid thousands of
-      // serial job submissions while the cluster idled).
-      // The match flag and every assignment right-hand side are
-      // evaluated against the OLD row inside the same projection (a
-      // chained withColumn would feed already-updated columns into
-      // later assignments), then the expectations judge the post-image
-      // values — CHECK-constraint semantics on every write path, not
-      // just appends. Registration is NOT VALID (no historical scan),
-      // so only rows this UPDATE writes NEW VALUES for are checked;
-      // untouched rows riding a copy-on-write rewrite are not re-judged.
-      // Right-hand sides are guarded by the match flag (lazy CaseWhen
-      // branch): SQL UPDATE evaluates SET expressions ONLY on
-      // matching rows — an RHS that errors on a non-matching row
-      // (ANSI division by zero under `WHERE w > 0`, SET `v = x / w`)
-      // must not fail the statement. Unmatched rows carry their old
-      // values, which the __m-guarded aggregates below never judge.
-      // The same post-image feeds the writer's rewrites, merge-on-read
-      // appends and CDC images, so a feed consumer cannot tell which
-      // storage strategy served the update.
-      // The hints have read the predicate's literals; the data passes
-      // run it with its constants as parameters.
-      val matched = coalesce(paramCondition(spark, schema, cond), lit(false))
-      val post = cols.map(c => assignments.get(c)
-        .map(v => when(matched, v).otherwise(col(c)).as(c))
-        .getOrElse(col(c)))
-      val flagged = readSegmentsWithPos(spark, outDir, m, scanSegs.map(_._1))
-        .select(col("__dv_s") +: matched.as("__m") +: post: _*)
-      val aggs = count(lit(1)) +:
-        count(when(col("__m"), lit(1))) +:
-        checks.map { case (_, sql) =>
-          sum(when(col("__m") && !coalesce(expr(sql), lit(false)),
-            1L).otherwise(0L)) }
-      val perSeg = flagged.groupBy(col("__dv_s"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map(r => r.getString(0) -> r).toMap
-      // CHECK gate over the WHOLE statement, before any write.
-      val bad = checks.zipWithIndex.map { case ((n, _), j) =>
-        n -> perSeg.valuesIterator.map(_.getLong(j + 3)).sum }
-        .filter(_._2 > 0L)
-      require(bad.isEmpty,
-        s"UPDATE at $outDir would write rows violating " +
-          "expectation(s): " +
-          bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
-      val fires = perSeg.map { case (seg, r) =>
-        seg -> Fires(r.getLong(1), r.getLong(2), 0L) }
-      val touched = scanSegs.filter(t => fires.get(t._1).exists(_.upd > 0L))
-      if (touched.isEmpty) return (m.version, 0, 0L)
-      val e = writeTouched(spark, outDir, m, touched, fires,
-        ss => readSegmentsWithPos(spark, outDir, m, ss).withColumn("__act",
-          when(matched, lit(ActUpdate)).otherwise(lit(ActKeep))),
-        cols.map(col), post, assignments.keySet, "seg_u", nonce,
-        dvMaxFraction, if (cdc) Some(s"seg_cdc_u$nonce") else None)
-      beforeCommit()
-      tryCommitEdit(outDir, m, e) match {
-        case Some(v) =>
-          return (v, e.rewritten, touched.map(t => fires(t._1).upd).sum)
-        case None => // true conflict — re-plan against the new tip
+      if (scanSegs.isEmpty) Some((m.version, 0, 0L))
+      else {
+        val cols = schema.fieldNames.toSeq
+        // A misspelled assignment column must error, not silently no-op.
+        val unknown = assignments.keySet -- cols
+        require(unknown.isEmpty,
+          s"UPDATE assigns column(s) not in table schema: " +
+            unknown.toSeq.sorted.mkString(", "))
+        // BATCHED PLANNING (r15): the whole touched set plans in ONE
+        // grouped-by-segment job over one DV-reconciling positional
+        // read — per segment: total live rows, matching rows, and
+        // per-expectation POST-IMAGE violation counts. Before r15 this
+        // was one sequential Spark job PER SEGMENT (the r14 verdict's
+        // driver-side O(segments) ceiling: a broad UPDATE on a 100 TB
+        // table touching thousands of segments paid thousands of
+        // serial job submissions while the cluster idled).
+        // The match flag and every assignment right-hand side are
+        // evaluated against the OLD row inside the same projection (a
+        // chained withColumn would feed already-updated columns into
+        // later assignments), then the expectations judge the post-image
+        // values — CHECK-constraint semantics on every write path, not
+        // just appends. Registration is NOT VALID (no historical scan),
+        // so only rows this UPDATE writes NEW VALUES for are checked;
+        // untouched rows riding a copy-on-write rewrite are not re-judged.
+        // Right-hand sides are guarded by the match flag (lazy CaseWhen
+        // branch): SQL UPDATE evaluates SET expressions ONLY on
+        // matching rows — an RHS that errors on a non-matching row
+        // (ANSI division by zero under `WHERE w > 0`, SET `v = x / w`)
+        // must not fail the statement. Unmatched rows carry their old
+        // values, which the __m-guarded aggregates below never judge.
+        // The same post-image feeds the writer's rewrites, merge-on-read
+        // appends and CDC images, so a feed consumer cannot tell which
+        // storage strategy served the update.
+        // The hints have read the predicate's literals; the data passes
+        // run it with its constants as parameters.
+        val matched = coalesce(paramCondition(spark, schema, cond), lit(false))
+        val post = cols.map(c => assignments.get(c)
+          .map(v => when(matched, v).otherwise(col(c)).as(c))
+          .getOrElse(col(c)))
+        val flagged = readSegmentsWithPos(spark, outDir, m, scanSegs.map(_._1))
+          .select(col("__dv_s") +: matched.as("__m") +: post: _*)
+        val aggs = count(lit(1)) +:
+          count(when(col("__m"), lit(1))) +:
+          checks.map { case (_, sql) =>
+            sum(when(col("__m") && !coalesce(expr(sql), lit(false)),
+              1L).otherwise(0L)) }
+        val perSeg = flagged.groupBy(col("__dv_s"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect().map(r => r.getString(0) -> r).toMap
+        // CHECK gate over the WHOLE statement, before any write.
+        val bad = checks.zipWithIndex.map { case ((n, _), j) =>
+          n -> perSeg.valuesIterator.map(_.getLong(j + 3)).sum }
+          .filter(_._2 > 0L)
+        require(bad.isEmpty,
+          s"UPDATE at $outDir would write rows violating " +
+            "expectation(s): " +
+            bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
+        val fires = perSeg.map { case (seg, r) =>
+          seg -> Fires(r.getLong(1), r.getLong(2), 0L) }
+        val touched = scanSegs.filter(t => fires.get(t._1).exists(_.upd > 0L))
+        if (touched.isEmpty) Some((m.version, 0, 0L))
+        else {
+          val e = writeTouched(spark, outDir, m, touched, fires,
+            ss => readSegmentsWithPos(spark, outDir, m, ss).withColumn("__act",
+              when(matched, lit(ActUpdate)).otherwise(lit(ActKeep))),
+            cols.map(col), post, assignments.keySet, "seg_u", nonce,
+            dvMaxFraction, if (cdc) Some(s"seg_cdc_u$nonce") else None)
+          beforeCommit()
+          tryCommitEdit(outDir, m, e).map(v =>
+            (v, e.rewritten, touched.map(t => fires(t._1).upd).sum))
+        }
       }
     }
-    sys.error(s"update at $outDir: $dmlMaxAttempts consecutive true " +
-      "conflicts (concurrent writers rewriting the same segments) — " +
-      "coordinate the writers or retry later")
   }
 
   /** MAINTENANCE COMPACTION as a standalone protocol op, with an
@@ -4255,10 +4265,8 @@ object LakeSink {
       // after OPTIMIZE must still skip already-ingested files
       copied = m.copied)),
       s"compaction at $outDir lost a manifest race at v${m.version + 1}")
-    // Input segments stay on disk (DML convention: the pre-compaction
-    // version keeps time-traveling until vacuum) — unlike the
-    // streaming path's eager cleanup, this op follows the
-    // delete/update/merge retention contract.
+    // Input segments stay on disk: the pre-compaction version keeps
+    // time-traveling until vacuum.
     (m.version + 1, m.segs.size)
   }
 
@@ -4283,41 +4291,32 @@ object LakeSink {
     * (committed version, segments purged); a DV-free lake is a
     * no-op. */
   def purgeDv(spark: SparkSession, outDir: String,
-      beforeCommit: () => Unit = () => ()): (Long, Int) = {
-    var attempt = 0
-    while (attempt < dmlMaxAttempts) {
-      attempt += 1
-      val m = readManifest(outDir)
+      beforeCommit: () => Unit = () => ()): (Long, Int) =
+    commitLoop("purge", outDir) { (m, nonce) =>
       requireTable(m, outDir)
-      if (m.dv.isEmpty) return (m.version, 0)
-      val nonce = java.lang.Long.toHexString(
-        java.util.concurrent.ThreadLocalRandom.current().nextLong())
-      // BATCHED (r15): ONE DV-reconciling positional read of every
-      // debt-carrying segment through the touched-segment writer's
-      // copy-on-write half — ONE staged per-segment write, ONE grouped
-      // stats job; job cost O(1) in the number of DV'd segments (was
-      // one sequential rewrite job per segment, the "8 sequential
-      // per-segment jobs" shape BASELINE.md's r14 row measured). Write
-      // cost stays O(DV debt): clean segments never enter the read.
-      // The purge makes each DV's correction physical: the rewrite
-      // holds the live rows (recorded rows − DV rows).
-      val dvSegs = m.segs.zipWithIndex.filter(t => m.dv.contains(t._1))
-      val e = rewriteSegments(spark, outDir, m, dvSegs.map { case (s, i) =>
-        (s, i, liveRows(outDir, m, s)) },
-        Set.empty, "seg_p", nonce) {
-        readSegmentsWithPos(spark, outDir, m, dvSegs.map(_._1))
-          .drop("__dv_f", "__dv_i")
-      }
-      beforeCommit()
-      tryCommitEdit(outDir, m, e, dataChange = false) match {
-        case Some(v) => return (v, e.rewritten)
-        case None => // true conflict — re-plan against the new tip
+      if (m.dv.isEmpty) Some((m.version, 0))
+      else {
+        // BATCHED (r15): ONE DV-reconciling positional read of every
+        // debt-carrying segment through the touched-segment writer's
+        // copy-on-write half — ONE staged per-segment write, ONE grouped
+        // stats job; job cost O(1) in the number of DV'd segments (was
+        // one sequential rewrite job per segment, the "8 sequential
+        // per-segment jobs" shape BASELINE.md's r14 row measured). Write
+        // cost stays O(DV debt): clean segments never enter the read.
+        // The purge makes each DV's correction physical: the rewrite
+        // holds the live rows (recorded rows − DV rows).
+        val dvSegs = m.segs.zipWithIndex.filter(t => m.dv.contains(t._1))
+        val e = rewriteSegments(spark, outDir, m, dvSegs.map { case (s, i) =>
+          (s, i, liveRows(outDir, m, s)) },
+          Set.empty, "seg_p", nonce) {
+          readSegmentsWithPos(spark, outDir, m, dvSegs.map(_._1))
+            .drop("__dv_f", "__dv_i")
+        }
+        beforeCommit()
+        tryCommitEdit(outDir, m, e, dataChange = false).map(v =>
+          (v, e.rewritten))
       }
     }
-    sys.error(s"purge at $outDir: $dmlMaxAttempts consecutive true " +
-      "conflicts (concurrent writers rewriting the same segments) — " +
-      "coordinate the writers or retry later")
-  }
 
   /** PARTITION-PRESERVING compaction: rewrite each partition's small
     * segments into `targetFiles` file(s) PER PARTITION VALUE, keeping
@@ -4349,8 +4348,7 @@ object LakeSink {
         segs.size > 1 || segs.exists(m.dv.contains) }
       .toSeq.sortBy(_._1.toString)
     if (groups.isEmpty) return (m.version, 0)
-    val nonce = java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong())
+    val nonce = newNonce()
     val removed = Set.newBuilder[String]
     val added = Seq.newBuilder[String]
     val addStats = Map.newBuilder[String, Map[String, ColStat]]
@@ -4590,52 +4588,50 @@ object LakeSink {
     * appends carry the wider schema; old readers via time travel never
     * see them. Returns the committed version. */
   def appendSegment(spark: SparkSession, outDir: String, df: DataFrame,
-      seg: String, txn: Option[(String, Long)] = None): Long = {
-    val m = readManifest(outDir)
-    requireTable(m, outDir)
-    // Transactional idempotence (Delta's `txn` action): a writer that
-    // identifies as (appId, batchId) is applied AT MOST ONCE — a
-    // replayed batch whose id is already recorded is a no-op. This is
-    // what upgrades a foreachBatch append/fold sink from
-    // at-least-once to exactly-once: the guard travels IN the same
-    // manifest CAS as the data, so there is no window where the data
-    // committed but the guard did not.
-    txn.foreach { case (app, id) =>
-      if (m.txns.getOrElse(app, Long.MinValue) >= id) return m.version
+      seg: String, txn: Option[(String, Long)] = None): Long =
+    commitLoop("append", outDir) { (m, _) =>
+      requireTable(m, outDir)
+      // Transactional idempotence (Delta's `txn` action): a writer that
+      // identifies as (appId, batchId) is applied AT MOST ONCE — a
+      // replayed batch whose id is already recorded is a no-op. This is
+      // what upgrades a foreachBatch append/fold sink from
+      // at-least-once to exactly-once: the guard travels IN the same
+      // manifest CAS as the data, so there is no window where the data
+      // committed but the guard did not.
+      if (txn.exists { case (app, id) =>
+          m.txns.getOrElse(app, Long.MinValue) >= id })
+        Some(m.version)
+      else {
+        require(!m.segs.contains(seg), s"segment $seg already committed")
+        val expected = tableSchema(spark, outDir, m).fieldNames.toSeq
+        require(df.columns.toSeq == expected,
+          s"appendSegment schema mismatch: got ${df.columns.mkString(",")}, " +
+            s"table is ${expected.mkString(",")}")
+        // FUSED VALIDATE + WRITE + STATS (r18): the expectation gate, the
+        // per-segment stats collection, and the commit gate's row count
+        // all ride the ONE write job as `observe` metrics (CollectMetrics
+        // inside the write's plan — measured at ~7 ms delivery after the
+        // action). Before r18 an append with expectations and tracked
+        // stats paid three scan actions (gate aggregate, write, stats
+        // re-read) plus a footer read at the commit gate — per-action
+        // Catalyst plan floors on every batch of every streaming sink.
+        // CHECK semantics are unchanged: a violating batch is refused
+        // LOUD with per-check counts and commits NOTHING — the written
+        // files are deleted before the error and were never manifest-
+        // visible (the same invisibility any staged write relies on).
+        val (segStats, rows) = writeSegmentObserved(spark, outDir, m, df, seg,
+          Some(s"appendSegment to $outDir violates expectation(s)"))
+        writeSegmentBlooms(spark, outDir, seg, m.bloomCols, Some(rows))
+        // An append commutes with ANY concurrent commit that leaves the
+        // schema, expectation set, and our txn state alone (it reads no
+        // segments), so a lost CAS retries in place via the optimistic
+        // protocol; a true conflict (schema/expectations moved — the
+        // validation above ran against stale contracts — or our txn
+        // landed) re-plans from the top, re-validating under the new state.
+        tryCommitEdit(outDir, m, SegmentEdit(added = Seq(seg),
+          addedStats = segStats, addedRows = Map(seg -> rows)), txn)
+      }
     }
-    require(!m.segs.contains(seg), s"segment $seg already committed")
-    val expected = tableSchema(spark, outDir, m).fieldNames.toSeq
-    require(df.columns.toSeq == expected,
-      s"appendSegment schema mismatch: got ${df.columns.mkString(",")}, " +
-        s"table is ${expected.mkString(",")}")
-    // FUSED VALIDATE + WRITE + STATS (r18): the expectation gate, the
-    // per-segment stats collection, and the commit gate's row count
-    // all ride the ONE write job as `observe` metrics (CollectMetrics
-    // inside the write's plan — measured at ~7 ms delivery after the
-    // action). Before r18 an append with expectations and tracked
-    // stats paid three scan actions (gate aggregate, write, stats
-    // re-read) plus a footer read at the commit gate — per-action
-    // Catalyst plan floors on every batch of every streaming sink.
-    // CHECK semantics are unchanged: a violating batch is refused
-    // LOUD with per-check counts and commits NOTHING — the written
-    // files are deleted before the error and were never manifest-
-    // visible (the same invisibility any staged write relies on).
-    val (segStats, rows) = writeSegmentObserved(spark, outDir, m, df, seg,
-      Some(s"appendSegment to $outDir violates expectation(s)"))
-    writeSegmentBlooms(spark, outDir, seg, m.bloomCols, Some(rows))
-    // An append commutes with ANY concurrent commit that leaves the
-    // schema, expectation set, and our txn state alone (it reads no
-    // segments), so a lost CAS retries in place via the optimistic
-    // protocol; a true conflict (schema/expectations moved — the
-    // validation above ran against stale contracts — or our txn
-    // landed) re-plans from the top, re-validating under the new state.
-    tryCommitEdit(outDir, m, SegmentEdit(added = Seq(seg),
-      addedStats = segStats, addedRows = Map(seg -> rows)), txn) match {
-      case Some(v) => v
-      case None => appendSegment(spark, outDir,
-        df, seg, txn) // tail re-plan; txn guard stops infinite recursion
-    }
-  }
 
   /** The fused single-action segment write (r18): writes `df`
     * (logical names) as segment `seg`, carrying the expectation gate,
@@ -4672,9 +4668,7 @@ object LakeSink {
             (p, l, f.dataType == LongType)
         })
       }
-    val obs = new org.apache.spark.sql.Observation(
-      "graft_seg_" + java.lang.Long.toHexString(
-        java.util.concurrent.ThreadLocalRandom.current().nextLong()))
+    val obs = new org.apache.spark.sql.Observation("graft_seg_" + newNonce())
     val aggs: Seq[org.apache.spark.sql.Column] =
       count(lit(1)).as("__rows") +:
       (checks.zipWithIndex.map { case ((_, sql), i) =>
@@ -4843,8 +4837,7 @@ object LakeSink {
       s"partitioned write to $outDir: empty-string partition values " +
         "are indistinguishable from NULL in the staged layout — " +
         "normalize them (e.g. to a sentinel) before the write")
-    val nonce = java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong())
+    val nonce = newNonce()
     // ONE write job for every partition tuple: shadow columns become
     // the (nested) staging directory keys (and are stripped from the
     // files); the real partition columns remain normal file columns.
@@ -4961,99 +4954,86 @@ object LakeSink {
     import org.apache.spark.sql.functions.{coalesce, count, expr, lit, when}
     require(dvMaxFraction >= 0.0 && dvMaxFraction <= 1.0,
       s"dvMaxFraction must be in [0,1], got $dvMaxFraction")
-    var attempt = 0
     val src = df.cache()
-    try {
-      while (attempt < dmlMaxAttempts) {
-        attempt += 1
-        val m = readManifest(outDir)
-        requireTable(m, outDir)
-        val expected = tableSchema(spark, outDir, m).fieldNames.toSeq
-        require(src.columns.toSeq == expected,
-          s"replaceWhere schema mismatch: got ${src.columns.mkString(",")}" +
-            s", table is ${expected.mkString(",")}")
-        // FUSED incoming-batch gate (r18): the expectation counts and
-        // the outside-the-replace-predicate count are one aggregate
-        // action over the cached batch, not two — failure order
-        // unchanged (expectations first).
-        val checks = m.expects.toSeq.sortBy(_._1)
-        if (checks.nonEmpty || cond.isDefined) {
-          val aggs = checks.map { case (_, sql) =>
-            count(when(!expr(sql) || expr(sql).isNull, lit(1))) } ++
-            cond.map(c =>
-              count(when(!coalesce(c, lit(false)), lit(1)))).toSeq
-          val row = src.agg(aggs.head, aggs.tail: _*).head()
-          val bad = checks.zipWithIndex
-            .map { case ((n, _), i) => n -> row.getLong(i) }
-            .filter(_._2 > 0L)
-          require(bad.isEmpty,
-            s"replaceWhere to $outDir violates expectation(s): " +
-              bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
-          cond.foreach { _ =>
-            val out = row.getLong(checks.size)
-            require(out == 0L, s"replaceWhere to $outDir: $out incoming " +
-              "row(s) fall outside the replace predicate — the statement " +
-              "may only write rows into the range it replaces")
-          }
-        }
-        val nonce = java.lang.Long.toHexString(
-          java.util.concurrent.ThreadLocalRandom.current().nextLong())
-        val e =
-          if (m.segs.isEmpty) SegmentEdit()
-          else planDeleteEdits(spark, outDir, m, cond, None, cdc,
-            dvMaxFraction, nonce)
-        var ins = SegmentEdit()
-        var inserted = 0L
-        m.partSpec match {
-          case Some(spec) =>
-            val partPhys = spec.split(",").toSeq
-            val partCol = partPhys.map(p =>
-              m.logicalOf(p).getOrElse(sys.error(
-                s"lake at $outDir: partition column (physical $p) " +
-                  "was dropped — evolvePartitionSpec to a live column " +
-                  "first")))
-            stagePartitionedSegments(spark, outDir, m, src,
-              partPhys, partCol).foreach { case (segs, parts, stats) =>
-              ins = SegmentEdit(added = segs, addedStats = stats,
-                addedParts = parts)
-              inserted = parts.values.map(_.rows).sum
-            }
-          case None =>
-            // FUSED count + write + stats (r18): one observed write
-            // replaces three actions over the cached batch; the
-            // expectation re-check inside the fused write is inert
-            // (the batch already passed the gate above)
-            val seg = f"seg_r${m.version + 1}%010d_ins_$nonce"
-            val (stats, n) = writeSegmentObserved(spark, outDir, m, src,
-              seg, Some(s"replaceWhere to $outDir violates expectation(s)"))
-            inserted = n
-            if (inserted == 0L)
-              org.apache.commons.io.FileUtils.deleteQuietly(
-                new java.io.File(s"$outDir/$seg"))
-            else {
-              ins = SegmentEdit(added = Seq(seg), addedRows = Map(seg -> n),
-                addedStats = if (m.trackedCols.nonEmpty) stats else Map.empty)
-              writeSegmentBlooms(spark, outDir, seg, m.bloomCols, Some(n))
-            }
-        }
-        if (cdc && inserted > 0L) {
-          // the insert images join the delete edit's cdc segment
-          val cdcSeg = s"seg_cdc_d$nonce"
-          physicalize(src.withColumn("_change_type", lit("insert")), m)
-            .write.mode("append").parquet(s"$outDir/$cdcSeg")
-          ins = ins.copy(cdcSegs = Seq(cdcSeg))
-        }
-        if (e.isNoop && inserted == 0L) return (m.version, 0, 0, 0L, 0L)
-        tryCommitEdit(outDir, m, e ++ ins) match {
-          case Some(v) =>
-            return (v, e.rewritten, e.dropped, e.deleted, inserted)
-          case None => // true conflict — re-plan against the new tip
+    try commitLoop("replaceWhere", outDir) { (m, nonce) =>
+      requireTable(m, outDir)
+      val expected = tableSchema(spark, outDir, m).fieldNames.toSeq
+      require(src.columns.toSeq == expected,
+        s"replaceWhere schema mismatch: got ${src.columns.mkString(",")}" +
+          s", table is ${expected.mkString(",")}")
+      // FUSED incoming-batch gate (r18): the expectation counts and
+      // the outside-the-replace-predicate count are one aggregate
+      // action over the cached batch, not two — failure order
+      // unchanged (expectations first).
+      val checks = m.expects.toSeq.sortBy(_._1)
+      if (checks.nonEmpty || cond.isDefined) {
+        val aggs = checks.map { case (_, sql) =>
+          count(when(!expr(sql) || expr(sql).isNull, lit(1))) } ++
+          cond.map(c =>
+            count(when(!coalesce(c, lit(false)), lit(1)))).toSeq
+        val row = src.agg(aggs.head, aggs.tail: _*).head()
+        val bad = checks.zipWithIndex
+          .map { case ((n, _), i) => n -> row.getLong(i) }
+          .filter(_._2 > 0L)
+        require(bad.isEmpty,
+          s"replaceWhere to $outDir violates expectation(s): " +
+            bad.map { case (n, c) => s"$n ($c rows)" }.mkString(", "))
+        cond.foreach { _ =>
+          val out = row.getLong(checks.size)
+          require(out == 0L, s"replaceWhere to $outDir: $out incoming " +
+            "row(s) fall outside the replace predicate — the statement " +
+            "may only write rows into the range it replaces")
         }
       }
+      val e =
+        if (m.segs.isEmpty) SegmentEdit()
+        else planDeleteEdits(spark, outDir, m, cond, None, cdc,
+          dvMaxFraction, nonce)
+      var ins = SegmentEdit()
+      var inserted = 0L
+      m.partSpec match {
+        case Some(spec) =>
+          val partPhys = spec.split(",").toSeq
+          val partCol = partPhys.map(p =>
+            m.logicalOf(p).getOrElse(sys.error(
+              s"lake at $outDir: partition column (physical $p) " +
+                "was dropped — evolvePartitionSpec to a live column " +
+                "first")))
+          stagePartitionedSegments(spark, outDir, m, src,
+            partPhys, partCol).foreach { case (segs, parts, stats) =>
+            ins = SegmentEdit(added = segs, addedStats = stats,
+              addedParts = parts)
+            inserted = parts.values.map(_.rows).sum
+          }
+        case None =>
+          // FUSED count + write + stats (r18): one observed write
+          // replaces three actions over the cached batch; the
+          // expectation re-check inside the fused write is inert
+          // (the batch already passed the gate above)
+          val seg = f"seg_r${m.version + 1}%010d_ins_$nonce"
+          val (stats, n) = writeSegmentObserved(spark, outDir, m, src,
+            seg, Some(s"replaceWhere to $outDir violates expectation(s)"))
+          inserted = n
+          if (inserted == 0L)
+            org.apache.commons.io.FileUtils.deleteQuietly(
+              new java.io.File(s"$outDir/$seg"))
+          else {
+            ins = SegmentEdit(added = Seq(seg), addedRows = Map(seg -> n),
+              addedStats = if (m.trackedCols.nonEmpty) stats else Map.empty)
+            writeSegmentBlooms(spark, outDir, seg, m.bloomCols, Some(n))
+          }
+      }
+      if (cdc && inserted > 0L) {
+        // the insert images join the delete edit's cdc segment
+        val cdcSeg = s"seg_cdc_d$nonce"
+        physicalize(src.withColumn("_change_type", lit("insert")), m)
+          .write.mode("append").parquet(s"$outDir/$cdcSeg")
+        ins = ins.copy(cdcSegs = Seq(cdcSeg))
+      }
+      if (e.isNoop && inserted == 0L) Some((m.version, 0, 0, 0L, 0L))
+      else tryCommitEdit(outDir, m, e ++ ins).map(v =>
+        (v, e.rewritten, e.dropped, e.deleted, inserted))
     } finally src.unpersist()
-    sys.error(s"replaceWhere at $outDir: $dmlMaxAttempts consecutive " +
-      "true conflicts (concurrent writers rewriting the same segments) " +
-      "— coordinate the writers or retry later")
   }
 
   /** RTAS — `CREATE OR REPLACE TABLE … AS <query>`: swap the TABLE
@@ -5106,9 +5086,7 @@ object LakeSink {
           .foreach { case (s0, p0, st0) =>
             segs = s0; parts = p0; stats = st0 }
       case None =>
-        val nonce = java.lang.Long.toHexString(
-          java.util.concurrent.ThreadLocalRandom.current().nextLong())
-        val seg = f"seg_r${m.version + 1}%010d_rtas_$nonce"
+        val seg = f"seg_r${m.version + 1}%010d_rtas_${newNonce()}"
         df.write.mode("overwrite").parquet(s"$outDir/$seg")
         // the count is in hand — carry it (r18, advisor: the commit
         // gate's fallback re-read this same footer a second time)
@@ -5231,440 +5209,430 @@ object LakeSink {
       matched.exists { case MergeClause.Update(_, None) => true
         case _ => false } ||
       notMatched.exists(_.values.isEmpty)
-    var attempt = 0
-    while (attempt < dmlMaxAttempts) {
-      attempt += 1
-      val m0 = readManifest(outDir)
-      txn.foreach { case (app, id) =>
-        if (m0.txns.getOrElse(app, Long.MinValue) >= id)
-          return (m0.version, 0, 0L, 0L, 0L)
-      }
-      val schema0 = tableSchema(spark, outDir, m0)
-      // MERGE WITH SCHEMA EVOLUTION (r15): source-only columns are
-      // auto-added (nullable) to the target schema — the widened
-      // schema rides the SAME manifest CAS as the merged rows (no
-      // committed-data/stale-schema window), old segments surface the
-      // added columns as NULL through the applied-schema read, and
-      // under an ACTIVE column mapping each added column mints a
-      // FRESH physical name (the evolveAddColumn rule: a re-added
-      // name must never resurrect dropped bytes). The whole merge
-      // body plans against the widened view `m`; the CAS is taken
-      // against the pre-evolution base `m0` so a racing schema change
-      // stays a true conflict.
-      val evolveCols =
-        if (!schemaEvolution) Nil
-        else source.schema.fields.toSeq
-          .filterNot(f => schema0.fieldNames
-            .exists(_.equalsIgnoreCase(f.name)))
-          .map(f => f.copy(nullable = true))
-      val schema = evolveCols.foldLeft(schema0)(_ add _)
-      val m =
-        if (evolveCols.isEmpty) m0
-        else m0.copy(
-          schemaV = m0.schemaV + 1,
-          schemaJson = Some(schema.json),
-          colmap =
-            if (m0.colmap.isEmpty) m0.colmap
-            else m0.colmap ++ evolveCols.map(f =>
-              f.name -> mintPhysical(spark, outDir, m0, f.name)))
-      val newSchema =
-        if (evolveCols.isEmpty) None
-        else Some((m.schemaV, schema.json, m.colmap))
-      val targetCols = schema.fieldNames.toSeq
-      val checks = m.expects.toSeq.sortBy(_._1)
-      require(keys.forall(targetCols.contains),
-        s"MERGE key(s) not in target schema: " +
-          keys.filterNot(targetCols.contains).mkString(", "))
-      if (needsStar) {
-        val missing = targetCols.toSet -- source.columns
-        require(missing.isEmpty, "MERGE star clause needs source " +
-          s"column(s): ${missing.toSeq.sorted.mkString(", ")}")
-      }
-      val src = source.cache()
-      // the touched-segment writer, run concurrently with the insert
-      // pass (see OVERLAPPED WRITE PASSES below); its edit joins the
-      // insert's only after its Await. Declared outside the try so the
-      // finally can settle it on
-      // ANY exit — an exception between future creation and the
-      // normal-path Await must never leave its writes running detached.
-      var touchedWork: Option[scala.concurrent.Future[SegmentEdit]] = None
-      try {
-        // FUSED dup-check + key-range bound (r18): previously two
-        // separate aggregate actions over the cached source — one
-        // two-level aggregate (per-key counts, then a one-row rollup
-        // of max(count) and min/max over the group keys) answers
-        // both. groupBy treats NULL keys as equal, exactly as the
-        // pre-fusion duplicate check did. Single-key stats pruning
-        // stays matched-side-only: MERGE's match predicate IS the key
-        // equi-join, so the source's key range bounds every match, but
-        // NMBS clauses can fire on any segment, so pruning is off the
-        // moment one exists.
-        val keyPhys = m.physicalOf(keys.head)
-        // matched.nonEmpty gates the range too (r18): only the census
-        // consumes it, and an insert-only merge runs no census — the
-        // pre-r18 shape paid a whole segmentStats action for a bound
-        // nothing read
-        val wantRange = matched.nonEmpty &&
-          notMatchedBySource.isEmpty && keys.size == 1 &&
-          m.stats.values.exists(_.contains(keyPhys)) &&
-          src.schema.fields.exists(f => f.name == keys.head &&
-            f.dataType == org.apache.spark.sql.types.LongType)
-        // One-row dup rollup over the cached source (max per-key
-        // count; plus the key bounds when a range is wanted).
-        def dupRollup(withRange: Boolean) = {
-          import org.apache.spark.sql.functions.{max, min}
-          val rollup = max(col("__n")).as("__dup") +:
-            (if (withRange)
-               Seq(min(col(keys.head)).as("__klo"),
-                 max(col(keys.head)).as("__khi"))
-             else Nil)
-          src.groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("__n"))
-            .agg(rollup.head, rollup.tail: _*)
+    commitLoop("merge", outDir) { (m0, nonce) =>
+      if (txn.exists { case (app, id) =>
+          m0.txns.getOrElse(app, Long.MinValue) >= id })
+        Some((m0.version, 0, 0L, 0L, 0L))
+      else {
+        val schema0 = tableSchema(spark, outDir, m0)
+        // MERGE WITH SCHEMA EVOLUTION (r15): source-only columns are
+        // auto-added (nullable) to the target schema — the widened
+        // schema rides the SAME manifest CAS as the merged rows (no
+        // committed-data/stale-schema window), old segments surface the
+        // added columns as NULL through the applied-schema read, and
+        // under an ACTIVE column mapping each added column mints a
+        // FRESH physical name (the evolveAddColumn rule: a re-added
+        // name must never resurrect dropped bytes). The whole merge
+        // body plans against the widened view `m`; the CAS is taken
+        // against the pre-evolution base `m0` so a racing schema change
+        // stays a true conflict.
+        val evolveCols =
+          if (!schemaEvolution) Nil
+          else source.schema.fields.toSeq
+            .filterNot(f => schema0.fieldNames
+              .exists(_.equalsIgnoreCase(f.name)))
+            .map(f => f.copy(nullable = true))
+        val schema = evolveCols.foldLeft(schema0)(_ add _)
+        val m =
+          if (evolveCols.isEmpty) m0
+          else m0.copy(
+            schemaV = m0.schemaV + 1,
+            schemaJson = Some(schema.json),
+            colmap =
+              if (m0.colmap.isEmpty) m0.colmap
+              else m0.colmap ++ evolveCols.map(f =>
+                f.name -> mintPhysical(spark, outDir, m0, f.name)))
+        val newSchema =
+          if (evolveCols.isEmpty) None
+          else Some((m.schemaV, schema.json, m.colmap))
+        val targetCols = schema.fieldNames.toSeq
+        val checks = m.expects.toSeq.sortBy(_._1)
+        require(keys.forall(targetCols.contains),
+          s"MERGE key(s) not in target schema: " +
+            keys.filterNot(targetCols.contains).mkString(", "))
+        if (needsStar) {
+          val missing = targetCols.toSet -- source.columns
+          require(missing.isEmpty, "MERGE star clause needs source " +
+            s"column(s): ${missing.toSeq.sorted.mkString(", ")}")
         }
-        def requireUnique(dup: Any): Unit =
-          require(dup == null || dup.asInstanceOf[Long] <= 1L,
-            "MERGE source has multiple rows per key — ambiguous match")
-        // DEFERRED DUP GATE (r19): the dup verdict's only consumer is
-        // the require — when no key range prunes the census's scan
-        // set, the rollup rides the census collect below as a tagged
-        // union branch (one Catalyst action instead of two, still
-        // judged BEFORE any write). A standalone gate action remains
-        // only when the range must exist BEFORE the census (it prunes
-        // the scan set), or when no census will run to carry it
-        // (empty table — the census scans segments).
-        val deferDup = matched.nonEmpty && !wantRange && m.segs.nonEmpty
-        val srcKeyRange: Option[(String, Long, Long)] =
-          if ((matched.nonEmpty && !deferDup) || wantRange) {
-            val gate = dupRollup(wantRange).head()
-            requireUnique(if (gate.isNullAt(0)) null else gate.getLong(0))
-            if (wantRange && !gate.isNullAt(1) && !gate.isNullAt(2))
-              Some((keyPhys, gate.getLong(1), gate.getLong(2)))
-            else None
-          } else None
-        val tracked = m.trackedCols
-        val nonce = java.lang.Long.toHexString(
-          java.util.concurrent.ThreadLocalRandom.current().nextLong())
-        val cdcSeg = s"seg_cdc_g$nonce"
-        // Clause indices: matched-side clauses 0..n-1, NMBS 100+i —
-        // one when-chain in list order IS first-match-wins
-        val srcM = src.withColumn("__m", lit(1))
-        val isM = col("s.__m").isNotNull
-        def condOf(c: Option[String]) = c.map(expr).getOrElse(lit(true))
-        val whens: Seq[(org.apache.spark.sql.Column, Int)] =
-          matched.zipWithIndex.map { case (cl, i) =>
-            (isM && condOf(cl.cond), i) } ++
-          notMatchedBySource.zipWithIndex.map { case (cl, i) =>
-            (!isM && condOf(cl.cond), 100 + i) }
-        val clauseIdx = whens.headOption.map { case (c0, i0) =>
-          whens.tail.foldLeft(when(c0, lit(i0))) {
-            case (acc, (c, i)) => acc.when(c, lit(i))
-          }.otherwise(lit(-1))
-        }.getOrElse(lit(-1))
-        val allRw: Seq[(MergeClause, Int)] =
-          matched.zipWithIndex ++
-          notMatchedBySource.zipWithIndex.map { case (c, i) => (c, 100 + i) }
-        val updIdx = allRw.collect {
-          case (MergeClause.Update(_, _), i) => i }
-        val delIdx = allRw.collect {
-          case (MergeClause.Delete(_), i) => i }
-        def inIdx(c: org.apache.spark.sql.Column, idx: Seq[Int]) =
-          if (idx.isEmpty) lit(false) else c.isin(idx.map(Integer.valueOf): _*)
-        // Rewritten value of target column c under the firing clause
-        // (one nested when per column — stays in codegen)
-        def newVal(c: String): org.apache.spark.sql.Column = {
-          val f = schema(c)
-          allRw.foldRight(col(s"t.$c")) {
-            case ((MergeClause.Update(_, set), i), els) =>
-              val sql = set.map(_.toMap.getOrElse(c, s"t.$c"))
-                .getOrElse(s"s.$c")
-              when(col("__mc") === i, expr(sql)).otherwise(els)
-            case (_, els) => els
-          }.cast(f.dataType).as(c)
-        }
-        // a row-level clause's assignments, for the partition-fact
-        // rule: `UPDATE SET *` assigns every column
-        val assigned: Set[String] = allRw.flatMap {
-          case (MergeClause.Update(_, Some(set)), _) => set.map(_._1)
-          case (MergeClause.Update(_, None), _) => targetCols
-          case _ => Nil
-        }.toSet
-        var updated = 0L
-        var deleted = 0L
-        // Some(⋯) once a census pass has OBSERVED every possible match
-        // (scanned segments + stats-disproved ones): the insert side
-        // then needs no second corpus scan. None = no census ran
-        // (insert-only merge) → the insert side scans as before.
-        var matchedKeys: Option[Seq[Row]] = None
-        if (matched.nonEmpty || notMatchedBySource.nonEmpty) {
-          // BATCHED PLANNING (r15): stats pruning stays DRIVER-side;
-          // the surviving scan set joins the broadcast source ONCE and
-          // ONE grouped aggregate decides every segment — total live
-          // rows, update/delete fire counts PLUS per-expectation
-          // violation counts over the UPDATE post-image
-          // (CHECK-constraint semantics on the merge path, folded into
-          // the pass the count pays anyway — delete-firing and no-fire
-          // rows are exempt: deletes write no values, pass-through
-          // rows are not re-judged under NOT VALID registration).
-          // Hidden rows neither match nor resurrect (DV-reconciling
-          // positional read), and the fired positions are what a
-          // merge-on-read DV records. Before r15 this was one
-          // sequential join + aggregate + write job per segment.
-          val scanSegs = m.segs.zipWithIndex.filter { case (seg, _) =>
-            !srcKeyRange.exists { case (c, lo, hi) =>
-              !mayOverlap(m, seg, c, lo, hi) } }
-          if (scanSegs.isEmpty)
-            // every segment stats-disproved the source key range ⇒
-            // provably zero matches — the insert side knows it too
-            matchedKeys = Some(Nil)
-          if (scanSegs.nonEmpty) {
-            val pos = readSegmentsWithPos(spark, outDir, m,
-              scanSegs.map(_._1))
-            val joinCond = keys.map(k =>
-              col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-            def stagedOf(p: DataFrame) = p.as("t")
-              .join(broadcast(srcM).as("s"), joinCond, "left_outer")
-              .withColumn("__mc", clauseIdx)
-            def post = stagedOf(pos).select(col("__dv_s") +:
-              col("__mc") +: isM.as("__isM") +:
-              struct(keys.map(k => col(s"t.$k")): _*).as("__k") +:
-              targetCols.map(c => newVal(c)): _*)
-            // the census ALSO collects the MATCHED source keys (r17):
-            // the insert side then anti-joins source×keys instead of
-            // re-scanning every segment's key column — one full-corpus
-            // pass per MERGE saved, and the insert census plans over
-            // two broadcast-small relations instead of the whole
-            // table. Bounded by construction: distinct matched keys ≤
-            // source keys, and the source is the broadcast-small side
-            // of every MERGE. Collected via the target-side values
-            // (== the source keys wherever a match fired).
-            //
-            // The keys are deduplicated GLOBALLY before they reach the
-            // driver (r18, advisor: the r17 shape shipped one
-            // collect_set PER __dv_s group, so a key matching in many
-            // segments reached the driver once per segment — up to
-            // |source| × |segments| rows). The per-segment aggregate
-            // is persisted (it is segments-sized), the counts collect
-            // WITHOUT the key sets, and one distributed
-            // explode+distinct over the cached rows ships each key
-            // exactly once.
-            val cntAggs = Seq(
-              count(lit(1)).as("__c0"),
-              coalesce(sum(when(inIdx(col("__mc"), updIdx), 1L)
-                .otherwise(0L)), lit(0L)).as("__cu"),
-              coalesce(sum(when(inIdx(col("__mc"), delIdx), 1L)
-                .otherwise(0L)), lit(0L)).as("__cd")) ++
-              checks.zipWithIndex.map { case ((_, sql), j) =>
-                coalesce(sum(when(inIdx(col("__mc"), updIdx) &&
-                  !coalesce(expr(sql), lit(false)), 1L)
-                  .otherwise(0L)), lit(0L)).as(s"__ckc$j") } :+
-              collect_set(when(col("__isM"), col("__k"))).as("__mk")
-            val perSegAgg = post.groupBy(col("__dv_s"))
-              .agg(cntAggs.head, cntAggs.tail: _*).persist()
-            // FUSED CENSUS COLLECT (r19): the per-segment counts, the
-            // globally-distinct matched keys, and (when deferred) the
-            // source dup verdict ride ONE action as a tagged union
-            // over the persisted aggregate — the r18 shape paid two
-            // collects here plus a standalone gate. Column positions
-            // in the tag-0 rows are unchanged (union-appended columns
-            // land AFTER the census columns), so every downstream
-            // reader keeps its index. All three verdicts are still
-            // judged BEFORE any write.
-            val perSeg = try {
-              import org.apache.spark.sql.functions.explode
-              val countRows = perSegAgg.drop("__mk")
-                .withColumn("__tag", lit(0))
-              val keyRows = perSegAgg
-                .select(explode(col("__mk")).as("__k")).distinct()
-                .withColumn("__tag", lit(1))
-              val branches = Seq(countRows, keyRows) ++
-                (if (deferDup)
-                   Seq(dupRollup(withRange = false)
-                     .withColumn("__tag", lit(2)))
-                 else Nil)
-              val all = branches
-                .reduce(_.unionByName(_, allowMissingColumns = true))
-                .collect()
-              def tag(r: Row) = r.getInt(r.fieldIndex("__tag"))
-              if (deferDup) {
-                val d = all.find(tag(_) == 2).get
-                requireUnique(d.get(d.fieldIndex("__dup")))
-              }
-              matchedKeys = Some(all.filter(tag(_) == 1).toSeq
-                .map(r => r.getStruct(r.fieldIndex("__k"))))
-              all.filter(tag(_) == 0)
-                .map(r => r.getString(0) -> r).toMap
-            } finally perSegAgg.unpersist()
-            val fires = perSeg.map { case (seg, r) =>
-              seg -> Fires(r.getLong(1), r.getLong(2), r.getLong(3)) }
-            val touched = scanSegs.filter { case (seg, _) =>
-              fires.get(seg).exists(f => f.upd > 0L || f.del > 0L) }
-            if (touched.nonEmpty) {
-              // CHECK gate over the WHOLE statement, before any write
-              val bad = checks.zipWithIndex.map { case ((n, _), j) =>
-                n -> perSeg.valuesIterator.map(_.getLong(j + 4)).sum }
-                .filter(_._2 > 0L)
-              require(bad.isEmpty,
-                s"MERGE into $outDir would write rows violating " +
-                  "expectation(s): " +
-                  bad.map { case (n, c) => s"$n ($c rows)" }
-                    .mkString(", "))
-              updated = touched.map(t => fires(t._1).upd).sum
-              deleted = touched.map(t => fires(t._1).del).sum
-              // OVERLAPPED WRITE PASSES (r19, guide §2.6): the touched-
-              // segment writer's CDC images, merge-on-read stages and
-              // copy-on-write rewrites are independent of the INSERT
-              // pass (both sides read only the census result + cached
-              // source and write disjoint directories), so they run on
-              // a driver thread while the insert's observed write
-              // proceeds; the insert tail Awaits this future BEFORE any
-              // shared bookkeeping. The statement-wide CHECK gate above
-              // already ran on the driver thread, before ANY write on
-              // either side.
-              touchedWork = Some(scala.concurrent.Future {
-                writeTouched(spark, outDir, m, touched, fires,
-                  ss => stagedOf(readSegmentsWithPos(spark, outDir, m, ss))
-                    .withColumn("__act",
-                      when(inIdx(col("__mc"), updIdx), lit(ActUpdate))
-                        .when(inIdx(col("__mc"), delIdx), lit(ActDelete))
-                        .otherwise(lit(ActKeep))),
-                  targetCols.map(c => col(s"t.$c").as(c)),
-                  targetCols.map(newVal), assigned, "seg_g", nonce,
-                  dvMaxFraction, if (cdc) Some(cdcSeg) else None)
-              }(scala.concurrent.ExecutionContext.global))
-            }
+        val src = source.cache()
+        // the touched-segment writer, run concurrently with the insert
+        // pass (see OVERLAPPED WRITE PASSES below); its edit joins the
+        // insert's only after its Await. Declared outside the try so the
+        // finally can settle it on
+        // ANY exit — an exception between future creation and the
+        // normal-path Await must never leave its writes running detached.
+        var touchedWork: Option[scala.concurrent.Future[SegmentEdit]] = None
+        try {
+          // FUSED dup-check + key-range bound (r18): previously two
+          // separate aggregate actions over the cached source — one
+          // two-level aggregate (per-key counts, then a one-row rollup
+          // of max(count) and min/max over the group keys) answers
+          // both. groupBy treats NULL keys as equal, exactly as the
+          // pre-fusion duplicate check did. Single-key stats pruning
+          // stays matched-side-only: MERGE's match predicate IS the key
+          // equi-join, so the source's key range bounds every match, but
+          // NMBS clauses can fire on any segment, so pruning is off the
+          // moment one exists.
+          val keyPhys = m.physicalOf(keys.head)
+          // matched.nonEmpty gates the range too (r18): only the census
+          // consumes it, and an insert-only merge runs no census — the
+          // pre-r18 shape paid a whole segmentStats action for a bound
+          // nothing read
+          val wantRange = matched.nonEmpty &&
+            notMatchedBySource.isEmpty && keys.size == 1 &&
+            m.stats.values.exists(_.contains(keyPhys)) &&
+            src.schema.fields.exists(f => f.name == keys.head &&
+              f.dataType == org.apache.spark.sql.types.LongType)
+          // One-row dup rollup over the cached source (max per-key
+          // count; plus the key bounds when a range is wanted).
+          def dupRollup(withRange: Boolean) = {
+            import org.apache.spark.sql.functions.{max, min}
+            val rollup = max(col("__n")).as("__dup") +:
+              (if (withRange)
+                 Seq(min(col(keys.head)).as("__klo"),
+                   max(col(keys.head)).as("__khi"))
+               else Nil)
+            src.groupBy(keys.map(col): _*)
+              .agg(count(lit(1)).as("__n"))
+              .agg(rollup.head, rollup.tail: _*)
           }
-        }
-        var inserted = 0L
-        var ins = SegmentEdit()
-        if (notMatched.nonEmpty) {
-          // insert candidates = source rows with no target match. When
-          // a census pass ran it already observed every matched key
-          // (r17), so anti-join the source against THAT driver-bounded
-          // set — broadcast-small × broadcast-small — instead of
-          // re-scanning every segment's key column: one full-corpus
-          // pass per MERGE gone, and the insert census's Catalyst plan
-          // collapses to two local relations (the per-action plan
-          // floor this query's QueryProbe profile is made of).
-          // NULL-keyed source rows behave identically on both routes:
-          // NULL never equals, so they stay insert candidates.
-          val anti = matchedKeys match {
-            case Some(Nil) => src.as("s")
-            case Some(mk) =>
-              val keySchema = org.apache.spark.sql.types.StructType(
-                keys.map(k => schema(schema.fieldIndex(k))))
-              val mkDf = spark.createDataFrame(
-                new java.util.ArrayList[Row](mk.asJava), keySchema)
-              src.join(broadcast(mkDf), keys, "left_anti").as("s")
-            case None => src.join(
-              readSegments(spark, outDir, m, m.segs)
-                .select(keys.map(col).toSeq: _*),
-              keys, "left_anti").as("s")
-          }
-          val insWhens = notMatched.zipWithIndex.map { case (cl, i) =>
-            (condOf(cl.cond), i) }
-          val insIdx = insWhens.tail.foldLeft(
-            when(insWhens.head._1, lit(insWhens.head._2))) {
-            case (acc, (c, i)) => acc.when(c, lit(i))
-          }.otherwise(lit(-1))
-          def insVal(c: String): org.apache.spark.sql.Column = {
+          def requireUnique(dup: Any): Unit =
+            require(dup == null || dup.asInstanceOf[Long] <= 1L,
+              "MERGE source has multiple rows per key — ambiguous match")
+          // DEFERRED DUP GATE (r19): the dup verdict's only consumer is
+          // the require — when no key range prunes the census's scan
+          // set, the rollup rides the census collect below as a tagged
+          // union branch (one Catalyst action instead of two, still
+          // judged BEFORE any write). A standalone gate action remains
+          // only when the range must exist BEFORE the census (it prunes
+          // the scan set), or when no census will run to carry it
+          // (empty table — the census scans segments).
+          val deferDup = matched.nonEmpty && !wantRange && m.segs.nonEmpty
+          val srcKeyRange: Option[(String, Long, Long)] =
+            if ((matched.nonEmpty && !deferDup) || wantRange) {
+              val gate = dupRollup(wantRange).head()
+              requireUnique(if (gate.isNullAt(0)) null else gate.getLong(0))
+              if (wantRange && !gate.isNullAt(1) && !gate.isNullAt(2))
+                Some((keyPhys, gate.getLong(1), gate.getLong(2)))
+              else None
+            } else None
+          val tracked = m.trackedCols
+          val cdcSeg = s"seg_cdc_g$nonce"
+          // Clause indices: matched-side clauses 0..n-1, NMBS 100+i —
+          // one when-chain in list order IS first-match-wins
+          val srcM = src.withColumn("__m", lit(1))
+          val isM = col("s.__m").isNotNull
+          def condOf(c: Option[String]) = c.map(expr).getOrElse(lit(true))
+          val whens: Seq[(org.apache.spark.sql.Column, Int)] =
+            matched.zipWithIndex.map { case (cl, i) =>
+              (isM && condOf(cl.cond), i) } ++
+            notMatchedBySource.zipWithIndex.map { case (cl, i) =>
+              (!isM && condOf(cl.cond), 100 + i) }
+          val clauseIdx = whens.headOption.map { case (c0, i0) =>
+            whens.tail.foldLeft(when(c0, lit(i0))) {
+              case (acc, (c, i)) => acc.when(c, lit(i))
+            }.otherwise(lit(-1))
+          }.getOrElse(lit(-1))
+          val allRw: Seq[(MergeClause, Int)] =
+            matched.zipWithIndex ++
+            notMatchedBySource.zipWithIndex.map { case (c, i) => (c, 100 + i) }
+          val updIdx = allRw.collect {
+            case (MergeClause.Update(_, _), i) => i }
+          val delIdx = allRw.collect {
+            case (MergeClause.Delete(_), i) => i }
+          def inIdx(c: org.apache.spark.sql.Column, idx: Seq[Int]) =
+            if (idx.isEmpty) lit(false) else c.isin(idx.map(Integer.valueOf): _*)
+          // Rewritten value of target column c under the firing clause
+          // (one nested when per column — stays in codegen)
+          def newVal(c: String): org.apache.spark.sql.Column = {
             val f = schema(c)
-            notMatched.zipWithIndex.foldRight(
-              lit(null).cast(f.dataType): org.apache.spark.sql.Column) {
-              case ((MergeClause.Insert(_, values), i), els) =>
-                val v = values.map(_.toMap.get(c)
-                  .map(expr).getOrElse(lit(null).cast(f.dataType)))
-                  .getOrElse(col(s"s.$c"))
-                when(col("__mc") === i, v).otherwise(els)
+            allRw.foldRight(col(s"t.$c")) {
+              case ((MergeClause.Update(_, set), i), els) =>
+                val sql = set.map(_.toMap.getOrElse(c, s"t.$c"))
+                  .getOrElse(s"s.$c")
+                when(col("__mc") === i, expr(sql)).otherwise(els)
+              case (_, els) => els
             }.cast(f.dataType).as(c)
           }
-          def fired = anti.withColumn("__mc", insIdx)
-            .filter(col("__mc") =!= -1)
-          // FUSED count + CHECK gate + write + stats (r18): the
-          // insert post-image previously paid one aggregate action
-          // (count + per-check counts), one write, and one stats
-          // re-read — three plans over the same anti-join. The
-          // observed write is ONE action; a violating statement
-          // deletes the never-manifest-visible directory and refuses
-          // with the same per-check counts, and the CDC insert images
-          // re-read the just-written small segment instead of
-          // re-running the anti-join.
-          val insPost = fired.select(col("__mc") +:
-            targetCols.map(c => insVal(c)): _*)
-          val insSeg = f"seg_g${m.version + 1}%010d_ins_$nonce"
-          // runs WHILE the touched-segment future stages its rewrites;
-          // awaited before any shared bookkeeping or a gate refusal
-          val insTry = scala.util.Try(writeSegmentObserved(spark, outDir,
-            m, insPost.drop("__mc"), insSeg,
-            Some(s"MERGE into $outDir would insert rows violating " +
-              "expectation(s)")))
-          insTry.failed.foreach { e =>
-            // a refused (or failed) insert: the touched-segment writer
-            // may already have moved its outputs to final names —
-            // settle it, delete every never-committed output, rethrow
-            // (a writer that failed itself leaves vacuum orphans)
-            touchedWork.foreach(f => scala.concurrent.Await.ready(
-              f, scala.concurrent.duration.Duration.Inf))
-            val done = touchedWork.flatMap(_.value).flatMap(_.toOption)
-              .getOrElse(SegmentEdit())
-            val orphans = (done.added :+ cdcSeg).map(s => s"$outDir/$s") ++
-              done.dvSets.values.map(r => s"$outDir/_dv/${r.file}")
-            orphans.foreach(p => org.apache.commons.io.FileUtils
-              .deleteQuietly(new java.io.File(p)))
-            throw e
-          }
-          // the writer's CDC images land in the same cdc segment as the
-          // insert images below: settle it before appending
-          touchedWork.foreach(f => scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration.Inf))
-          val (insStats, insN) = insTry.get
-          inserted = insN
-          if (inserted == 0L)
-            org.apache.commons.io.FileUtils.deleteQuietly(
-              new java.io.File(s"$outDir/$insSeg"))
-          else {
-            if (cdc) {
-              reader(spark, outDir, m).parquet(s"$outDir/$insSeg")
-                .withColumn("_change_type", lit("insert"))
-                .write.mode("append").parquet(s"$outDir/$cdcSeg")
+          // a row-level clause's assignments, for the partition-fact
+          // rule: `UPDATE SET *` assigns every column
+          val assigned: Set[String] = allRw.flatMap {
+            case (MergeClause.Update(_, Some(set)), _) => set.map(_._1)
+            case (MergeClause.Update(_, None), _) => targetCols
+            case _ => Nil
+          }.toSet
+          var updated = 0L
+          var deleted = 0L
+          // Some(⋯) once a census pass has OBSERVED every possible match
+          // (scanned segments + stats-disproved ones): the insert side
+          // then needs no second corpus scan. None = no census ran
+          // (insert-only merge) → the insert side scans as before.
+          var matchedKeys: Option[Seq[Row]] = None
+          if (matched.nonEmpty || notMatchedBySource.nonEmpty) {
+            // BATCHED PLANNING (r15): stats pruning stays DRIVER-side;
+            // the surviving scan set joins the broadcast source ONCE and
+            // ONE grouped aggregate decides every segment — total live
+            // rows, update/delete fire counts PLUS per-expectation
+            // violation counts over the UPDATE post-image
+            // (CHECK-constraint semantics on the merge path, folded into
+            // the pass the count pays anyway — delete-firing and no-fire
+            // rows are exempt: deletes write no values, pass-through
+            // rows are not re-judged under NOT VALID registration).
+            // Hidden rows neither match nor resurrect (DV-reconciling
+            // positional read), and the fired positions are what a
+            // merge-on-read DV records. Before r15 this was one
+            // sequential join + aggregate + write job per segment.
+            val scanSegs = m.segs.zipWithIndex.filter { case (seg, _) =>
+              !srcKeyRange.exists { case (c, lo, hi) =>
+                !mayOverlap(m, seg, c, lo, hi) } }
+            if (scanSegs.isEmpty)
+              // every segment stats-disproved the source key range ⇒
+              // provably zero matches — the insert side knows it too
+              matchedKeys = Some(Nil)
+            if (scanSegs.nonEmpty) {
+              val pos = readSegmentsWithPos(spark, outDir, m,
+                scanSegs.map(_._1))
+              val joinCond = keys.map(k =>
+                col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
+              def stagedOf(p: DataFrame) = p.as("t")
+                .join(broadcast(srcM).as("s"), joinCond, "left_outer")
+                .withColumn("__mc", clauseIdx)
+              def post = stagedOf(pos).select(col("__dv_s") +:
+                col("__mc") +: isM.as("__isM") +:
+                struct(keys.map(k => col(s"t.$k")): _*).as("__k") +:
+                targetCols.map(c => newVal(c)): _*)
+              // the census ALSO collects the MATCHED source keys (r17):
+              // the insert side then anti-joins source×keys instead of
+              // re-scanning every segment's key column — one full-corpus
+              // pass per MERGE saved, and the insert census plans over
+              // two broadcast-small relations instead of the whole
+              // table. Bounded by construction: distinct matched keys ≤
+              // source keys, and the source is the broadcast-small side
+              // of every MERGE. Collected via the target-side values
+              // (== the source keys wherever a match fired).
+              //
+              // The keys are deduplicated GLOBALLY before they reach the
+              // driver (r18, advisor: the r17 shape shipped one
+              // collect_set PER __dv_s group, so a key matching in many
+              // segments reached the driver once per segment — up to
+              // |source| × |segments| rows). The per-segment aggregate
+              // is persisted (it is segments-sized), the counts collect
+              // WITHOUT the key sets, and one distributed
+              // explode+distinct over the cached rows ships each key
+              // exactly once.
+              val cntAggs = Seq(
+                count(lit(1)).as("__c0"),
+                coalesce(sum(when(inIdx(col("__mc"), updIdx), 1L)
+                  .otherwise(0L)), lit(0L)).as("__cu"),
+                coalesce(sum(when(inIdx(col("__mc"), delIdx), 1L)
+                  .otherwise(0L)), lit(0L)).as("__cd")) ++
+                checks.zipWithIndex.map { case ((_, sql), j) =>
+                  coalesce(sum(when(inIdx(col("__mc"), updIdx) &&
+                    !coalesce(expr(sql), lit(false)), 1L)
+                    .otherwise(0L)), lit(0L)).as(s"__ckc$j") } :+
+                collect_set(when(col("__isM"), col("__k"))).as("__mk")
+              val perSegAgg = post.groupBy(col("__dv_s"))
+                .agg(cntAggs.head, cntAggs.tail: _*).persist()
+              // FUSED CENSUS COLLECT (r19): the per-segment counts, the
+              // globally-distinct matched keys, and (when deferred) the
+              // source dup verdict ride ONE action as a tagged union
+              // over the persisted aggregate — the r18 shape paid two
+              // collects here plus a standalone gate. Column positions
+              // in the tag-0 rows are unchanged (union-appended columns
+              // land AFTER the census columns), so every downstream
+              // reader keeps its index. All three verdicts are still
+              // judged BEFORE any write.
+              val perSeg = try {
+                import org.apache.spark.sql.functions.explode
+                val countRows = perSegAgg.drop("__mk")
+                  .withColumn("__tag", lit(0))
+                val keyRows = perSegAgg
+                  .select(explode(col("__mk")).as("__k")).distinct()
+                  .withColumn("__tag", lit(1))
+                val branches = Seq(countRows, keyRows) ++
+                  (if (deferDup)
+                     Seq(dupRollup(withRange = false)
+                       .withColumn("__tag", lit(2)))
+                   else Nil)
+                val all = branches
+                  .reduce(_.unionByName(_, allowMissingColumns = true))
+                  .collect()
+                def tag(r: Row) = r.getInt(r.fieldIndex("__tag"))
+                if (deferDup) {
+                  val d = all.find(tag(_) == 2).get
+                  requireUnique(d.get(d.fieldIndex("__dup")))
+                }
+                matchedKeys = Some(all.filter(tag(_) == 1).toSeq
+                  .map(r => r.getStruct(r.fieldIndex("__k"))))
+                all.filter(tag(_) == 0)
+                  .map(r => r.getString(0) -> r).toMap
+              } finally perSegAgg.unpersist()
+              val fires = perSeg.map { case (seg, r) =>
+                seg -> Fires(r.getLong(1), r.getLong(2), r.getLong(3)) }
+              val touched = scanSegs.filter { case (seg, _) =>
+                fires.get(seg).exists(f => f.upd > 0L || f.del > 0L) }
+              if (touched.nonEmpty) {
+                // CHECK gate over the WHOLE statement, before any write
+                val bad = checks.zipWithIndex.map { case ((n, _), j) =>
+                  n -> perSeg.valuesIterator.map(_.getLong(j + 4)).sum }
+                  .filter(_._2 > 0L)
+                require(bad.isEmpty,
+                  s"MERGE into $outDir would write rows violating " +
+                    "expectation(s): " +
+                    bad.map { case (n, c) => s"$n ($c rows)" }
+                      .mkString(", "))
+                updated = touched.map(t => fires(t._1).upd).sum
+                deleted = touched.map(t => fires(t._1).del).sum
+                // OVERLAPPED WRITE PASSES (r19, guide §2.6): the touched-
+                // segment writer's CDC images, merge-on-read stages and
+                // copy-on-write rewrites are independent of the INSERT
+                // pass (both sides read only the census result + cached
+                // source and write disjoint directories), so they run on
+                // a driver thread while the insert's observed write
+                // proceeds; the insert tail Awaits this future BEFORE any
+                // shared bookkeeping. The statement-wide CHECK gate above
+                // already ran on the driver thread, before ANY write on
+                // either side.
+                touchedWork = Some(scala.concurrent.Future {
+                  writeTouched(spark, outDir, m, touched, fires,
+                    ss => stagedOf(readSegmentsWithPos(spark, outDir, m, ss))
+                      .withColumn("__act",
+                        when(inIdx(col("__mc"), updIdx), lit(ActUpdate))
+                          .when(inIdx(col("__mc"), delIdx), lit(ActDelete))
+                          .otherwise(lit(ActKeep))),
+                    targetCols.map(c => col(s"t.$c").as(c)),
+                    targetCols.map(newVal), assigned, "seg_g", nonce,
+                    dvMaxFraction, if (cdc) Some(cdcSeg) else None)
+                }(scala.concurrent.ExecutionContext.global))
+              }
             }
-            ins = SegmentEdit(added = Seq(insSeg),
-              addedRows = Map(insSeg -> inserted),
-              addedStats = if (tracked.nonEmpty) insStats else Map.empty,
-              cdcSegs = if (cdc) Seq(cdcSeg) else Nil)
-            writeSegmentBlooms(spark, outDir, insSeg, m.bloomCols,
-              Some(inserted))
           }
-        }
-        // covers the notMatched-empty route (the insert block's own
-        // Await did not run); a second Await is a no-op
-        val e = touchedWork.fold(SegmentEdit())(f =>
-          scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration.Inf)) ++ ins
-        // a fires-nothing merge commits nothing — including the
-        // schema evolution (no rows would carry the new columns)
-        if (e.isNoop && inserted == 0L) return (m0.version, 0, 0L, 0L, 0L)
-        tryCommitEdit(outDir, m0, e, txn, newSchema = newSchema) match {
+          var inserted = 0L
+          var ins = SegmentEdit()
+          if (notMatched.nonEmpty) {
+            // insert candidates = source rows with no target match. When
+            // a census pass ran it already observed every matched key
+            // (r17), so anti-join the source against THAT driver-bounded
+            // set — broadcast-small × broadcast-small — instead of
+            // re-scanning every segment's key column: one full-corpus
+            // pass per MERGE gone, and the insert census's Catalyst plan
+            // collapses to two local relations (the per-action plan
+            // floor this query's QueryProbe profile is made of).
+            // NULL-keyed source rows behave identically on both routes:
+            // NULL never equals, so they stay insert candidates.
+            val anti = matchedKeys match {
+              case Some(Nil) => src.as("s")
+              case Some(mk) =>
+                val keySchema = org.apache.spark.sql.types.StructType(
+                  keys.map(k => schema(schema.fieldIndex(k))))
+                val mkDf = spark.createDataFrame(
+                  new java.util.ArrayList[Row](mk.asJava), keySchema)
+                src.join(broadcast(mkDf), keys, "left_anti").as("s")
+              case None => src.join(
+                readSegments(spark, outDir, m, m.segs)
+                  .select(keys.map(col).toSeq: _*),
+                keys, "left_anti").as("s")
+            }
+            val insWhens = notMatched.zipWithIndex.map { case (cl, i) =>
+              (condOf(cl.cond), i) }
+            val insIdx = insWhens.tail.foldLeft(
+              when(insWhens.head._1, lit(insWhens.head._2))) {
+              case (acc, (c, i)) => acc.when(c, lit(i))
+            }.otherwise(lit(-1))
+            def insVal(c: String): org.apache.spark.sql.Column = {
+              val f = schema(c)
+              notMatched.zipWithIndex.foldRight(
+                lit(null).cast(f.dataType): org.apache.spark.sql.Column) {
+                case ((MergeClause.Insert(_, values), i), els) =>
+                  val v = values.map(_.toMap.get(c)
+                    .map(expr).getOrElse(lit(null).cast(f.dataType)))
+                    .getOrElse(col(s"s.$c"))
+                  when(col("__mc") === i, v).otherwise(els)
+              }.cast(f.dataType).as(c)
+            }
+            def fired = anti.withColumn("__mc", insIdx)
+              .filter(col("__mc") =!= -1)
+            // FUSED count + CHECK gate + write + stats (r18): the
+            // insert post-image previously paid one aggregate action
+            // (count + per-check counts), one write, and one stats
+            // re-read — three plans over the same anti-join. The
+            // observed write is ONE action; a violating statement
+            // deletes the never-manifest-visible directory and refuses
+            // with the same per-check counts, and the CDC insert images
+            // re-read the just-written small segment instead of
+            // re-running the anti-join.
+            val insPost = fired.select(col("__mc") +:
+              targetCols.map(c => insVal(c)): _*)
+            val insSeg = f"seg_g${m.version + 1}%010d_ins_$nonce"
+            // runs WHILE the touched-segment future stages its rewrites;
+            // awaited before any shared bookkeeping or a gate refusal
+            val insTry = scala.util.Try(writeSegmentObserved(spark, outDir,
+              m, insPost.drop("__mc"), insSeg,
+              Some(s"MERGE into $outDir would insert rows violating " +
+                "expectation(s)")))
+            insTry.failed.foreach { e =>
+              // a refused (or failed) insert: the touched-segment writer
+              // may already have moved its outputs to final names —
+              // settle it, delete every never-committed output, rethrow
+              // (a writer that failed itself leaves vacuum orphans)
+              touchedWork.foreach(f => scala.concurrent.Await.ready(
+                f, scala.concurrent.duration.Duration.Inf))
+              val done = touchedWork.flatMap(_.value).flatMap(_.toOption)
+                .getOrElse(SegmentEdit())
+              val orphans = (done.added :+ cdcSeg).map(s => s"$outDir/$s") ++
+                done.dvSets.values.map(r => s"$outDir/_dv/${r.file}")
+              orphans.foreach(p => org.apache.commons.io.FileUtils
+                .deleteQuietly(new java.io.File(p)))
+              throw e
+            }
+            // the writer's CDC images land in the same cdc segment as the
+            // insert images below: settle it before appending
+            touchedWork.foreach(f => scala.concurrent.Await.result(
+              f, scala.concurrent.duration.Duration.Inf))
+            val (insStats, insN) = insTry.get
+            inserted = insN
+            if (inserted == 0L)
+              org.apache.commons.io.FileUtils.deleteQuietly(
+                new java.io.File(s"$outDir/$insSeg"))
+            else {
+              if (cdc) {
+                reader(spark, outDir, m).parquet(s"$outDir/$insSeg")
+                  .withColumn("_change_type", lit("insert"))
+                  .write.mode("append").parquet(s"$outDir/$cdcSeg")
+              }
+              ins = SegmentEdit(added = Seq(insSeg),
+                addedRows = Map(insSeg -> inserted),
+                addedStats = if (tracked.nonEmpty) insStats else Map.empty,
+                cdcSegs = if (cdc) Seq(cdcSeg) else Nil)
+              writeSegmentBlooms(spark, outDir, insSeg, m.bloomCols,
+                Some(inserted))
+            }
+          }
+          // covers the notMatched-empty route (the insert block's own
+          // Await did not run); a second Await is a no-op
+          val e = touchedWork.fold(SegmentEdit())(f =>
+            scala.concurrent.Await.result(
+              f, scala.concurrent.duration.Duration.Inf)) ++ ins
+          // a fires-nothing merge commits nothing — including the
+          // schema evolution (no rows would carry the new columns)
+          if (e.isNoop && inserted == 0L) Some((m0.version, 0, 0L, 0L, 0L))
           // a segment whose every row fired DELETE counts as rewritten
           // (to zero rows) in the MERGE receipt
-          case Some(v) => return (v, e.rewritten + e.dropped, updated,
-            deleted, inserted)
-          case None => // true conflict — re-plan against the new tip
+          else tryCommitEdit(outDir, m0, e, txn, newSchema = newSchema)
+            .map(v => (v, e.rewritten + e.dropped, updated, deleted, inserted))
+        } finally {
+          // settle the touched-segment future on EVERY exit (Await.ready
+          // waits without rethrowing — the normal path's Await.result
+          // already propagated its failure): never leave its staged
+          // writes running detached against a source we are about to
+          // unpersist
+          touchedWork.foreach(f => scala.concurrent.Await.ready(
+            f, scala.concurrent.duration.Duration.Inf))
+          src.unpersist()
         }
-      } finally {
-        // settle the touched-segment future on EVERY exit (Await.ready
-        // waits without rethrowing — the normal path's Await.result
-        // already propagated its failure): never leave its staged
-        // writes running detached against a source we are about to
-        // unpersist
-        touchedWork.foreach(f => scala.concurrent.Await.ready(
-          f, scala.concurrent.duration.Duration.Inf))
-        src.unpersist()
       }
     }
-    sys.error(s"merge at $outDir: $dmlMaxAttempts consecutive true " +
-      "conflicts (concurrent writers rewriting the same segments) — " +
-      "coordinate the writers or retry later")
   }
 
   /** Start the ingest-with-maintenance stream. Every `compactEvery`
@@ -5701,27 +5669,24 @@ object LakeSink {
             Some(s"ingest batch $batchId to $outDir violates expectation(s)"),
             statsCols.map(mW.physicalOf))
           writeSegmentBlooms(spark, outDir, seg, mW.bloomCols, Some(rows))
-          // ingest commit loop: retry on version race
-          var done = false
-          while (!done) {
-            val m = readManifest(outDir)
-            done =
-              if (m.segs.contains(seg)) true
-              else if (batchId <= m.maxB) {
-                // another writer ingested this batch meanwhile:
-                // re-adding would duplicate its rows — drop the orphan
-                org.apache.commons.io.FileUtils.deleteQuietly(
-                  new java.io.File(s"$outDir/$seg"))
-                true
-              } else commitEditRecord(outDir, m,
-                // copy, not positional construction: cumulative state
-                // (dv, schema, txns) rides through; per-version
-                // annotations reset (see addExpectation's note)
-                m.copy(version = m.version + 1, maxB = batchId,
-                  segs = m.segs :+ seg, stats = m.stats ++ bstats,
-                  segRows = m.segRows + (seg -> rows),
-                  cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true),
-                Set.empty, Seq(seg), bstats)
+          // a lost CAS re-reads the tip and commits again
+          commitLoop("ingest", outDir) { (m, _) =>
+            if (m.segs.contains(seg)) Some(())
+            else if (batchId <= m.maxB) {
+              // another writer ingested this batch meanwhile:
+              // re-adding would duplicate its rows — drop the orphan
+              org.apache.commons.io.FileUtils.deleteQuietly(
+                new java.io.File(s"$outDir/$seg"))
+              Some(())
+            } else Option.when(commitEditRecord(outDir, m,
+              // copy, not positional construction: cumulative state
+              // (dv, schema, txns) rides through; per-version
+              // annotations reset (see addExpectation's note)
+              m.copy(version = m.version + 1, maxB = batchId,
+                segs = m.segs :+ seg, stats = m.stats ++ bstats,
+                segRows = m.segRows + (seg -> rows),
+                cdcSegs = Nil, cdcDropSegs = Nil, dataChange = true),
+              Set.empty, Seq(seg), bstats))(())
           }
         }
         if (batchId % compactEvery == (compactEvery - 1)) {
@@ -5736,23 +5701,19 @@ object LakeSink {
               cseg, None, statsCols.map(m.physicalOf))
             writeSegmentBlooms(spark, outDir, cseg, m.bloomCols, Some(crows))
             beforeMaintenanceCommit(batchId)
-            if (commitEditRecord(outDir, m,
-                m.copy(version = m.version + 1,
-                  segs = m.segs.filterNot(bsegs.contains) :+ cseg,
-                  stats = (m.stats -- bsegs) ++ cstats,
-                  segRows = m.segRows + (cseg -> crows),
-                  cdcSegs = Nil, cdcDropSegs = Nil, dataChange = false,
-                  dv = m.dv -- bsegs),
-                bsegs.toSet, Seq(cseg), cstats)) {
-              // now-orphaned inputs: invisible to every reader; removal
-              // is best-effort hygiene, crash-safe to skip
-              bsegs.foreach { s =>
-                org.apache.commons.io.FileUtils.deleteQuietly(
-                  new java.io.File(s"$outDir/$s"))
-              }
-            }
-            // commit=false ⇒ someone already advanced v (replay race):
-            // the segment stays orphaned and harmless
+            // The inputs stay on disk, so every earlier version keeps
+            // time-traveling until vacuum, as `compact` leaves its own.
+            // false ⇒ someone already advanced v (replay race): the
+            // compacted segment stays a harmless orphan for vacuum.
+            commitEditRecord(outDir, m,
+              m.copy(version = m.version + 1,
+                segs = m.segs.filterNot(bsegs.contains) :+ cseg,
+                stats = (m.stats -- bsegs) ++ cstats,
+                segRows = m.segRows + (cseg -> crows),
+                cdcSegs = Nil, cdcDropSegs = Nil, dataChange = false,
+                dv = m.dv -- bsegs),
+              bsegs.toSet, Seq(cseg), cstats)
+            ()
           }
         }
       }

@@ -108,18 +108,25 @@ class LakeImportSpec extends AnyFunSuite with SparkFixture {
     val (_, rw, _, nDel) = LakeSink.deleteWhere(spark, lake,
       col("id") < 2L, dvMaxFraction = 0.5)
     assert(rw === 0 && nDel === 2L)
-    var jobs = 0
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
     }
+    // drain the async listener bus before and after: the delete's own
+    // queued job events must not count, and a late delivery must not
+    // let the count read low
+    org.apache.spark.graft.ListenerBridge
+      .waitUntilListenerBusEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val det = LakeSink.tableDetail(spark, lake)
       val r = det.select("version", "num_segments", "num_rows",
         "num_dv_segments", "dv_rows").head()
-      Thread.sleep(200) // listener events post asynchronously
+      org.apache.spark.graft.ListenerBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext)
       assert(r.getLong(0) === 2L)
       assert(r.getLong(1) === 1L)
       assert(r.getLong(2) === rows.size.toLong - 2L)
@@ -127,8 +134,8 @@ class LakeImportSpec extends AnyFunSuite with SparkFixture {
       // the head() over a 1-row local relation may cost one trivial
       // job depending on plan; the FOOTER/manifest reads must not —
       // allow at most the collect itself
-      assert(jobs <= 1, s"DESCRIBE DETAIL ran $jobs jobs — it must " +
-        "not scan data")
+      assert(jobs.get <= 1,
+        s"DESCRIBE DETAIL ran ${jobs.get} jobs — it must not scan data")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

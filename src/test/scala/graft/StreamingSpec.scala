@@ -573,6 +573,43 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(LakeSink.readTable(spark, out).count() == 1)
   }
 
+  test("compacting lake sink: every version time-travels until vacuum " +
+      "removes the compacted inputs") {
+    import graft.streaming.LakeSink
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val out = java.nio.file.Files.createTempDirectory("graft_lake_tt").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_lake_ckpt").toString
+    val input = MemoryStream[Event]
+    val q = LakeSink.startCompactingIngest(input.toDF(), out, ckpt,
+      compactEvery = 4, targetFiles = 2)
+    val batches = (0 until 16).map(i =>
+      Seq(ev(f"2024-01-02 10:$i%02d:00", user = i.toLong),
+        ev(f"2024-01-02 10:$i%02d:30", user = i.toLong)))
+    try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    val ids = batches.flatten.map(_.event_id)
+    // one ingest commit per batch, one compaction commit after every
+    // fourth: 20 versions, each a prefix of the ingested rows
+    val rowsAt = (0 until 16).flatMap { b =>
+      val n = 2 * (b + 1)
+      if (b % 4 == 3) Seq(n, n) else Seq(n)
+    }
+    assert(LakeSink.readManifest(out).version === 20L)
+    rowsAt.zipWithIndex.foreach { case (n, i) =>
+      val got = LakeSink.readTableAsOf(spark, out, i + 1L)
+        .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(got === ids.take(n).sorted, s"v${i + 1}")
+    }
+    // vacuum to the tip: the compacted b-segments go, the tip still reads
+    LakeSink.vacuum(out, retainVersions = 1)
+    val left = new java.io.File(out).list().filter(_.startsWith("seg_b"))
+    assert(left.isEmpty, left.mkString(", "))
+    assert(LakeSink.readTable(spark, out)
+      .select("event_id").collect().map(_.getLong(0)).sorted.toSeq ===
+      ids.sorted)
+  }
+
   test("streaming ANN serve: each query batch probes the persisted IVF " +
       "index and matches brute force exactly") {
     import graft.llm.SimilarityApi
